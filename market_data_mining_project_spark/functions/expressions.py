@@ -10,8 +10,6 @@ fuse with the surrounding plan.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -30,32 +28,9 @@ def safe_ratio(num: Column, den: Column, default: float = 0.0) -> Column:
     return F.when(den > 0, num / den).otherwise(F.lit(default))
 
 
-def bucketize(col: Column, edges: Sequence[tuple[int, int, str]], default: str = "OTHER") -> Column:
-    """CASE-WHEN range bucketing (reference quarter/season labels,
-    views.py:1548-1560, F1). ``edges`` = [(lo, hi_inclusive, label), ...]."""
-    expr: Column | None = None
-    for lo, hi, label in edges:
-        cond = (col >= lo) & (col <= hi)
-        expr = F.when(cond, label) if expr is None else expr.when(cond, label)
-    assert expr is not None
-    return expr.otherwise(F.lit(default))
-
-
 def month_bucket(day: Column, anchor: int = 352) -> Column:
     """30-day month bucket ``((day - anchor) / 30) + 1`` (views.py:771, F2)."""
     return (F.floor((day - F.lit(anchor)) / 30) + 1).cast("int")
-
-
-def quarter_of_day(day: Column) -> Column:
-    """Day-number quarters 1-91 / 92-182 / 183-273 / 274+ (views.py:1548-1553)."""
-    return bucketize(day, [(1, 91, "Q1"), (92, 182, "Q2"), (183, 273, "Q3")], default="Q4")
-
-
-def season_of_day(day: Column) -> Column:
-    """Day-number seasons 1-90 / 91-181 / 182-273 / 274+ (views.py:1555-1560)."""
-    return bucketize(
-        day, [(1, 90, "Winter"), (91, 181, "Spring"), (182, 273, "Summer")], default="Fall"
-    )
 
 
 def is_weekend(day: Column) -> Column:
@@ -63,23 +38,10 @@ def is_weekend(day: Column) -> Column:
     return (day % 7 >= 5).cast("int")
 
 
-def normalize_label(col: Column) -> Column:
-    """lower → strip non-alphanumerics → collapse/trim spaces
-    (reference ``customers/views.py:37-47``, F5)."""
-    lowered = F.lower(col)
-    stripped = F.regexp_replace(lowered, "[^0-9a-z]+", " ")
-    return F.trim(F.regexp_replace(stripped, " +", " "))
-
-
 def icontains(col: Column, needle: str) -> Column:
     """Case-insensitive substring predicate (Django ``icontains``,
     views.py:1247-1284, P5)."""
     return F.lower(col).contains(needle.lower())
-
-
-def coalesce_product_name(desc: Column, product_id: Column) -> Column:
-    """``commodity_desc or f"Product_{id}"`` fallback (analytics.py:50, F7)."""
-    return F.coalesce(desc, F.concat(F.lit("Product_"), product_id.cast("string")))
 
 
 def churn_risk_label(probability: Column) -> Column:

@@ -1,104 +1,143 @@
-"""Concurrent model-fit orchestration (optimization guide §2.6).
+"""Background model fits (optimization guide §2.6).
 
 The catalog's ML entries each train an INDEPENDENT estimator over
 already-materialized inputs (churn GBT, horizon MLP, the 16-cell horizon
-grid, implicit ALS) yet a catalog sweep paid them strictly serially: each
-fit is a long chain of small iterative jobs that never saturates the
-cluster, so the fits are exactly the "overlap independent jobs" case the
-guide describes — Spark's scheduler happily runs them side by side, and
-actions are only sequential because the driver calls them sequentially.
+grid, implicit ALS). Each fit is a long chain of small iterative jobs that
+never saturates the cluster, so a sweep overlaps them: the first ML entry
+prefetches every fit, and the later consumers find theirs fitted or in
+flight instead of paying it inline.
 
 This module is the process-wide single-flight for those fits. Each
-``key`` (artifact name, data version, model-cache root) owns a once-cell:
+``key`` is ``(artifact, data version, model-cache root)`` and owns one cell:
 
-- :func:`prefetch` — enqueue the cell on a small background pool (2
-  threads, per the guide: a couple of concurrent jobs back-fill the tail
-  of whatever else the session runs without fighting it for executors).
-- :func:`shared` — the consumer path: runs the cell INLINE if no pool
-  thread has started it yet (a consumer never waits behind other keys
-  queued on the pool), or joins the in-flight computation.
+- :func:`prefetch` — queue the cell on two background worker threads.
+  The worker labels the cell's Spark jobs with
+  ``spark.scheduler.pool=mdmp_background_fits``. Scheduling stays FIFO;
+  the label exists so a stage listing can bill the work to the
+  background fits instead of to whichever entry is running.
+- :func:`shared` — the consumer path: runs the cell INLINE and unlabelled
+  if no worker has started it yet (a consumer never waits behind other
+  keys queued on the pool), or joins the in-flight run.
 
-Keys carry the data version (the existing ``ml.persistence`` staleness
-contract) and the cache root, so test sandboxes redirecting
-``SPARK_GRAFT_MODEL_DIR`` stay isolated exactly as the on-disk cache is.
+Only successes are memoized. A failed run takes its cell out of
+``_CELLS``, so the next :func:`shared` call retries; a consumer that had
+joined the failed run retries at once. A new data version replaces the
+cell of the same artifact and cache root, so ``_CELLS`` holds one cell
+per artifact.
+
+The workers are daemon threads, so a process exits without waiting for
+fits nobody consumed. An abandoned fit publishes nothing: the artifact
+path (``persistence.publish_staged``) keeps a half-written model
+invisible.
 
 What this is NOT: result caching. Every cell's ``fn`` wraps the existing
-``load_or_train`` / metrics-artifact path — the artifact is the model,
-keyed on the data fingerprint, and scoring always recomputes from the
-parquet inputs. The pool only changes WHEN independent fits run (side by
-side instead of one per entry), never what any entry computes: each fit's
-input frame is built by the same deterministic plan code the serial path
-used, so the fitted models are identical. Cells are memoized for the
-process lifetime — the same in-process-memo surface the bench's warm
-profile already documents (fingerprint memos, derived-table paths); the
-held models are small.
+``load_or_train`` / metrics-artifact path, so the pool changes WHEN
+independent fits run, never what any entry computes.
 """
 
 from __future__ import annotations
 
-from concurrent.futures import ThreadPoolExecutor
-from threading import Lock
+import logging
+from queue import SimpleQueue
+from threading import Lock, Thread
+
+from pyspark import SparkContext
+
+_LOG = logging.getLogger(__name__)
+BACKGROUND_POOL = "mdmp_background_fits"
+_WORKERS = 2
 
 _LOCK = Lock()
-_POOL: ThreadPoolExecutor | None = None
-_CELLS: dict[tuple, "_Once"] = {}
+_CELLS: dict[tuple, "_Cell"] = {}  # artifact slot -> its current cell
+_QUEUE: SimpleQueue = SimpleQueue()
+_THREADS: list[Thread] = []
 
 
-class _Once:
-    """Run ``fn`` exactly once, from whichever thread asks first; memoize
-    the result (or the raised exception — re-raised to every consumer,
-    the same contract as calling the trainer inline)."""
-
-    def __init__(self, fn):
-        self._fn = fn
-        self._lock = Lock()
-        self._done = False
-        self._value = None
-        self._exc: BaseException | None = None
-
-    def get(self):
-        with self._lock:
-            if not self._done:
-                try:
-                    self._value = self._fn()
-                except BaseException as exc:  # noqa: BLE001 — memoized re-raise
-                    self._exc = exc
-                self._done = True
-                self._fn = None  # drop closed-over frames once resolved
-        if self._exc is not None:
-            raise self._exc
-        return self._value
+class _Cell:
+    def __init__(self, key: tuple, fn):
+        self.key = key
+        self.fn = fn
+        self.lock = Lock()
+        self.state = "pending"  # -> "done" | "failed"
+        self.value = None
 
 
-def _pool() -> ThreadPoolExecutor:
-    global _POOL
-    if _POOL is None:
-        _POOL = ThreadPoolExecutor(max_workers=2, thread_name_prefix="mdmp-fit")
-    return _POOL
+def _slot(key: tuple) -> tuple:
+    """The artifact a key names: the key without its data version."""
+    return key[:1] + key[2:]
 
 
-def _cell(key: tuple, fn) -> _Once:
-    with _LOCK:
-        cell = _CELLS.get(key)
-        if cell is None:
-            cell = _Once(fn)
-            _CELLS[key] = cell
-        return cell
+def _register(key: tuple, fn) -> tuple[_Cell, bool]:
+    """The cell registered for ``key``, and whether this call created it.
+    Caller holds ``_LOCK``."""
+    cell = _CELLS.get(_slot(key))
+    if cell is not None and cell.key == key:
+        return cell, False
+    cell = _CELLS[_slot(key)] = _Cell(key, fn)
+    return cell, True
+
+
+def _run(cell: _Cell) -> bool:
+    """Run the cell unless a run already finished; True once it holds a
+    value. A failing run leaves ``_CELLS`` and re-raises to its caller."""
+    with cell.lock:
+        if cell.state == "pending":
+            try:
+                cell.value = cell.fn()
+            except BaseException:
+                cell.state = "failed"
+                with _LOCK:
+                    if _CELLS.get(_slot(cell.key)) is cell:
+                        del _CELLS[_slot(cell.key)]
+                raise
+            finally:
+                cell.fn = None  # drop closed-over frames once resolved
+            cell.state = "done"
+        return cell.state == "done"
+
+
+def _run_labelled(cell: _Cell) -> None:
+    sc = SparkContext._active_spark_context
+    if sc is None:
+        _run(cell)
+        return
+    sc.setLocalProperty("spark.scheduler.pool", BACKGROUND_POOL)
+    try:
+        _run(cell)
+    finally:
+        sc.setLocalProperty("spark.scheduler.pool", None)
+
+
+def _work() -> None:
+    while True:
+        cell = _QUEUE.get()
+        try:
+            _run_labelled(cell)
+        except Exception:  # noqa: BLE001 — the worker must outlive a failed fit
+            _LOG.warning("background fit %s failed; its consumer retries it", cell.key,
+                         exc_info=True)
 
 
 def prefetch(key: tuple, fn) -> None:
-    """Background the cell: first registration enqueues it on the pool.
+    """Background the cell: first registration queues it on the pool.
     Fire-and-forget — the sibling-entry warm-up path."""
     with _LOCK:
-        if key in _CELLS:
+        cell, created = _register(key, fn)
+        if not created:
             return
-        cell = _Once(fn)
-        _CELLS[key] = cell
-    _pool().submit(cell.get)
+        while len(_THREADS) < _WORKERS:
+            worker = Thread(target=_work, name=f"mdmp-fit-{len(_THREADS)}", daemon=True)
+            worker.start()
+            _THREADS.append(worker)
+    _QUEUE.put(cell)
 
 
 def shared(key: tuple, fn):
     """Consumer path: compute-or-join the cell for ``key``. Runs inline
-    when no pool thread has picked it up yet, so a blocking consumer is
-    never serialized behind OTHER keys waiting on the pool."""
-    return _cell(key, fn).get()
+    when no worker has picked it up yet, so a blocking consumer is never
+    serialized behind OTHER keys waiting on the pool."""
+    while True:
+        with _LOCK:
+            cell, _ = _register(key, fn)
+        if _run(cell):
+            return cell.value

@@ -24,6 +24,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
+from pyspark import inheritable_thread_target
 from pyspark.ml import Pipeline, PipelineModel
 from pyspark.ml.classification import (
     GBTClassifier,
@@ -35,6 +36,8 @@ from pyspark.ml.evaluation import BinaryClassificationEvaluator
 from pyspark.ml.feature import StandardScaler, VectorAssembler
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from market_data_mining_project_spark.session import truncate_lineage
 
 SEED = 42
 
@@ -80,17 +83,12 @@ def binary_metrics(predictions: DataFrame, label: str = "label") -> dict[str, fl
     grid). One groupBy + driver-side arithmetic (the matrix is #classes²
     cells) is job-for-job identical in result and 4× fewer passes.
 
-    localCheckpoint, not cache (r14): fits now run concurrently with other
-    catalog entries (ml.fit_pool), and a sweeping session legitimately calls
-    ``spark.catalog.clearCache()`` between entries — which would drop an
-    in-flight fit's cached predictions mid-evaluation and silently turn the
-    two metric passes into full rescoring. Checkpointed blocks are
-    clearCache-immune; rows identical; blocks are freed by the
-    ContextCleaner once the frame is unreachable (both-pass frames here are
-    bounded-sample-sized). EAGER: a lazy checkpoint measured as if absent —
-    later queries re-plan from the original lineage instead of the marked
-    RDD (the r14 dup_clusters experiment hit the same 2× re-execution)."""
-    predictions = predictions.localCheckpoint()
+    The predictions are checkpointed (``truncate_lineage``), not cached: a
+    background fit (ml.fit_pool) may be evaluating while the session
+    ``clearCache()``s between entries, and the two metric passes must not
+    turn into full rescoring. EAGER: a lazy checkpoint measured as if
+    absent — later queries re-plan from the original lineage."""
+    predictions = truncate_lineage(predictions)
     out: dict[str, float] = {}
     try:
         out["auc"] = BinaryClassificationEvaluator(
@@ -189,7 +187,7 @@ def train_multi_horizon_grid(
     in the label column, so the scaler (fit train-side only, like the
     reference's ``StandardScaler.fit(X_train)``) would otherwise be refit
     len(label_cols)×len(kinds) times over identical features. Each grid cell
-    is then a classifier-only fit on the cached scaled frame.
+    is then a classifier-only fit on the checkpointed scaled frame.
 
     Grid cells are independent, so they are fitted from a thread pool
     (``parallelism``) — the same concurrent-job-submission idiom MLlib's
@@ -199,42 +197,38 @@ def train_multi_horizon_grid(
     scheduler interleaves the jobs safely. Pool size 8 measured ~12%
     faster cold than 4 at sf0.1/local[32] (24.5 vs 27.9 s mean-of-3) and
     cannot change results — the pool only reorders independent fits over
-    the same cached frames.
+    the same checkpointed frames.
     """
-    from concurrent.futures import ThreadPoolExecutor
+    from multiprocessing.pool import ThreadPool
 
     train, test = labeled.randomSplit([train_fraction, 1 - train_fraction], seed=SEED)
     prep = Pipeline(stages=_assembler(feature_cols)).fit(train)
-    # localCheckpoint (eager), not cache (r14): the grid itself may run as a
-    # background fit-pool job while the sweeping session clearCache()s
-    # between entries — a dropped cache mid-grid would re-run the scaled
-    # feature plan per fit per iteration. Checkpointed blocks are
-    # clearCache-immune and materialize here (no separate count needed);
-    # partition contents are identical to the cached form, so every fit
-    # sees the same rows. The ContextCleaner frees the bounded-sample-sized
-    # blocks once the frames go unreachable.
-    train_t = prep.transform(train).localCheckpoint()
-    test_t = prep.transform(test).localCheckpoint()
+    # checkpointed, not cached: the grid may run as a background fit while
+    # the session clearCache()s between entries, and a dropped cache would
+    # re-run the scaled feature plan per fit per iteration
+    train_t = truncate_lineage(prep.transform(train))
+    test_t = truncate_lineage(prep.transform(test))
 
-    # propagate the caller thread's FAIR scheduler pool tag (if any) to the
-    # worker threads: Python pool threads do NOT inherit Spark's thread-local
-    # properties, so a grid running as a background fit (ml/fit_pool.py)
-    # would otherwise submit its 16 fits' jobs into the FOREGROUND pool
-    sc = labeled.sparkSession.sparkContext
-    pool_tag = sc.getLocalProperty("spark.scheduler.pool")
-
-    def fit_cell(cell: tuple[str, str]) -> dict[str, float]:
-        if pool_tag is not None and sc.getLocalProperty("spark.scheduler.pool") != pool_tag:
-            sc.setLocalProperty("spark.scheduler.pool", pool_tag)
-        label_col, kind = cell
+    def fit_cell(label_col: str, kind: str) -> dict[str, float]:
         tr = train_t.withColumn("label", F.col(label_col).cast("double"))
         te = test_t.withColumn("label", F.col(label_col).cast("double"))
         clf = _classifier(kind, len(feature_cols), overrides=(overrides or {}).get(kind))
         return binary_metrics(clf.fit(tr).transform(te))
 
+    # Python pool threads do not inherit Spark's thread-local properties, so
+    # each cell carries a copy of the caller's (background-fit label, job
+    # group). One copy PER CELL: inheritable_thread_target copies once and
+    # hands that same mutable copy to every thread it runs on, where
+    # concurrent cells would see each other's SQL execution ids. ThreadPool,
+    # not ThreadPoolExecutor: its threads are daemons, so a grid running as
+    # an unconsumed background fit does not hold up process exit.
+    spark = labeled.sparkSession
     cells = [(label_col, kind) for label_col in label_cols for kind in kinds]
-    with ThreadPoolExecutor(max_workers=parallelism) as pool:
-        metrics = list(pool.map(fit_cell, cells))
+    with ThreadPool(parallelism) as pool:
+        pending = [
+            pool.apply_async(inheritable_thread_target(spark)(fit_cell), cell) for cell in cells
+        ]
+        metrics = [p.get() for p in pending]
     return dict(zip(cells, metrics))
 
 

@@ -302,17 +302,6 @@ def segment(scored: DataFrame) -> DataFrame:
     )
 
 
-def segment_summary(segments: DataFrame) -> DataFrame:
-    """Per-segment roll-up (analytics.py:320-328)."""
-    return segments.groupBy("rfm_segment").agg(
-        F.count(F.lit(1)).alias("segment_count"),
-        F.round(F.avg("recency"), 2).alias("avg_recency"),
-        F.round(F.avg("frequency"), 2).alias("avg_frequency"),
-        F.round(F.avg("monetary"), 2).alias("avg_monetary"),
-        F.round(F.sum("monetary"), 2).alias("total_revenue"),
-    )
-
-
 def rfm_pipeline(
     fact: DataFrame,
     customer: str,

@@ -20,6 +20,7 @@ from market_data_mining_project_spark.operators import churn as CHURN
 from market_data_mining_project_spark.operators import diff as DIFF
 from market_data_mining_project_spark.operators import recommend as REC
 from market_data_mining_project_spark.operators import rules as RULES
+from market_data_mining_project_spark.session import truncate_lineage
 from market_data_mining_project_spark.sources.tables import load_table
 
 _EPOCH = "1995-01-01"
@@ -1258,21 +1259,16 @@ def _horizon_mlp_trainer(spark: SparkSession, sf_dir: str):
     from market_data_mining_project_spark.operators.relational import stratified_sample
 
     def train():
-        # localCheckpoint, not cache: the fit may run as a background
-        # fit-pool job while the sweeping session clearCache()s between
-        # entries — a dropped cache would re-run the sample plan per LBFGS
-        # pass. Same partition contents as the cached form ⇒ identical
-        # randomSplit ⇒ identical model; blocks are freed by the
-        # ContextCleaner when the sample goes unreachable after the fit.
-        feats = (
+        # checkpointed, not cached: the sample must survive clearCache()
+        # while a background fit reads it, or every LBFGS pass re-runs the
+        # sample plan
+        feats = truncate_lineage(
             stratified_sample(
                 _horizon_features_mat(spark, sf_dir),
                 bucket=F.expr("day div 30"),
                 per_bucket=250,
                 order_key=F.md5(F.concat_ws("|", "o_custkey", "p_brand", "day")),
-            )
-            .coalesce(4)
-            .localCheckpoint()
+            ).coalesce(4)
         )
         return train_classifier(
             feats, HORIZON_FEATURE_COLS, "buy_90d", kind="neural_network",
@@ -1293,7 +1289,8 @@ def _fit_prefetch(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     the later consumers find their artifact fitted (or in flight) instead
     of paying it inline. Single-query sessions still compute exactly their
     own result — the extra fits land in the same load-or-train cache any
-    later consumer would have populated.
+    later consumer would have populated, or are abandoned if the process
+    exits first.
 
     Results are NOT cached across runs: each fn wraps the existing
     ``load_or_train`` / metrics-artifact contract (artifact = the model,
@@ -1306,53 +1303,21 @@ def _fit_prefetch(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     ``horizon_predictions``'s."""
     version = PERSIST.data_version_cached(sf_dir)
     root = PERSIST.model_cache_root()
-    bg = lambda fn: _background_pooled(spark, fn)  # noqa: E731
-    FITPOOL.prefetch(
-        ("als", version, root), bg(lambda: _als_build(spark, sf_dir, version))
-    )
+    FITPOOL.prefetch(("als", version, root), lambda: _als_build(spark, sf_dir, version))
     FITPOOL.prefetch(
         ("churn_gbt", version, root),
-        bg(
-            lambda: PERSIST.load_or_train(
-                "churn_gbt", version, _churn_trainer(spark, sf_dir)
-            )
-        ),
+        lambda: PERSIST.load_or_train("churn_gbt", version, _churn_trainer(spark, sf_dir)),
     )
     FITPOOL.prefetch(
         ("horizon_mlp_90d", version, root),
-        bg(
-            lambda: PERSIST.load_or_train(
-                "horizon_mlp_90d", version, _horizon_mlp_trainer(spark, sf_dir)
-            )
+        lambda: PERSIST.load_or_train(
+            "horizon_mlp_90d", version, _horizon_mlp_trainer(spark, sf_dir)
         ),
     )
     FITPOOL.prefetch(
-        ("horizon_grid_metrics", version, root),
-        bg(lambda: _grid_metrics_rows(spark, sf_dir)),
+        ("horizon_grid_metrics", version, root), lambda: _grid_metrics_rows(spark, sf_dir)
     )
     return version, root
-
-
-def _background_pooled(spark: SparkSession, fn):
-    """Run ``fn`` with this thread's Spark jobs tagged into the FAIR
-    scheduler's background-fits pool (session.py sets
-    spark.scheduler.mode=FAIR): without the tag, a background fit's
-    hundreds of tiny iterative jobs hold FIFO priority over every LATER
-    foreground action and the measured entry queues behind them. The
-    property is thread-local and restored afterwards — the single-flight
-    cell may execute on the FOREGROUND thread (the consumer-inline path),
-    whose later jobs must return to the default pool."""
-
-    def run():
-        sc = spark.sparkContext
-        prev = sc.getLocalProperty("spark.scheduler.pool")
-        sc.setLocalProperty("spark.scheduler.pool", "mdmp_background_fits")
-        try:
-            return fn()
-        finally:
-            sc.setLocalProperty("spark.scheduler.pool", prev)
-
-    return run
 
 
 def q_horizon_predictions(
@@ -1517,19 +1482,15 @@ def _grid_metrics_rows(spark: SparkSession, sf_dir: str) -> list:
     if PERSIST.has_cached_metrics_artifact("horizon_grid_metrics", grid_version):
         return PERSIST.load_metrics_artifact("horizon_grid_metrics", grid_version)["rows"]
 
-    feats = _horizon_features_mat(spark, sf_dir)
-    # localCheckpoint, not cache: clearCache-immune under the r14 concurrent
-    # fit pool (same rationale as _horizon_mlp_trainer); identical partition
-    # contents ⇒ identical randomSplit inside the grid
-    feats = (
+    # checkpointed, not cached: the sample must survive clearCache() while
+    # a background grid reads it (same as _horizon_mlp_trainer)
+    feats = truncate_lineage(
         stratified_sample(
-            feats,
+            _horizon_features_mat(spark, sf_dir),
             bucket=F.expr("day div 30"),
             per_bucket=150,
             order_key=F.md5(F.concat_ws("|", "o_custkey", "p_brand", "day")),
-        )
-        .coalesce(4)
-        .localCheckpoint()
+        ).coalesce(4)
     )
     label_cols = ("buy_30d", "buy_90d", "buy_180d", "buy_365d")
     # MLP/SVM iteration budgets halved from 15 (judge-suggested trim): on the
@@ -1826,24 +1787,19 @@ def _churn_feature_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame grows with the customer base, so a fixed coalesce(4) would cap a
     10^8-customer fit at 4-way parallelism.
 
-    localCheckpoint, not cache (r14): the GBT fit may run as a background
-    fit-pool job while the sweeping session clearCache()s between entries —
-    a dropped cache would re-run the 3-table join + window on EVERY
-    boosting iteration. Checkpointed blocks are clearCache-immune; the
-    partition contents (hence randomSplit's row assignment and the fitted
-    model) are identical to the cached form."""
+    Checkpointed, not cached: the frame must survive clearCache() while a
+    background GBT fit reads it, or every boosting iteration re-runs the
+    3-table join + window."""
     target = max(4, spark.sparkContext.defaultParallelism // 8)
-    return q_churn_features(spark, sf_dir).coalesce(target).localCheckpoint()
+    return truncate_lineage(q_churn_features(spark, sf_dir).coalesce(target))
 
 
-def _churn_trainer(spark: SparkSession, sf_dir: str, feats: DataFrame | None = None):
+def _churn_trainer(spark: SparkSession, sf_dir: str):
     """THE trainer behind the shared 'churn_gbt' artifact — one definition,
     because `churn_model_scores` and `churn_feature_importances` serve the
     same load_or_train key and the key encodes only the data version, not
     hyperparameters: two trainer copies drifting apart would silently serve
-    importances for a differently-configured model than the scores. Pass
-    ``feats`` (an already-cached feature frame the caller keeps using and
-    unpersists itself) to avoid a second feature build on the cold path.
+    importances for a differently-configured model than the scores.
 
     maxIter 30 (down from the default 60): measured AUC/F1 are flat from
     25-40 rounds at sf0.1, the AUC gate in tests/test_rules_ml.py holds at
@@ -1852,13 +1808,9 @@ def _churn_trainer(spark: SparkSession, sf_dir: str, feats: DataFrame | None = N
     from market_data_mining_project_spark.ml.pipelines import train_classifier
 
     def train():
-        # the feature frame is localCheckpointed (not cached): no unpersist
-        # needed — the ContextCleaner frees the per-customer-sized blocks
-        # once the frame goes unreachable
-        local = feats if feats is not None else _churn_feature_frame(spark, sf_dir)
         return train_classifier(
-            local, CHURN_FEATURE_COLS, "churned", kind="gradient_boost",
-            overrides={"maxIter": 30},
+            _churn_feature_frame(spark, sf_dir), CHURN_FEATURE_COLS, "churned",
+            kind="gradient_boost", overrides={"maxIter": 30},
         )
 
     return train
@@ -1874,22 +1826,17 @@ def _churn_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     from market_data_mining_project_spark.sources import materialize as MAT
 
     version, root = _fit_prefetch(spark, sf_dir)
-    live: dict[str, DataFrame] = {}
 
     def build() -> DataFrame:
         feats = _churn_feature_frame(spark, sf_dir)
-        live["feats"] = feats
         # load-or-train: a prior process's fit on the same data version is
         # reloaded instead of refit (reference ml_models.py:101-214 cache);
         # the trainer definition is shared with churn_feature_importances
         # (same artifact key ⇒ same hyperparameters, by construction) and
-        # the fit rides the shared pool cell — if a sibling entry already
-        # started it, join it; else fit inline reusing the scoring frame
+        # the fit rides the shared pool cell that _fit_prefetch registered
         model, _metrics, _cached = FITPOOL.shared(
             ("churn_gbt", version, root),
-            lambda: PERSIST.load_or_train(
-                "churn_gbt", version, _churn_trainer(spark, sf_dir, feats)
-            ),
+            lambda: PERSIST.load_or_train("churn_gbt", version, _churn_trainer(spark, sf_dir)),
         )
         # round BEFORE banding: the stored probability and the band must
         # agree at band boundaries (0.7500004 stores as 0.75 and must band
@@ -1906,15 +1853,10 @@ def _churn_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    out = MAT.derived_table(
+    return MAT.derived_table(
         spark, _CHURN_SCORES_PATHS, sf_dir, "churn_scores_", build,
         persist_version=PERSIST.data_version_cached(sf_dir),
     )
-    # the feature frame is localCheckpointed (clearCache-immune under the
-    # r14 concurrent fits); its blocks are freed by the ContextCleaner once
-    # `live` goes out of scope — no unpersist step
-    live.clear()
-    return out
 
 
 def q_churn_model_scores(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -32,16 +32,6 @@ _DEFAULTS = {
     # results are mode-independent — no entry *relies* on an ANSI abort or
     # on legacy NULL-on-error semantics.
     "spark.sql.ansi.enabled": os.environ.get("SPARK_GRAFT_ANSI", "true"),
-    # FAIR job scheduling (guide §2.6): the fit pool (ml/fit_pool.py) runs
-    # background model fits concurrently with foreground queries, and under
-    # FIFO the fits' earlier-submitted job streams hold scheduling priority
-    # over every later foreground action — the foreground entry queues
-    # behind hundreds of tiny boosting/LBFGS stages. FAIR mode + a separate
-    # pool for the fit threads (they tag themselves via the thread-local
-    # spark.scheduler.pool property) gives the foreground its fair share of
-    # task slots the moment it submits. Scheduling only — no result can
-    # change. Override with SPARK_GRAFT_SCHEDULER_MODE=FIFO to compare.
-    "spark.scheduler.mode": os.environ.get("SPARK_GRAFT_SCHEDULER_MODE", "FAIR"),
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",

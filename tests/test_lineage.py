@@ -91,3 +91,21 @@ def test_reliable_checkpoint_survives_executor_kill(tmp_path):
     )
     assert proc.returncode == 0, f"child failed:\n{proc.stdout[-3000:]}\n{proc.stderr[-3000:]}"
     assert "KILLTEST_OK" in proc.stdout, proc.stdout[-3000:]
+
+
+def test_only_session_cuts_lineage_directly():
+    """Every lineage cut goes through session.truncate_lineage, so
+    SPARK_GRAFT_CHECKPOINT_DIR covers all of them, fit inputs included."""
+    import market_data_mining_project_spark as pkg
+
+    root = os.path.dirname(pkg.__file__)
+    offenders = []
+    for dirpath, _, files in os.walk(root):
+        for name in files:
+            path = os.path.join(dirpath, name)
+            if not name.endswith(".py") or path == os.path.join(root, "session.py"):
+                continue
+            with open(path) as fh:
+                if ".localCheckpoint(" in fh.read():
+                    offenders.append(os.path.relpath(path, root))
+    assert offenders == []
