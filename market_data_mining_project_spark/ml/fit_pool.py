@@ -25,10 +25,10 @@ joined the failed run retries at once. A new data version replaces the
 cell of the same artifact and cache root, so ``_CELLS`` holds one cell
 per artifact.
 
-The workers are daemon threads, so a process exits without waiting for
-fits nobody consumed. An abandoned fit publishes nothing: the artifact
-path (``persistence.publish_staged``) keeps a half-written model
-invisible.
+The workers are the daemon threads of a ``multiprocessing.pool.ThreadPool``,
+so a process exits without waiting for fits nobody consumed. An abandoned
+fit publishes nothing: the artifact path (``persistence.publish_staged``)
+keeps a half-written model invisible.
 
 What this is NOT: result caching. Every cell's ``fn`` wraps the existing
 ``load_or_train`` / metrics-artifact path, so the pool changes WHEN
@@ -38,19 +38,17 @@ independent fits run, never what any entry computes.
 from __future__ import annotations
 
 import logging
-from queue import SimpleQueue
-from threading import Lock, Thread
+from multiprocessing.pool import ThreadPool
+from threading import Lock
 
 from pyspark import SparkContext
 
 _LOG = logging.getLogger(__name__)
 BACKGROUND_POOL = "mdmp_background_fits"
-_WORKERS = 2
 
 _LOCK = Lock()
 _CELLS: dict[tuple, "_Cell"] = {}  # artifact slot -> its current cell
-_QUEUE: SimpleQueue = SimpleQueue()
-_THREADS: list[Thread] = []
+_POOL: ThreadPool | None = None  # created on the first prefetch
 
 
 class _Cell:
@@ -108,28 +106,23 @@ def _run_labelled(cell: _Cell) -> None:
         sc.setLocalProperty("spark.scheduler.pool", None)
 
 
-def _work() -> None:
-    while True:
-        cell = _QUEUE.get()
-        try:
-            _run_labelled(cell)
-        except Exception:  # noqa: BLE001 — the worker must outlive a failed fit
-            _LOG.warning("background fit %s failed; its consumer retries it", cell.key,
-                         exc_info=True)
-
-
 def prefetch(key: tuple, fn) -> None:
     """Background the cell: first registration queues it on the pool.
     Fire-and-forget — the sibling-entry warm-up path."""
+    global _POOL
     with _LOCK:
         cell, created = _register(key, fn)
         if not created:
             return
-        while len(_THREADS) < _WORKERS:
-            worker = Thread(target=_work, name=f"mdmp-fit-{len(_THREADS)}", daemon=True)
-            worker.start()
-            _THREADS.append(worker)
-    _QUEUE.put(cell)
+        if _POOL is None:
+            _POOL = ThreadPool(2)
+    _POOL.apply_async(
+        _run_labelled,
+        (cell,),
+        error_callback=lambda exc: _LOG.warning(
+            "background fit %s failed; its consumer retries it", key, exc_info=exc
+        ),
+    )
 
 
 def shared(key: tuple, fn):
