@@ -1,8 +1,8 @@
-"""Per-round benchmark: times every catalog query at $SPARK_GRAFT_SF_DIR.
+"""Per-round benchmark: times the catalog (or named entries) at $SPARK_GRAFT_SF_DIR.
 
 Each query is materialized with a noop write (full execution, no driver
-collect) after one warm-up of the flagship query to exclude JVM/session
-startup from per-query numbers.
+collect) after one synthetic warm-up job (``_warmup``) to exclude
+JVM/session startup from per-query numbers.
 
 TWO passes with the cache state explicit, so round-over-round comparisons
 are like-for-like (the r4→r5 bench mixed a cold profile with an
@@ -32,19 +32,18 @@ Prints ONE JSON line, scalar totals at BOTH ends so either truncation
 direction of the driver's bounded tail keeps all three profile totals:
 ``{"metric": ..., "value": cold_total, "unit": "sec", "value_warm": ...,
    "cache_state": ..., "sf": ..., "queries": {...}, "queries_warm": {...},
-   "telemetry": {name: {"spill_bytes", "peak_exec_mem",
-   "shuffle_write_bytes", "stages"}, ...},
    "value_warm_fresh": ..., "queries_warm_fresh": {...},
    "totals": {"cold": ..., "warm": ..., "warm_fresh": ...}}``
 
-``telemetry`` (cold pass only) sums shuffle spill, executor task time and
+Telemetry (cold pass only; ``bench telemetry: {name: {"spill_bytes",
+"peak_exec_mem", "shuffle_write_bytes", "stages", "task_time_ms"}, ...}``
+on stderr) sums shuffle spill, executor task time and
 shuffle write, and takes max peak-execution-memory over each entry's
 completed stages via the status REST API — the fits-at-the-next-SF signal
 a timing alone can't give (task_time_ms / wall additionally says how
 data-parallel an entry is, the core-scaling signal).
 
-The telemetry map is emitted as its OWN labelled line on **stderr** (and
-included in the stdout JSON line only when ``SPARK_GRAFT_BENCH_TELEMETRY=1``):
+The telemetry map is emitted as its OWN labelled line on **stderr**, as
 the driver records a bounded tail of the stdout line, and at 72 entries the
 per-entry telemetry alone pushed the three per-query maps out of that
 window (r13: the round-over-round comparison silently failed because the
@@ -59,6 +58,26 @@ N times and reports the per-query MINIMUM — the standard ambient-load
 filter (round-3's +18% "regression" was machine noise). The COLD pass
 always runs each query exactly once: repeats there would hit the caches
 repeat 1 just published, silently turning the headline cold numbers warm.
+
+Usage::
+
+    python bench.py [ENTRY ...] [--stages] [--explain DIR]
+
+- ``ENTRY ...`` restricts all three profiles (cold, warm, warm_fresh — the
+  fresh child gets the same subset) to the named catalog entries; with no
+  names the whole catalog runs and the output is the round artifact.
+- ``--stages`` prints each entry's cold-pass stages on stderr, top 12 by
+  executor run time (task count, shuffle bytes, stage name), so the
+  expensive stage is identifiable without the UI.
+- ``--explain DIR`` writes ``explain("formatted")`` of the DataFrame the
+  cold pass just timed to ``DIR/<entry>.txt``, after its timed window
+  closes — building a plan a second time would warm the cold numbers,
+  because many plans do eager work (fits, derived tables) while built.
+
+A subset at a bigger fixture is the heavy-family slope probe; two subset
+runs under different ``SPARK_GRAFT_CPUS`` values, with the ratio read off
+their ``queries_warm`` maps, are the core-scaling probe (README.md has both
+command lines).
 """
 
 from __future__ import annotations
@@ -128,8 +147,9 @@ class _StageTelemetry:
                 new.append(s)
         return new
 
-    def sample(self) -> dict | None:
-        """Metrics summed over the stages completed since the last call."""
+    def sample(self) -> tuple[dict, list] | None:
+        """Metrics summed over the stages completed since the last call,
+        and those stages."""
         if self._base is None:
             return None
         try:
@@ -150,21 +170,62 @@ class _StageTelemetry:
             # core-utilization signal a wall clock alone can't give — a
             # data-parallel entry approaches 1.0, a fixed-overhead entry ~0
             "task_time_ms": sum(s.get("executorRunTime", 0) for s in new),
-        }
+        }, new
+
+
+def _print_stages(name: str, stages: list) -> None:
+    """One entry's stage count on stderr, then its 12 slowest stages by
+    executor run time."""
+    print(f"bench stages {name}: {len(stages)} stages", file=sys.stderr)
+    for s in sorted(stages, key=lambda s: -s.get("executorRunTime", 0))[:12]:
+        print(
+            f"  stage {s.get('stageId', '?'):>5} exec {s.get('executorRunTime', 0) / 1000:6.2f}s "
+            f"{s.get('numCompleteTasks', 0):>4}t "
+            f"shufR {s.get('shuffleReadBytes', 0) / 1e6:7.1f}M "
+            f"shufW {s.get('shuffleWriteBytes', 0) / 1e6:7.1f}M  {s.get('name', '')[:90]}",
+            file=sys.stderr,
+        )
+
+
+def _write_explain(df, out_dir: str, name: str) -> None:
+    import io
+    from contextlib import redirect_stdout
+
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        df.explain("formatted")
+    with open(os.path.join(out_dir, f"{name}.txt"), "w") as fh:
+        fh.write(buf.getvalue())
 
 
 def _time_catalog(
-    spark, queries, sf_dir: str, repeats: int, telemetry: dict | None = None
+    spark,
+    queries,
+    sf_dir: str,
+    repeats: int,
+    telemetry: dict | None = None,
+    *,
+    stages: bool = False,
+    explain_dir: str | None = None,
 ) -> dict[str, float]:
+    """Per-entry wall seconds (min over ``repeats``). With ``telemetry``,
+    fills it per entry from the stage REST API and, with ``stages``, prints
+    each entry's slowest stages; with ``explain_dir``, writes the plan of
+    each DataFrame it timed there."""
     timings: dict[str, float] = {}
     tel = _StageTelemetry(spark) if telemetry is not None else None
     for name, fn in sorted(queries.items()):
         best = None
         for _ in range(repeats):
             t0 = time.perf_counter()
-            _materialize(fn(spark, sf_dir))
+            df = fn(spark, sf_dir)
+            _materialize(df)
             elapsed = time.perf_counter() - t0
             best = elapsed if best is None else min(best, elapsed)
+            if explain_dir is not None:
+                # outside the timed window but before clearCache: the plan
+                # as timed, cached relations included
+                _write_explain(df, explain_dir, name)
             # drop caches a query pinned for its own iterative stages so
             # later queries aren't measured under another query's footprint
             spark.catalog.clearCache()
@@ -172,7 +233,9 @@ def _time_catalog(
         if tel is not None:
             sampled = tel.sample()
             if sampled is not None:
-                telemetry[name] = sampled
+                telemetry[name], new_stages = sampled
+                if stages:
+                    _print_stages(name, new_stages)
     return timings
 
 
@@ -189,15 +252,24 @@ def _warmup(spark) -> None:
     )
 
 
-def _child_main(sf_dir: str) -> None:
+def _select(queries: dict, names) -> dict:
+    """The named catalog entries, or the whole catalog when none are named."""
+    unknown = sorted(set(names) - set(queries))
+    if unknown:
+        raise SystemExit(f"unknown catalog entries: {unknown}")
+    return {n: queries[n] for n in names} if names else queries
+
+
+def _child_main(sf_dir: str, entries) -> None:
     """Fresh-session warm pass: a NEW process (new JVM, no in-process
-    memos) timing the catalog against the artifacts the parent's cold
-    pass persisted under the inherited SPARK_GRAFT_MODEL_DIR. Emits the
-    per-query timings as one JSON line on stdout."""
+    memos) timing the parent's entries against the artifacts the parent's
+    cold pass persisted under the inherited SPARK_GRAFT_MODEL_DIR. Emits
+    the per-query timings as one JSON line on stdout."""
     from market_data_mining_project_spark.session import get_spark
 
     import __spark_entry__ as entry_mod
 
+    queries = _select(entry_mod.queries(), entries)
     spark = get_spark("mdmp-bench-fresh", **{"spark.ui.enabled": "false"})
     _warmup(spark)
     # ALWAYS single-shot, like the cold pass and for the same reason:
@@ -205,11 +277,11 @@ def _child_main(sf_dir: str) -> None:
     # exclude, so a min-of-N here would silently report in-process-warm
     # numbers as "fresh". warm (min-of-N) vs warm_fresh (single-shot) is
     # therefore an asymmetric comparison by design, documented above.
-    timings = _time_catalog(spark, entry_mod.queries(), sf_dir, repeats=1)
+    timings = _time_catalog(spark, queries, sf_dir, repeats=1)
     print(json.dumps(timings))
 
 
-def _fresh_warm_pass(sf_dir: str, cache_root: str) -> dict[str, float]:
+def _fresh_warm_pass(sf_dir: str, cache_root: str, *entries: str) -> dict[str, float]:
     import subprocess
 
     env = dict(
@@ -219,7 +291,7 @@ def _fresh_warm_pass(sf_dir: str, cache_root: str) -> dict[str, float]:
         SPARK_GRAFT_SF_DIR=sf_dir,
     )
     proc = subprocess.run(
-        [sys.executable, os.path.abspath(__file__)],
+        [sys.executable, os.path.abspath(__file__), *entries],
         env=env,
         capture_output=True,
         text=True,
@@ -237,7 +309,7 @@ def _fresh_warm_pass(sf_dir: str, cache_root: str) -> dict[str, float]:
     raise RuntimeError(f"fresh-warm child emitted no JSON: {proc.stdout[-2000:]}")
 
 
-def _fresh_warm_or_none(sf_dir: str, cache_root: str) -> dict[str, float] | None:
+def _fresh_warm_or_none(sf_dir: str, cache_root: str, *entries: str) -> dict[str, float] | None:
     """A failed/timed-out fresh child must DEGRADE the artifact (cold+warm
     only, stderr note), never discard the two passes already measured —
     at bigger SFs the child re-pays JVM startup plus the full catalog and
@@ -245,19 +317,40 @@ def _fresh_warm_or_none(sf_dir: str, cache_root: str) -> dict[str, float] | None
     import subprocess
 
     try:
-        return _fresh_warm_pass(sf_dir, cache_root)
+        return _fresh_warm_pass(sf_dir, cache_root, *entries)
     except (RuntimeError, subprocess.TimeoutExpired, ValueError) as exc:
         print(f"fresh-warm pass skipped: {exc}", file=sys.stderr)
         return None
 
 
+def _parse_args():
+    import argparse
+
+    ap = argparse.ArgumentParser(
+        description="Time catalog entries cold, warm and in a fresh session (warm_fresh)."
+    )
+    ap.add_argument(
+        "entries", nargs="*", metavar="ENTRY", help="catalog entries to time (default: all)"
+    )
+    ap.add_argument(
+        "--stages", action="store_true",
+        help="print each entry's slowest cold-pass stages on stderr",
+    )
+    ap.add_argument(
+        "--explain", metavar="DIR",
+        help="write the plan each entry's cold pass timed to DIR/<entry>.txt",
+    )
+    return ap.parse_args()
+
+
 def main() -> None:
+    args = _parse_args()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1).rstrip(".")) if m else None
 
     if os.environ.get("SPARK_GRAFT_BENCH_CHILD") == "1":
-        _child_main(sf_dir)
+        _child_main(sf_dir, args.entries)
         return
 
     # fresh persistence root: the cold pass must not see artifacts from a
@@ -275,17 +368,22 @@ def main() -> None:
 
     import __spark_entry__ as entry_mod
 
+    queries = _select(entry_mod.queries(), args.entries)
+    if args.explain is not None:
+        os.makedirs(args.explain, exist_ok=True)
     # UI on: the stage REST API is the telemetry source (spill/peak-mem per
     # entry); the listener overhead is noise at catalog granularity
     spark = get_spark("mdmp-bench", **{"spark.ui.enabled": "true"})
-    queries = entry_mod.queries()
     _warmup(spark)
 
     repeats = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "1")))
     # cold is ALWAYS single-shot: a second repeat would serve the caches the
     # first repeat published, and min-of-N would report that as "cold"
     telemetry: dict = {}
-    cold = _time_catalog(spark, queries, sf_dir, repeats=1, telemetry=telemetry)
+    cold = _time_catalog(
+        spark, queries, sf_dir, repeats=1, telemetry=telemetry,
+        stages=args.stages, explain_dir=args.explain,
+    )
     warm = _time_catalog(spark, queries, sf_dir, repeats)
 
     # key order is the artifact contract: the driver records a bounded TAIL
@@ -304,17 +402,13 @@ def main() -> None:
         "queries_warm": warm,
     }
     if telemetry:
-        # stderr by default: the driver's bounded tail of the stdout line
-        # must fit the three per-query timing maps + totals; the per-entry
-        # telemetry (~8 KB) is diagnostic and rides its own labelled line.
-        # SPARK_GRAFT_BENCH_TELEMETRY=1 restores the r13 inline shape.
-        if os.environ.get("SPARK_GRAFT_BENCH_TELEMETRY") == "1":
-            out["telemetry"] = telemetry
-        else:
-            print(
-                "bench telemetry: " + json.dumps(telemetry, separators=(",", ":")),
-                file=sys.stderr,
-            )
+        # stderr: the recorded tail of the stdout line must fit the three
+        # per-query timing maps + totals; the per-entry telemetry (~8 KB)
+        # is diagnostic and rides its own labelled line.
+        print(
+            "bench telemetry: " + json.dumps(telemetry, separators=(",", ":")),
+            file=sys.stderr,
+        )
     if os.environ.get("SPARK_GRAFT_BENCH_FRESH", "1") != "0":
         # measured AFTER the in-process passes so the child sees exactly
         # the artifacts they published; its own JVM spin-up is excluded by
@@ -322,7 +416,7 @@ def main() -> None:
         # a real second session doesn't run beside an idle first one, and
         # two driver heaps would measure memory contention, not serving.
         spark.stop()
-        fresh = _fresh_warm_or_none(sf_dir, cache_root)
+        fresh = _fresh_warm_or_none(sf_dir, cache_root, *args.entries)
         if fresh is not None:
             out["value_warm_fresh"] = round(sum(fresh.values()), 3)
             out["queries_warm_fresh"] = fresh

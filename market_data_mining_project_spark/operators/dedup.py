@@ -376,11 +376,11 @@ def minhash_lsh_candidates(
 #: Per-task state bound for the exact-jaccard self-join: a shingle whose
 #: document frequency exceeds this is salted so that no single (shingle,
 #: salt) join key buffers more than ~this many rows or emits more than
-#: ~this² candidate pairs. Env-tunable for probes; 2048 keeps the hot-key
-#: task state well under local[32]'s 0.25 GB/task heap share while leaving
-#: the cold (df ≤ bound) path — virtually every shingle in a real corpus —
-#: completely untouched.
-JACCARD_SALT_ROWS = int(os.environ.get("SPARK_GRAFT_JACCARD_SALT_ROWS", "2048"))
+#: ~this² candidate pairs. 2048 keeps the hot-key task state well under
+#: local[32]'s 0.25 GB/task heap share while leaving the cold (df ≤ bound)
+#: path — virtually every shingle in a real corpus — completely untouched.
+#: ``salt_rows=`` overrides it per call.
+JACCARD_SALT_ROWS = 2048
 
 
 def _bounded_self_pairs(sh: DataFrame, salt_rows: int) -> DataFrame:

@@ -5,23 +5,21 @@ double-digit percent while controlled A/Bs were flat — ambient host load,
 adjudicated away at the cost of a judge session each time. This script
 makes the r10 ad-hoc fix the standing protocol:
 
-- runs ``bench.py`` REPS times end-to-end (default 2), each run producing
+- runs ``bench.py`` REPS (2) times end-to-end, each run producing
   the full cold / warm / warm_fresh triple profile;
 - merges per-entry MINIMUM per profile (min filters additive ambient
   noise; seeded fits make results identical across reps, so min is sound);
 - prints the merged artifact as one JSON line (same schema as bench.py,
   plus ``protocol: min-of-N``);
 - if a previous round's artifact is given, prints a per-entry delta table
-  of every warm_fresh entry that moved more than THRESHOLD (default 10%)
+  of every warm_fresh entry that moved more than DELTA_PCT (10%)
   in either direction — the "root-cause it in the round it appears" list.
 
 Run (idle host, at HEAD, end of round):
 
     python scripts/bench_protocol.py [BENCH_rPREV.json]
 
-Knobs: SPARK_GRAFT_BENCH_PROTOCOL_REPS (default 2),
-SPARK_GRAFT_BENCH_DELTA_PCT (default 10), plus everything bench.py reads
-(SPARK_GRAFT_SF_DIR etc.).
+Knobs: everything bench.py reads (SPARK_GRAFT_SF_DIR etc.).
 """
 
 from __future__ import annotations
@@ -32,6 +30,10 @@ import subprocess
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+#: bench runs merged per protocol run; every committed BENCH_PROTOCOL_r*.json is min-of-2
+REPS = 2
+#: per-entry move (percent, either direction) the delta report flags
+DELTA_PCT = 10.0
 
 
 def run_bench_once(idx: int) -> dict:
@@ -149,12 +151,10 @@ def delta_report(merged: dict, prev_path: str, threshold_pct: float) -> None:
 
 
 def main() -> None:
-    reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_PROTOCOL_REPS", "2")))
-    threshold = float(os.environ.get("SPARK_GRAFT_BENCH_DELTA_PCT", "10"))
-    runs = [run_bench_once(i + 1) for i in range(reps)]
+    runs = [run_bench_once(i + 1) for i in range(REPS)]
     merged = merge_min(runs)
     if len(sys.argv) > 1:
-        delta_report(merged, sys.argv[1], threshold)
+        delta_report(merged, sys.argv[1], DELTA_PCT)
     print(json.dumps(merged))
 
 

@@ -1,7 +1,7 @@
 """Synthesize the full ~sf1 (10x sf0.1) dataset for the whole-catalog sweep.
 
-One directory with ALL TEN tables, composing the three per-family recipes
-``scale_probe.py`` already ships (same semantics, same rationale):
+One directory with ALL TEN tables, one recipe per table family (the
+fixture ``scale_probe.py`` slopes against, too):
 
 - ``documents``/``embeddings`` — 10 NEAR-duplicate copies per row (short
   per-copy text tag / one-dimension embedding offset): dedup keeps real
@@ -48,21 +48,48 @@ COPIES = int(os.environ.get("SPARK_GRAFT_SCALE_COPIES", "10"))
 #: measures fixture hostility, not operator scaling.
 CLUSTER = 10
 
+#: symlinked unchanged
+DIMENSIONS = ("part", "customer", "nation", "region", "supplier")
+TABLES = ("documents", "embeddings", "events", "orders", "lineitem") + DIMENSIONS
 
-def main() -> None:
+
+def build(spark, base: str, out: str, copies: int) -> None:
+    """Write the ``copies``-times scaled fixture of ``base`` to ``out``
+    (replaced if present). Every table keeps its base schema."""
     from pyspark.sql import functions as F
 
-    from market_data_mining_project_spark.session import get_spark
+    if os.path.isdir(out):
+        shutil.rmtree(out)
+    os.makedirs(out, exist_ok=True)
+    copy_ids = F.broadcast(spark.range(copies).withColumnRenamed("id", "copy"))
 
-    if os.path.isdir(OUT):
-        shutil.rmtree(OUT)
-    os.makedirs(OUT, exist_ok=True)
-    spark = get_spark("mdmp-build-sf1", **{"spark.ui.enabled": "false"})
-    copies = spark.range(COPIES).withColumnRenamed("id", "copy")
+    def scaled(table: str, partitions: int, **cols) -> None:
+        """``table`` crossed with the copy ids, the named columns recomputed
+        and the rest carried, in the base column order."""
+        df = spark.read.parquet(os.path.join(base, f"{table}.parquet"))
+        (
+            df.crossJoin(copy_ids)
+            .select(*[cols[c].alias(c) if c in cols else c for c in df.columns])
+            .repartition(partitions)
+            .write.mode("overwrite")
+            .parquet(os.path.join(out, f"{table}.parquet"))
+        )
+        print(f"{table} done", flush=True)
 
-    # documents: near-dup replication (scale_probe.build_fixture recipe)
-    docs = spark.read.parquet(os.path.join(BASE, "documents.parquet"))
-    n_docs = docs.agg(F.max("doc_id")).collect()[0][0] + 1
+    def key_span(table: str, key: str) -> int:
+        df = spark.read.parquet(os.path.join(base, f"{table}.parquet"))
+        return df.agg(F.max(key)).collect()[0][0] + 1
+
+    def rekey(key: str, span: int):
+        return F.col(key) + F.col("copy") * span
+
+    def shift_days(col: str, days: int):
+        # timestampadd, NOT date_add: the base fixture ships its dates as
+        # TIMESTAMP and date_add would silently degrade the scaled tiers to
+        # DATE — cross-tier runs must see one schema
+        return F.expr(f"timestampadd(DAY, CAST(copy * {days} AS INT), {col})")
+
+    # documents: near-dup replication
     grp = (F.col("copy") / CLUSTER).cast("int")
     # group > 0: prefix every token with the group marker — shingle sets
     # across groups are disjoint, so near-dup clusters stay CLUSTER-sized.
@@ -78,107 +105,54 @@ def main() -> None:
             " ",
         )
     )
-    (
-        docs.crossJoin(F.broadcast(copies))
-        .select(
-            (F.col("doc_id") + F.col("copy") * n_docs).alias("doc_id"),
-            F.when(F.col("copy") == 0, F.col("text"))
-            .otherwise(F.concat(grouped_text, F.lit(" rev "), F.col("copy")))
-            .alias("text"),
-            "lang",
-            "source",
-            "n_chars",
-        )
-        .repartition(32)
-        .write.mode("overwrite")
-        .parquet(os.path.join(OUT, "documents.parquet"))
+    scaled(
+        "documents", 32,
+        doc_id=rekey("doc_id", key_span("documents", "doc_id")),
+        text=F.when(F.col("copy") == 0, F.col("text")).otherwise(
+            F.concat(grouped_text, F.lit(" rev "), F.col("copy"))
+        ),
     )
-    print("documents done", flush=True)
-
     # embeddings: one-dimension deterministic offset per copy
-    emb = spark.read.parquet(os.path.join(BASE, "embeddings.parquet"))
-    n_vec = emb.agg(F.max("vec_id")).collect()[0][0] + 1
-    (
-        emb.crossJoin(F.broadcast(copies))
-        .select(
-            (F.col("vec_id") + F.col("copy") * n_vec).alias("vec_id"),
-            F.transform(
-                "embedding",
-                lambda x, i: F.when(
-                    i == 0, (x + F.col("copy") * F.lit(0.003)).cast("float")
-                ).otherwise(x),
-            ).alias("embedding"),
-            "label",
-        )
-        .repartition(8)
-        .write.mode("overwrite")
-        .parquet(os.path.join(OUT, "embeddings.parquet"))
+    scaled(
+        "embeddings", 8,
+        vec_id=rekey("vec_id", key_span("embeddings", "vec_id")),
+        embedding=F.transform(
+            "embedding",
+            lambda x, i: F.when(
+                i == 0, (x + F.col("copy") * F.lit(0.003)).cast("float")
+            ).otherwise(x),
+        ),
     )
-    print("embeddings done", flush=True)
-
     # events: extended history
-    ev = spark.read.parquet(os.path.join(BASE, "events.parquet"))
-    n_ev = ev.agg(F.max("event_id")).collect()[0][0] + 1
-    (
-        ev.crossJoin(F.broadcast(copies))
-        .select(
-            (F.col("event_id") + F.col("copy") * n_ev).alias("event_id"),
-            F.expr("timestampadd(DAY, CAST(copy * 31 AS INT), ts)").alias("ts"),
-            "user_id",
-            "event_type",
-            "value",
-            "props",
-        )
-        .repartition(16)
-        .write.mode("overwrite")
-        .parquet(os.path.join(OUT, "events.parquet"))
+    scaled(
+        "events", 16,
+        event_id=rekey("event_id", key_span("events", "event_id")),
+        ts=shift_days("ts", 31),
     )
-    print("events done", flush=True)
+    # orders + lineitem: re-key + date shift (sequences extend). l_shipdate
+    # takes the same +7*copy shift as o_orderdate, so every copy keeps its
+    # line's order-to-ship gap (r8 ADVICE finding)
+    n_ord = key_span("orders", "o_orderkey")
+    scaled(
+        "orders", 16,
+        o_orderkey=rekey("o_orderkey", n_ord),
+        o_orderdate=shift_days("o_orderdate", 7),
+    )
+    scaled(
+        "lineitem", 32,
+        l_orderkey=rekey("l_orderkey", n_ord),
+        l_shipdate=shift_days("l_shipdate", 7),
+    )
+    for dim in DIMENSIONS:
+        os.symlink(os.path.join(base, f"{dim}.parquet"), os.path.join(out, f"{dim}.parquet"))
 
-    # orders + lineitem: re-key + date shift (sequences extend)
-    orders = spark.read.parquet(os.path.join(BASE, "orders.parquet"))
-    li = spark.read.parquet(os.path.join(BASE, "lineitem.parquet"))
-    n_ord = orders.agg(F.max("o_orderkey")).collect()[0][0] + 1
-    (
-        orders.crossJoin(F.broadcast(copies))
-        .select(
-            (F.col("o_orderkey") + F.col("copy") * n_ord).alias("o_orderkey"),
-            *[c for c in orders.columns if c not in ("o_orderkey", "o_orderdate")],
-            # timestampadd, NOT date_add: the base fixture ships o_orderdate
-            # as TIMESTAMP and date_add would silently degrade the scaled
-            # tiers to DATE — cross-tier runs must see one schema
-            F.expr("timestampadd(DAY, CAST(copy * 7 AS INT), o_orderdate)").alias(
-                "o_orderdate"
-            ),
-        )
-        .repartition(16)
-        .write.mode("overwrite")
-        .parquet(os.path.join(OUT, "orders.parquet"))
-    )
-    (
-        li.crossJoin(F.broadcast(copies))
-        .select(
-            (F.col("l_orderkey") + F.col("copy") * n_ord).alias("l_orderkey"),
-            *[c for c in li.columns if c not in ("l_orderkey", "l_shipdate")],
-            # same +7*copy shift as o_orderdate: copies must preserve the
-            # orderdate<=shipdate invariant or order-to-ship temporal logic
-            # is exercised on unrealistic data (r8 ADVICE finding)
-            F.expr("timestampadd(DAY, CAST(copy * 7 AS INT), l_shipdate)").alias(
-                "l_shipdate"
-            ),
-        )
-        .repartition(32)
-        .write.mode("overwrite")
-        .parquet(os.path.join(OUT, "lineitem.parquet"))
-    )
-    print("orders+lineitem done", flush=True)
 
-    for dim in ("part", "customer", "nation", "region", "supplier"):
-        os.symlink(os.path.join(BASE, f"{dim}.parquet"), os.path.join(OUT, f"{dim}.parquet"))
-    for t in (
-        "documents", "embeddings", "events", "orders", "lineitem",
-        "part", "customer", "nation", "region", "supplier",
-    ):
+def main() -> None:
+    from market_data_mining_project_spark.session import get_spark
+
+    spark = get_spark("mdmp-build-sf1", **{"spark.ui.enabled": "false"})
+    build(spark, BASE, OUT, COPIES)
+    for t in TABLES:
         n = spark.read.parquet(os.path.join(OUT, f"{t}.parquet")).count()
         print(f"{t}: {n} rows", flush=True)
 

@@ -1,11 +1,9 @@
 """10× scale probe for the dedup / ANN / corpus-prep family.
 
-Builds a ~10× sf0.1 fixture (50K documents, 20K embeddings) by replicating
-each sf0.1 row into 10 NEAR-duplicate copies — a short per-copy tag keeps
-texts near-dup rather than identical (the realistic crawl shape: dedup has
-real work at every stage instead of trivially collapsing the corpus), and
-each embedding copy gets a small deterministic one-dimension offset for the
-same reason. Then times the scale-sensitive catalog entries at 1× and 10×
+Builds a ~10× sf0.1 fixture with ``build_sf1.build`` (50K near-duplicate
+documents, 20K offset embeddings, extended events and order history; the
+recipe and its rationale live there). Then it times the scale-sensitive
+catalog entries at 1× and 10×
 and prints the slope table that goes into PARITY.md — the measurement that
 catches superlinear cliffs (a driver-side collect, an uncapped pair
 enumeration) which the shape tests alone can't.
@@ -20,7 +18,11 @@ import os
 import shutil
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+_HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, os.path.dirname(_HERE))
+sys.path.insert(0, _HERE)
+
+import build_sf1  # noqa: E402  (the fixture recipe, a sibling script)
 
 BASE = "/root/testdata/sf0.1"
 WORK = "/tmp/mdmp_scale_probe"
@@ -85,82 +87,6 @@ EVENTS_PROBE_QUERIES = (
 )
 
 
-def build_fixture(spark) -> str:
-    """Replicate documents/embeddings 10× with near-dup perturbation."""
-    from pyspark.sql import functions as F
-
-    out = os.path.join(WORK, "sf1.0x")
-    if os.path.isdir(out):
-        shutil.rmtree(out)
-    os.makedirs(out, exist_ok=True)
-
-    docs = spark.read.parquet(os.path.join(BASE, "documents.parquet"))
-    n_docs = docs.agg(F.max("doc_id")).collect()[0][0] + 1
-    copies = spark.range(COPIES).withColumnRenamed("id", "copy")
-    big_docs = (
-        docs.crossJoin(F.broadcast(copies))
-        .select(
-            (F.col("doc_id") + F.col("copy") * n_docs).alias("doc_id"),
-            # copy 0 keeps the original text; others append a short tag —
-            # near-duplicates, not byte-identical clones
-            F.when(F.col("copy") == 0, F.col("text"))
-            .otherwise(F.concat(F.col("text"), F.lit(" rev "), F.col("copy")))
-            .alias("text"),
-            "lang",
-            "source",
-            "n_chars",
-        )
-    )
-    big_docs.repartition(32).write.mode("overwrite").parquet(
-        os.path.join(out, "documents.parquet")
-    )
-
-    emb = spark.read.parquet(os.path.join(BASE, "embeddings.parquet"))
-    n_vec = emb.agg(F.max("vec_id")).collect()[0][0] + 1
-    big_emb = (
-        emb.crossJoin(F.broadcast(copies))
-        .select(
-            (F.col("vec_id") + F.col("copy") * n_vec).alias("vec_id"),
-            F.transform(
-                "embedding",
-                # keep the original array<float> element type
-                lambda x, i: F.when(i == 0, (x + F.col("copy") * F.lit(0.003)).cast("float")).otherwise(x),
-            ).alias("embedding"),
-            "label",
-        )
-    )
-    big_emb.repartition(8).write.mode("overwrite").parquet(
-        os.path.join(out, "embeddings.parquet")
-    )
-    return out
-
-
-def build_events_fixture(spark) -> str:
-    """Replicate events 10× as EXTENDED history: copy k shifts +31·k days
-    (event density per window unchanged) and re-ids events."""
-    from pyspark.sql import functions as F
-
-    out = os.path.join(WORK, "events10x")
-    if os.path.isdir(out):
-        shutil.rmtree(out)
-    os.makedirs(out, exist_ok=True)
-    ev = spark.read.parquet(os.path.join(BASE, "events.parquet"))
-    n_ev = ev.agg(F.max("event_id")).collect()[0][0] + 1
-    copies = spark.range(COPIES).withColumnRenamed("id", "copy")
-    big = ev.crossJoin(F.broadcast(copies)).select(
-        (F.col("event_id") + F.col("copy") * n_ev).alias("event_id"),
-        F.expr("timestampadd(DAY, CAST(copy * 31 AS INT), ts)").alias("ts"),
-        "user_id",
-        "event_type",
-        "value",
-        "props",
-    )
-    big.repartition(16).write.mode("overwrite").parquet(
-        os.path.join(out, "events.parquet")
-    )
-    return out
-
-
 #: iterative-ML carriers (the one family with no slope datapoint through
 #: r6): FPGrowth (steepest cross-SF batch entry at 3.7), PrefixSpan, and
 #: the PageRank carrier. The 10× fixture replicates orders+lineitem with
@@ -174,44 +100,6 @@ ITERML_PROBE_QUERIES = (
     "sequential_patterns",
     "brand_centrality",
 )
-
-
-def build_orders_fixture(spark) -> str:
-    """Replicate orders+lineitem 10× (copy k re-keys orderkeys and shifts
-    dates +7·k days so sequences EXTEND rather than duplicate in place);
-    dimension tables are symlinked unchanged."""
-    from pyspark.sql import functions as F
-
-    out = os.path.join(WORK, "orders10x")
-    if os.path.isdir(out):
-        shutil.rmtree(out)
-    os.makedirs(out, exist_ok=True)
-    orders = spark.read.parquet(os.path.join(BASE, "orders.parquet"))
-    li = spark.read.parquet(os.path.join(BASE, "lineitem.parquet"))
-    n_ord = orders.agg(F.max("o_orderkey")).collect()[0][0] + 1
-    copies = spark.range(COPIES).withColumnRenamed("id", "copy")
-    big_orders = orders.crossJoin(F.broadcast(copies)).select(
-        (F.col("o_orderkey") + F.col("copy") * n_ord).alias("o_orderkey"),
-        *[c for c in orders.columns if c not in ("o_orderkey", "o_orderdate")],
-        F.expr("date_add(o_orderdate, CAST(copy * 7 AS INT))").alias(
-            "o_orderdate"
-        ),
-    )
-    big_orders.repartition(16).write.mode("overwrite").parquet(
-        os.path.join(out, "orders.parquet")
-    )
-    big_li = li.crossJoin(F.broadcast(copies)).select(
-        (F.col("l_orderkey") + F.col("copy") * n_ord).alias("l_orderkey"),
-        *[c for c in li.columns if c != "l_orderkey"],
-    )
-    big_li.repartition(32).write.mode("overwrite").parquet(
-        os.path.join(out, "lineitem.parquet")
-    )
-    for dim in ("part", "customer", "nation", "region", "supplier"):
-        src = os.path.join(BASE, f"{dim}.parquet")
-        if os.path.exists(src):
-            os.symlink(src, os.path.join(out, f"{dim}.parquet"))
-    return out
 
 
 def probe_distributed_pagerank(spark) -> dict:
@@ -271,9 +159,9 @@ def main() -> None:
     # the rebuilt 10x fixture (new mtimes → new data_version) stays cold,
     # corrupting the slope table
     FAMILIES = {
-        "docs": (build_fixture, PROBE_QUERIES),
-        "events": (build_events_fixture, EVENTS_PROBE_QUERIES),
-        "iterml": (build_orders_fixture, ITERML_PROBE_QUERIES),
+        "docs": PROBE_QUERIES,
+        "events": EVENTS_PROBE_QUERIES,
+        "iterml": ITERML_PROBE_QUERIES,
     }
     # validate BEFORE paying the Spark session startup
     requested = sys.argv[1:] or list(FAMILIES)
@@ -309,11 +197,12 @@ def main() -> None:
     # so 9/10 of the input collapses as duplicates)
     queries.setdefault("running_user_totals", PIO.q_running_user_totals)
 
+    print("building the 10x fixture ...", flush=True)
+    big = os.path.join(WORK, "sf1.0x")
+    build_sf1.build(spark, BASE, big, COPIES)
     rows = {}
     for fam in requested:
-        builder, names = FAMILIES[fam]
-        print(f"building 10x {fam} fixture ...", flush=True)
-        big = builder(spark)
+        names = FAMILIES[fam]
         print(f"timing 1x {fam} (sf0.1) ...", flush=True)
         base = time_catalog(spark, queries, BASE, names)
         print(f"timing 10x {fam} ...", flush=True)
