@@ -35,13 +35,19 @@ direction of the driver's bounded tail keeps all three profile totals:
    "value_warm_fresh": ..., "queries_warm_fresh": {...},
    "totals": {"cold": ..., "warm": ..., "warm_fresh": ...}}``
 
-Telemetry (cold pass only; ``bench telemetry: {name: {"spill_bytes",
-"peak_exec_mem", "shuffle_write_bytes", "stages", "task_time_ms"}, ...}``
-on stderr) sums shuffle spill, executor task time and
+Telemetry (cold pass; ``bench telemetry: {name: {"spill_bytes",
+"peak_exec_mem", "shuffle_write_bytes", "stages", "task_time_ms",
+"compiles"}, ...}`` on stderr) sums shuffle spill, executor task time and
 shuffle write, and takes max peak-execution-memory over each entry's
 completed stages via the status REST API — the fits-at-the-next-SF signal
 a timing alone can't give (task_time_ms / wall additionally says how
-data-parallel an entry is, the core-scaling signal).
+data-parallel an entry is, the core-scaling signal). ``compiles`` is the
+number of generated classes Spark compiled while the entry ran (the
+CodegenMetrics compilation count); the warm pass reports it too, on a
+``bench telemetry warm: {name: {"compiles"}, ...}`` line, so a warm entry
+that recompiles its code on every call is visible. Both counts are
+wall-clock windows: background fits running beside an entry are billed to
+it.
 
 The telemetry map is emitted as its OWN labelled line on **stderr**, as
 the driver records a bounded tail of the stdout line, and at 72 entries the
@@ -187,6 +193,12 @@ def _print_stages(name: str, stages: list) -> None:
         )
 
 
+def _compile_count(spark) -> int:
+    """Generated classes compiled so far in this JVM."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
 def _write_explain(df, out_dir: str, name: str) -> None:
     import io
     from contextlib import redirect_stdout
@@ -205,16 +217,19 @@ def _time_catalog(
     repeats: int,
     telemetry: dict | None = None,
     *,
+    compiles: dict | None = None,
     stages: bool = False,
     explain_dir: str | None = None,
 ) -> dict[str, float]:
     """Per-entry wall seconds (min over ``repeats``). With ``telemetry``,
     fills it per entry from the stage REST API and, with ``stages``, prints
-    each entry's slowest stages; with ``explain_dir``, writes the plan of
-    each DataFrame it timed there."""
+    each entry's slowest stages; with ``compiles``, fills it with each
+    entry's compile count over its repeats; with ``explain_dir``, writes
+    the plan of each DataFrame it timed there."""
     timings: dict[str, float] = {}
     tel = _StageTelemetry(spark) if telemetry is not None else None
     for name, fn in sorted(queries.items()):
+        compiled = _compile_count(spark) if compiles is not None else 0
         best = None
         for _ in range(repeats):
             t0 = time.perf_counter()
@@ -230,6 +245,8 @@ def _time_catalog(
             # later queries aren't measured under another query's footprint
             spark.catalog.clearCache()
         timings[name] = round(best, 3)
+        if compiles is not None:
+            compiles[name] = _compile_count(spark) - compiled
         if tel is not None:
             sampled = tel.sample()
             if sampled is not None:
@@ -380,11 +397,15 @@ def main() -> None:
     # cold is ALWAYS single-shot: a second repeat would serve the caches the
     # first repeat published, and min-of-N would report that as "cold"
     telemetry: dict = {}
+    cold_compiles: dict = {}
+    warm_compiles: dict = {}
     cold = _time_catalog(
-        spark, queries, sf_dir, repeats=1, telemetry=telemetry,
+        spark, queries, sf_dir, repeats=1, telemetry=telemetry, compiles=cold_compiles,
         stages=args.stages, explain_dir=args.explain,
     )
-    warm = _time_catalog(spark, queries, sf_dir, repeats)
+    warm = _time_catalog(spark, queries, sf_dir, repeats, compiles=warm_compiles)
+    for name, n in cold_compiles.items():
+        telemetry.setdefault(name, {})["compiles"] = n
 
     # key order is the artifact contract: the driver records a bounded TAIL
     # of this line, so the three totals ride at BOTH ends — scalars first
@@ -401,14 +422,18 @@ def main() -> None:
         "queries": cold,
         "queries_warm": warm,
     }
-    if telemetry:
-        # stderr: the recorded tail of the stdout line must fit the three
-        # per-query timing maps + totals; the per-entry telemetry (~8 KB)
-        # is diagnostic and rides its own labelled line.
-        print(
-            "bench telemetry: " + json.dumps(telemetry, separators=(",", ":")),
-            file=sys.stderr,
-        )
+    # stderr: the recorded tail of the stdout line must fit the three
+    # per-query timing maps + totals; the per-entry telemetry (~8 KB) is
+    # diagnostic and rides its own labelled lines.
+    print(
+        "bench telemetry: " + json.dumps(telemetry, separators=(",", ":")),
+        file=sys.stderr,
+    )
+    warm_telemetry = {name: {"compiles": n} for name, n in warm_compiles.items()}
+    print(
+        "bench telemetry warm: " + json.dumps(warm_telemetry, separators=(",", ":")),
+        file=sys.stderr,
+    )
     if os.environ.get("SPARK_GRAFT_BENCH_FRESH", "1") != "0":
         # measured AFTER the in-process passes so the child sees exactly
         # the artifacts they published; its own JVM spin-up is excluded by

@@ -23,7 +23,8 @@ Only successes are memoized. A failed run takes its cell out of
 ``_CELLS``, so the next :func:`shared` call retries; a consumer that had
 joined the failed run retries at once. A new data version replaces the
 cell of the same artifact and cache root, so ``_CELLS`` holds one cell
-per artifact.
+per artifact; a queued cell that was replaced before a worker reached it
+never runs on the pool (a consumer still holding it runs it inline).
 
 The workers are the daemon threads of a ``multiprocessing.pool.ThreadPool``,
 so a process exits without waiting for fits nobody consumed. An abandoned
@@ -95,6 +96,9 @@ def _run(cell: _Cell) -> bool:
 
 
 def _run_labelled(cell: _Cell) -> None:
+    with _LOCK:
+        if _CELLS.get(_slot(cell.key)) is not cell:
+            return  # a newer data version replaced it; its consumer runs it inline
     sc = SparkContext._active_spark_context
     if sc is None:
         _run(cell)

@@ -29,23 +29,46 @@ local ``hdfs:`` folder, so the cache would never hit).
 
 from __future__ import annotations
 
+import contextlib
 import glob
 import hashlib
 import json
 import os
 import shutil
 import tempfile
+import threading
 import uuid
 from collections.abc import Callable
 
 from pyspark.ml import PipelineModel
 
+from market_data_mining_project_spark.sources.tables import path_signature
+
+
+_PINNED = threading.local()  # .root: this thread's pinned cache root
+
+
+@contextlib.contextmanager
+def pinned_cache_root(root: str):
+    """Resolve every artifact path on this thread under ``root`` until
+    exit, whatever SPARK_GRAFT_MODEL_DIR says by then. A background fit
+    queued under one root must publish there: re-reading the env at save
+    time put a sandbox's fit into the default cache once the sandbox had
+    restored the variable, replacing artifacts other frames were reading."""
+    prev = getattr(_PINNED, "root", None)
+    _PINNED.root = root
+    try:
+        yield
+    finally:
+        _PINNED.root = prev
+
 
 def model_cache_root() -> str:
-    """Cache root — override with SPARK_GRAFT_MODEL_DIR. Must be a local
-    path (see the module docstring); remote URIs fail fast here instead of
-    silently splitting artifacts across two filesystems."""
-    root = os.environ.get(
+    """Cache root — override with SPARK_GRAFT_MODEL_DIR (or, on one thread,
+    :func:`pinned_cache_root`). Must be a local path (see the module
+    docstring); remote URIs fail fast here instead of silently splitting
+    artifacts across two filesystems."""
+    root = getattr(_PINNED, "root", None) or os.environ.get(
         "SPARK_GRAFT_MODEL_DIR", os.path.join(tempfile.gettempdir(), "mdmp_model_cache")
     )
     if "://" in root:
@@ -157,31 +180,19 @@ _DATA_VERSION_MEMO: dict[tuple, tuple] = {}
 
 
 def _quick_table_sig(sf_dir: str, tables: tuple[str, ...]) -> tuple:
-    """Staleness probe for the memo: (size, mtime_ns) of each table's
-    top-level parquet entry PLUS, for directory datasets, one level of
-    child entries — so both a wholesale replace and a partition-level
-    rewrite (dynamic partition overwrite of one ``date=…/`` subdirectory,
-    which leaves the dataset directory's own mtime untouched on POSIX but
-    updates the partition directory's) change the signature and force a
-    full re-fingerprint. Cost is O(|tables| + top-level partitions) stats
-    per call — cheap next to the recursive walk it guards. Residual: a
-    rewrite two levels down that somehow preserves every level-1 entry's
-    mtime slips past; replacing any file updates its parent directory's
-    mtime, so that requires deliberately back-dating — and the full
-    :func:`data_version` still catches it across processes."""
+    """Staleness probe for the memo: each table's
+    :func:`~market_data_mining_project_spark.sources.tables.path_signature`
+    (the path's stat plus one level of its entries), so both a wholesale
+    replace and a partition-level rewrite force a full re-fingerprint. Cost
+    is O(|tables| + top-level partitions) stats per call — cheap next to
+    the recursive walk it guards; the full :func:`data_version` still
+    catches a deeper rewrite across processes."""
     sig = []
     for t in tables:
-        p = os.path.join(sf_dir, f"{t}.parquet")
         try:
-            st = os.stat(p)
-            sig.append((t, st.st_size, st.st_mtime_ns))
-            if os.path.isdir(p):
-                with os.scandir(p) as it:
-                    for entry in sorted(it, key=lambda e: e.name):
-                        est = entry.stat()
-                        sig.append((entry.name, est.st_size, est.st_mtime_ns))
+            sig.append((t, path_signature(os.path.join(sf_dir, f"{t}.parquet"))))
         except FileNotFoundError:
-            sig.append((t, -1, -1))
+            sig.append((t, None))
     return tuple(sig)
 
 

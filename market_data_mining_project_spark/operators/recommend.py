@@ -344,6 +344,8 @@ class RecommendationCache:
 
         from pyspark.errors import AnalysisException
 
+        from market_data_mining_project_spark.sources.tables import read_parquet
+
         slot = self._slot(alpha, rules_version)
         try:
             with open(os.path.join(slot, "_cache_stamp.json")) as fh:
@@ -353,7 +355,7 @@ class RecommendationCache:
         if stamp != {"alpha": float(alpha), "rules_version": rules_version}:
             return None
         try:
-            cached = spark.read.parquet(slot)
+            cached = read_parquet(spark, slot)
         except AnalysisException:
             return None
         hit = cached.filter(

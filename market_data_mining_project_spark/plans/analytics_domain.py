@@ -1297,26 +1297,34 @@ def _fit_prefetch(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     keyed on the data fingerprint; scoring recomputes from parquet).
     Single-flight keys carry (artifact, data version, cache root) so test
     sandboxes redirecting ``SPARK_GRAFT_MODEL_DIR`` stay isolated exactly
-    as the on-disk cache already is. Submission order = pool start order
+    as the on-disk cache already is, and each fit runs pinned to that root,
+    so one still in flight when the sandbox ends publishes into the
+    sandbox, not the default cache. Submission order = pool start order
     (2 workers): ALS first because its consumer is the catalog's first
     entry and blocks on it; the grid last because its consumer runs after
     ``horizon_predictions``'s."""
     version = PERSIST.data_version_cached(sf_dir)
     root = PERSIST.model_cache_root()
-    FITPOOL.prefetch(("als", version, root), lambda: _als_build(spark, sf_dir, version))
-    FITPOOL.prefetch(
-        ("churn_gbt", version, root),
+
+    def prefetch(artifact: str, fn) -> None:
+        def pinned():
+            with PERSIST.pinned_cache_root(root):
+                return fn()
+
+        FITPOOL.prefetch((artifact, version, root), pinned)
+
+    prefetch("als", lambda: _als_build(spark, sf_dir, version))
+    prefetch(
+        "churn_gbt",
         lambda: PERSIST.load_or_train("churn_gbt", version, _churn_trainer(spark, sf_dir)),
     )
-    FITPOOL.prefetch(
-        ("horizon_mlp_90d", version, root),
+    prefetch(
+        "horizon_mlp_90d",
         lambda: PERSIST.load_or_train(
             "horizon_mlp_90d", version, _horizon_mlp_trainer(spark, sf_dir)
         ),
     )
-    FITPOOL.prefetch(
-        ("horizon_grid_metrics", version, root), lambda: _grid_metrics_rows(spark, sf_dir)
-    )
+    prefetch("horizon_grid_metrics", lambda: _grid_metrics_rows(spark, sf_dir))
     return version, root
 
 

@@ -41,6 +41,19 @@ _DEFAULTS = {
         "SPARK_GRAFT_SHUFFLE_PARTITIONS", os.environ.get("SPARK_GRAFT_CPUS", "32")
     ),
     "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
+    # Generated-class cache (static, one per JVM). Spark's 100 entries are
+    # far below the catalog: with them, bench.py's full sweep at sf0.001
+    # compiled 3,004 classes cold and recompiled 2,340 in its in-process
+    # warm pass. With these two settings the cold pass compiles 1,827 (an
+    # upper bound on the distinct classes) and the warm pass 52; 4,096
+    # leaves the catalog room to grow.
+    "spark.sql.codegen.cache.maxEntries": "4096",
+    # The cache is keyed on the generated source, and Spark writes the
+    # whole-stage id into each class name. AQE numbers stages from a
+    # per-query counter that every re-optimization advances, so a plan of
+    # many stages (incremental_ingest's) got new ids, hence new sources,
+    # on every call and recompiled ~100 classes each time.
+    "spark.sql.codegen.useIdInClassName": "false",
     "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY", "8g"),
     # Only meaningful off local[*] (local mode executes in the driver JVM).
     # Spark's 1g default is sized for nothing real: under

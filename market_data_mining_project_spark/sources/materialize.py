@@ -28,6 +28,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from market_data_mining_project_spark.sources.tables import read_parquet
+
 _DERIVED_DIRS: list[str] = []
 
 
@@ -69,12 +71,14 @@ def derived_table(
     whose recomputed fingerprint changed (data_version_cached detects
     mid-process rewrites) must MISS the memo and load/build the new
     version — keying on the path alone would serve the stale
-    materialization before the version was ever consulted.
+    materialization before the version was ever consulted. Every serve is
+    a :func:`~market_data_mining_project_spark.sources.tables.read_parquet`,
+    so a repeat call infers no schema and starts no Spark job.
     """
     key = f"{os.path.realpath(sf_dir)}|{persist_version or ''}"
     path = cache.get(key)
     if path is not None:
-        return spark.read.parquet(path)
+        return read_parquet(spark, path)
     if persist_version is not None:
         from market_data_mining_project_spark.ml import persistence as PERSIST
 
@@ -91,13 +95,13 @@ def derived_table(
                 overwrite=False,
             )
         cache[key] = data_path
-        return spark.read.parquet(data_path)
+        return read_parquet(spark, data_path)
     tmp = tempfile.mkdtemp(prefix=prefix)
     _DERIVED_DIRS.append(tmp)
     path = os.path.join(tmp, "t")
     overwrite_table(build(), path)
     cache[key] = path
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 def write_partitioned(df: DataFrame, path: str, partition_cols: list[str], mode: str = "overwrite") -> None:

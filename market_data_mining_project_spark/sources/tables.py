@@ -3,13 +3,19 @@
 At 100 TB the fact tables (lineitem / transactions / events / documents)
 should be read as partitioned parquet with predicate pushdown; dimension
 tables (region, nation, part, customer, supplier) are broadcast-sized. This
-module keeps loading declarative — ``spark.read.parquet`` only — so Catalyst
+module keeps loading declarative — parquet scans only — so Catalyst
 retains pushdown, pruning and partition elimination.
+
+Every parquet read in the package goes through :func:`read_parquet`, which
+infers a path's schema once per file version: a plain
+``spark.read.parquet`` starts a footer-schema Spark job on every call, and a
+long-lived session serving the same tables pays it again on each call.
 """
 
 from __future__ import annotations
 
 import os
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -28,12 +34,62 @@ TEST_TABLES = (
     "embeddings",
 )
 
-# Dimension tables small enough to broadcast at any realistic scale factor.
-BROADCAST_DIMS = frozenset({"region", "nation", "customer", "supplier", "part"})
-
 
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
+
+
+def path_signature(path: str) -> tuple:
+    """Cheap staleness probe for one parquet path: (name, size, mtime_ns)
+    of the path itself plus, for a directory dataset, of each of its
+    entries one level down. A wholesale replace and a partition-level
+    rewrite (dynamic partition overwrite of one ``date=…/`` subdirectory
+    leaves the dataset directory's own mtime untouched on POSIX but
+    updates the partition directory's) both change it. Residual: a
+    rewrite two levels down that preserves every level-1 entry's mtime
+    slips past; replacing any file updates its parent directory's mtime,
+    so that takes deliberate back-dating. Raises ``OSError`` for a
+    missing path."""
+    st = os.stat(path)
+    sig = [("", st.st_size, st.st_mtime_ns)]
+    if os.path.isdir(path):
+        with os.scandir(path) as it:
+            for entry in sorted(it, key=lambda e: e.name):
+                est = entry.stat()
+                sig.append((entry.name, est.st_size, est.st_mtime_ns))
+    return tuple(sig)
+
+
+# SparkSession -> {realpath: (path_signature, inferred schema)}: one entry
+# per path, replaced when the signature moves. Per session because
+# inference reads session conf (binaryAsString, timestamp inference), and
+# weak so a stopped session's memo goes with it. Unlocked: two threads
+# racing on one path at worst both infer it.
+_SCHEMA_MEMO: "weakref.WeakKeyDictionary[SparkSession, dict]" = weakref.WeakKeyDictionary()
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """Lazy parquet scan of ``path`` that infers its schema with Spark once
+    per file version. The first read of a path version is a plain
+    ``spark.read.parquet`` (its footer-schema job included); later reads
+    of the same (realpath, :func:`path_signature`) pass that schema back,
+    so Spark starts no job until an action. A rewritten file changes the
+    signature and is inferred again. Missing and remote paths always take
+    the plain read, so their errors are Spark's own."""
+    key = sig = None
+    if "://" not in path:
+        try:
+            key, sig = os.path.realpath(path), path_signature(path)
+        except OSError:
+            key = None
+    memo = _SCHEMA_MEMO.setdefault(spark, {})
+    hit = memo.get(key) if key is not None else None
+    if hit is not None and hit[0] == sig:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    if key is not None:
+        memo[key] = (sig, df.schema)
+    return df
 
 
 # events.parquet has shipped with two physical encodings of `ts` over time:
@@ -130,7 +186,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Lazy parquet scan of one table — projection/filters push down later."""
     if name == "events":
         return load_events(spark, sf_dir)
-    return spark.read.parquet(table_path(sf_dir, name))
+    return read_parquet(spark, table_path(sf_dir, name))
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

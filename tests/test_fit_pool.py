@@ -154,6 +154,36 @@ def test_new_data_version_replaces_the_artifact_cell():
     assert held == [("model", "v2", root)]
 
 
+def test_queued_cell_replaced_by_a_new_version_never_runs():
+    """A prefetch still queued when a newer data version replaces its cell
+    is skipped by the worker: its result would be discarded anyway."""
+    release = threading.Event()
+    running = []
+
+    def blocker():
+        running.append(1)
+        release.wait(10)
+
+    for tag in ("hold-a", "hold-b"):
+        fit_pool.prefetch(_key(tag), blocker)
+    deadline = time.monotonic() + 10
+    while len(running) < 2 and time.monotonic() < deadline:
+        time.sleep(0.01)
+    assert len(running) == 2  # both workers busy: the v1 cell stays queued
+    root = f"root-{time.monotonic_ns()}"
+    ran = []
+    fit_pool.prefetch(("model", "v1", root), lambda: ran.append("v1"))
+    assert fit_pool.shared(("model", "v2", root), lambda: "new") == "new"
+    # two sentinels queued behind v1 meet at a barrier, so they can only
+    # both run once the worker that took v1 has finished with it
+    barrier = threading.Barrier(3, timeout=10)
+    for tag in ("after-a", "after-b"):
+        fit_pool.prefetch(_key(tag), barrier.wait)
+    release.set()
+    barrier.wait()
+    assert ran == []
+
+
 def test_unconsumed_prefetch_does_not_block_exit():
     """A process that prefetched a fit nobody consumed exits at once: the
     workers are daemon threads, and interpreter exit abandons them."""

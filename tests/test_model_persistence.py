@@ -249,3 +249,23 @@ def test_data_version_cached_sees_partition_level_rewrite(tmp_path):
     assert os.stat(sf / "lineitem.parquet").st_mtime_ns == ds_mtime
     v2 = P.data_version_cached(str(sf), tables=("lineitem",))
     assert v2 != v1
+
+
+def test_pinned_cache_root_outlives_an_env_change_on_its_thread_only(tmp_path, monkeypatch):
+    """A background fit pins the root it was queued under: a later change
+    of SPARK_GRAFT_MODEL_DIR must not move its artifacts, and the pin must
+    not leak to other threads."""
+    import threading
+
+    monkeypatch.setenv("SPARK_GRAFT_MODEL_DIR", str(tmp_path / "sandbox"))
+    seen = {}
+    with P.pinned_cache_root(P.model_cache_root()):
+        monkeypatch.setenv("SPARK_GRAFT_MODEL_DIR", str(tmp_path / "default"))
+        seen["pinned"] = P.model_dir("m", "v")
+        other = threading.Thread(target=lambda: seen.setdefault("other", P.model_dir("m", "v")))
+        other.start()
+        other.join(10)
+    assert not other.is_alive()
+    assert seen["pinned"] == str(tmp_path / "sandbox" / "m-v")
+    assert seen["other"] == str(tmp_path / "default" / "m-v")
+    assert P.model_dir("m", "v") == str(tmp_path / "default" / "m-v")

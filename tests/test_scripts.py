@@ -167,7 +167,9 @@ def test_fresh_warm_pass_hands_the_entry_subset_to_the_child(monkeypatch):
 
 def test_bench_subset_run_with_stages_and_explain(sf_dir, tmp_path):
     """One entry end to end: the stdout maps hold only that entry, the plan
-    the cold pass timed is on disk, and stderr carries its stage lines."""
+    the cold pass timed is on disk, and stderr carries its stage lines and
+    its compile counts for both passes (a fresh JVM compiles on the cold
+    pass)."""
     env = dict(
         os.environ,
         SPARK_GRAFT_SF_DIR=sf_dir,
@@ -190,6 +192,14 @@ def test_bench_subset_run_with_stages_and_explain(sf_dir, tmp_path):
     header = [i for i, ln in enumerate(lines) if ln.startswith("bench stages category_rollup: ")]
     assert header, proc.stderr[-3000:]
     assert lines[header[0] + 1].lstrip().startswith("stage ")
+    telemetry = {
+        label: json.loads(ln[len(label):])
+        for ln in lines
+        for label in ("bench telemetry: ", "bench telemetry warm: ")
+        if ln.startswith(label)
+    }
+    assert telemetry["bench telemetry: "]["category_rollup"]["compiles"] > 0
+    assert telemetry["bench telemetry warm: "]["category_rollup"]["compiles"] >= 0
 
 
 # --- build_sf1.build ----------------------------------------------------------------
