@@ -38,8 +38,10 @@ import shutil
 import tempfile
 import threading
 import uuid
+import weakref
 from collections.abc import Callable
 
+from pyspark import SparkContext
 from pyspark.ml import PipelineModel
 
 from market_data_mining_project_spark.sources.tables import path_signature
@@ -232,17 +234,24 @@ def has_cached_models(names: list[str], version: str) -> bool:
     return all(has_cached_model(n, version) for n in names)
 
 
-def save_model(model: PipelineModel, metrics: dict[str, float], name: str, version: str) -> str:
-    """Persist model + metrics sidecar atomically; returns the final dir."""
+def save_model(
+    model: PipelineModel,
+    metrics: dict[str, float],
+    name: str,
+    version: str,
+    overwrite: bool = False,
+) -> str:
+    """Persist model + metrics sidecar atomically; returns the final dir.
+    First-wins by default (the data version keys the artifact, so one
+    already in place is input-identical and is kept); ``overwrite=True``
+    is the force-retrain path, where a newer artifact replaces it."""
 
     def write(staging: str) -> None:
         model.write().overwrite().save(os.path.join(staging, "model"))
         with open(os.path.join(staging, "metrics.json"), "w") as fh:
             json.dump(metrics, fh, sort_keys=True)
 
-    # overwrite=True: save_model is also the force-retrain path, so a
-    # newer artifact must replace an existing same-version one
-    return publish_staged(model_dir(name, version), write, overwrite=True)
+    return publish_staged(model_dir(name, version), write, overwrite=overwrite)
 
 
 def load_model(name: str, version: str) -> tuple[PipelineModel, dict[str, float]]:
@@ -278,6 +287,31 @@ def load_metrics_artifact(name: str, version: str) -> dict:
         return json.load(fh)
 
 
+# SparkContext -> {artifact realpath: (path_signature, model, metrics)}:
+# the models load_or_train read from disk. Per context because a loaded
+# model's JVM objects belong to it, and weak so a stopped context's models
+# go with it (the tables._SCHEMA_MEMO pattern). The signature is the
+# staleness check: a republished artifact (force=True) is loaded again.
+_MODEL_MEMO: "weakref.WeakKeyDictionary[SparkContext, dict]" = weakref.WeakKeyDictionary()
+
+
+def _load_memoized(name: str, version: str) -> tuple[PipelineModel, dict[str, float]]:
+    """:func:`load_model` once per artifact version and SparkContext; later
+    calls return the same model (a warm call starts no Spark job) and a
+    copy of its metrics."""
+    sc = SparkContext._active_spark_context
+    if sc is None:
+        return load_model(name, version)
+    d = os.path.realpath(model_dir(name, version))
+    sig = path_signature(d)
+    memo = _MODEL_MEMO.setdefault(sc, {})
+    hit = memo.get(d)
+    if hit is None or hit[0] != sig:
+        hit = (sig, *load_model(name, version))
+        memo[d] = hit
+    return hit[1], dict(hit[2])
+
+
 def load_or_train(
     name: str,
     version: str,
@@ -287,10 +321,20 @@ def load_or_train(
     """Serve from cache when a (name, version) artifact exists, else train
     via ``train_fn`` (returning ``pipelines.TrainedModel``) and persist.
     Returns (model, metrics, from_cache). ``force=True`` mirrors the
-    reference's force_retrain flag: always refit and overwrite."""
+    reference's force_retrain flag: always refit and overwrite.
+
+    A cache hit loads the artifact once per SparkContext (see
+    :func:`_load_memoized`). A freshly trained model is not memoized, so a
+    warm call serves exactly what a new process would load. The publish
+    is first-wins unless forced: a concurrent caller that published the
+    same key first trained on the same inputs, and replacing its
+    directory would delete files its model, or the memo, may be reading.
+    A partial directory found at the miss (a crashed copy) is no winner
+    and is replaced."""
     if not force and has_cached_model(name, version):
-        model, metrics = load_model(name, version)
+        model, metrics = _load_memoized(name, version)
         return model, metrics, True
+    overwrite = force or os.path.isdir(model_dir(name, version))
     trained = train_fn()
-    save_model(trained.model, trained.metrics, name, version)
+    save_model(trained.model, trained.metrics, name, version, overwrite=overwrite)
     return trained.model, trained.metrics, False

@@ -1486,7 +1486,7 @@ def _grid_metrics_rows(spark: SparkSession, sf_dir: str) -> list:
     from market_data_mining_project_spark.ml.pipelines import train_multi_horizon_grid
     from market_data_mining_project_spark.operators.relational import stratified_sample
 
-    grid_version = PERSIST.data_version(sf_dir)
+    grid_version = PERSIST.data_version_cached(sf_dir)
     if PERSIST.has_cached_metrics_artifact("horizon_grid_metrics", grid_version):
         return PERSIST.load_metrics_artifact("horizon_grid_metrics", grid_version)["rows"]
 

@@ -633,7 +633,7 @@ def q_embedding_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     return SIM.cluster_profile(
         emb, "embedding", "vec_id", label_col="label", k=10, seed=42,
-        cache_version=PERSIST.data_version(sf_dir, ("embeddings",)),
+        cache_version=PERSIST.data_version_cached(sf_dir, ("embeddings",)),
     ).orderBy("cluster")
 
 
@@ -750,7 +750,7 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # so in-process rewrites invalidate the memo)
     n_emb = scan_row_count(emb)
     if n_emb is None:
-        ver_key = (sf_dir, PERSIST.data_version(sf_dir, ("embeddings",)))
+        ver_key = (sf_dir, PERSIST.data_version_cached(sf_dir, ("embeddings",)))
         if ver_key not in _EMB_COUNTS:
             _EMB_COUNTS[ver_key] = emb.count()
         n_emb = _EMB_COUNTS[ver_key]
@@ -758,7 +758,7 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ann = SIM.semantic_dedup(
         emb, "embedding", "vec_id", threshold=0.4, n_cells=n_cells, seed=42,
         n_blocks=2, max_iter=5,
-        cache_version=PERSIST.data_version(sf_dir, ("embeddings",)),
+        cache_version=PERSIST.data_version_cached(sf_dir, ("embeddings",)),
     )
     return (
         ann.groupBy("cell")
@@ -819,7 +819,7 @@ def q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     model, _metrics, _cached = PERSIST.load_or_train(
         "quality_lr",
-        PERSIST.data_version(sf_dir, tables=("documents",)),
+        PERSIST.data_version_cached(sf_dir, tables=("documents",)),
         lambda: train_quality_classifier(train_set, "label", with_metrics=False),
     )
     # prof stays cached: the returned frame is LAZY — unpersisting here
@@ -1441,7 +1441,7 @@ def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # k-by-dim centroid table IS the quantizer's trained state)
     return SIM.ivf_topk(
         emb, queries, "embedding", "vec_id", k=5, n_cells=16, nprobe=4,
-        cache_version=PERSIST.data_version(sf_dir, ("embeddings",)),
+        cache_version=PERSIST.data_version_cached(sf_dir, ("embeddings",)),
     )
 
 

@@ -10,13 +10,14 @@ a window/session is emitted iff its end ≤ max event time − watermark delay.
 from __future__ import annotations
 
 import itertools
+import os
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from market_data_mining_project_spark.operators import multimodal as MM
-from market_data_mining_project_spark.sources.tables import load_table
+from market_data_mining_project_spark.sources.tables import load_table, table_path
 from market_data_mining_project_spark.streaming import events as EV
 
 _RUN_COUNTER = itertools.count()
@@ -38,8 +39,23 @@ def _scratch_dir(prefix: str) -> str:
 _LIVE_SINKS: dict[str, str] = {}
 
 
-def _bounded(df: DataFrame, prefix: str, output_mode: str = "append") -> DataFrame:
-    """Run a streaming plan to completion and return its bounded output.
+def _state_partitions(input_size: int, per_partition: int, parallelism: int) -> int:
+    """State partitions for a replay of ``input_size`` (bytes or rows): one
+    per ``per_partition``, clamped to ``[1, parallelism]``."""
+    return max(1, min(parallelism, -(-input_size // per_partition)))
+
+
+def _parquet_files(path: str) -> list[str]:
+    if not os.path.isdir(path):
+        return [path]
+    return [
+        os.path.join(root, f) for root, _, files in os.walk(path) for f in files if f.endswith(".parquet")
+    ]
+
+
+def _bounded(df: DataFrame, sf_dir: str, prefix: str, output_mode: str = "append") -> DataFrame:
+    """Run a streaming plan over ``sf_dir``'s events to completion and
+    return its bounded output.
 
     Append-mode streams land in a parquet FILE sink inside an
     atexit-cleaned scratch dir — NOT a driver-memory table, so repeated
@@ -50,16 +66,36 @@ def _bounded(df: DataFrame, prefix: str, output_mode: str = "append") -> DataFra
     generation for the same prefix: one live generation per prefix (the
     prior result has been consumed by the time a sweep replays an entry).
 
-    State partitions are sized to the replayed stream, not the batch
-    shuffle default: the test streams' key cardinality (event types ×
-    windows, users) is thousands, and each state-store instance costs
-    fixed per-micro-batch commit overhead — 32 batch-sized partitions
-    measured ~2.5× slower than 8 with identical output (see
-    ``run_bounded``). Scales with the session's parallelism floor so a
-    bigger cluster still fans out."""
+    State partitions are sized to the replayed input, not the batch
+    shuffle default: one per ``spark.sql.adaptive.advisoryPartitionSizeInBytes``
+    of the events table, clamped to ``[1, defaultParallelism]`` — the
+    coalescing AQE does for a batch shuffle, which Spark disables for
+    stateful streams. Every state-store instance pays fixed
+    per-micro-batch open/commit cost whether or not it holds a key: at
+    sf0.001 on 4 cores a ``streaming_window_stats`` replay took a median
+    1.9 s with 8 state partitions, 1.35 s with 4 and 1.1 s with 1.
+
+    A stream whose state is updated in Python (applyInPandasWithState)
+    is bound by its Python workers instead, so it takes one partition per
+    Arrow batch (``spark.sql.execution.arrow.maxRecordsPerBatch``) of
+    event rows: at sf0.1 (100,000 rows) on 4 cores its replay took 7.2 s
+    with 1 state partition and 3.3 s with 4."""
     spark = df.sparkSession
     name = f"{prefix}_{next(_RUN_COUNTER)}"
-    state_parts = max(8, spark.sparkContext.defaultParallelism // 4)
+    parallelism = spark.sparkContext.defaultParallelism
+    files = _parquet_files(table_path(sf_dir, "events"))
+    if "FlatMapGroupsInPandasWithState" in df._jdf.queryExecution().logical().toString():
+        import pyarrow.parquet as pq
+
+        # footer row counts: no Spark job, whatever the session has cached
+        rows = sum(pq.ParquetFile(f).metadata.num_rows for f in files)
+        batch = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+        state_parts = _state_partitions(rows, batch, parallelism)
+    else:
+        advisory = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+            spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+        )
+        state_parts = _state_partitions(sum(map(os.path.getsize, files)), advisory, parallelism)
     if output_mode == "append":
         sink = _scratch_dir(f"sink_{name}_")
         EV.run_bounded(
@@ -89,7 +125,7 @@ def q_streaming_window_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     are engine-format dependent."""
     stream = EV.read_event_stream(spark, sf_dir)
     stats = EV.windowed_event_stats(stream, "1 day", "1 hour")
-    out = _bounded(stats, "win_stats")
+    out = _bounded(stats, sf_dir, "win_stats")
     # approx_count_distinct has no DuckDB twin — exactness is pytest-gated
     return out.select(
         F.col("window_start").cast("long").alias("window_start_epoch"),
@@ -124,7 +160,7 @@ def q_streaming_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     exported as epoch seconds (integer canonicalization)."""
     stream = EV.read_event_stream(spark, sf_dir)
     sess = EV.sessionize_events(stream, "30 minutes", "1 hour")
-    return _bounded(sess, "sessions").select(
+    return _bounded(sess, sf_dir, "sessions").select(
         "user_id",
         F.col("session_start").cast("long").alias("session_start_epoch"),
         F.col("session_end").cast("long").alias("session_end_epoch"),
@@ -186,7 +222,7 @@ def q_streaming_enriched(spark: SparkSession, sf_dir: str) -> DataFrame:
             "c_mktsegment", "events", "total_value",
         )
     )
-    return _bounded(stats, "enriched_stats")
+    return _bounded(stats, sf_dir, "enriched_stats")
 
 
 #: Batch twin of the enriched windowed stream: broadcast dim join, 1-day
@@ -269,7 +305,7 @@ def q_streaming_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         purchases, errors, "p_ts", "e_ts",
         radius_secs=900, watermark=f"{horizon_days} days",
     )
-    pairs = _bounded(joined, "range_pairs")
+    pairs = _bounded(joined, sf_dir, "range_pairs")
     agg = pairs.groupBy("event_id").agg(
         F.count(F.lit(1)).alias("n_matched"),
         F.round(F.sum("e_value"), 2).alias("v_matched"),
@@ -296,7 +332,7 @@ def q_running_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tests/test_streaming_io.py)."""
     stream = EV.read_event_stream(spark, sf_dir)
     totals = EV.running_user_totals(stream)
-    out = _bounded(totals, "user_totals", output_mode="update")
+    out = _bounded(totals, sf_dir, "user_totals", output_mode="update")
     return out.groupBy("user_id").agg(
         F.max("events_seen").alias("events_seen"),
         F.max_by("value_total", "events_seen").alias("value_total"),
@@ -368,7 +404,7 @@ def q_streaming_state_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream.filter(F.col("event_id") % 7 == 0).drop("event_id")
     )
     deduped = EV.streaming_dedup(replayed_stream, watermark=f"{horizon_days} days")
-    stream_leg = tag(rollup(_bounded(deduped, "dedup_audit")), "stream_dedup")
+    stream_leg = tag(rollup(_bounded(deduped, sf_dir, "dedup_audit")), "stream_dedup")
 
     replayed_batch = ev.drop("event_id").unionByName(
         ev.filter(F.col("event_id") % 7 == 0).drop("event_id")

@@ -72,6 +72,26 @@ def test_force_retrains_and_overwrites(spark, model_root):
     assert P.has_cached_model("t_force", "v1")
 
 
+def test_cache_miss_publish_keeps_a_concurrent_winner(spark, model_root):
+    """Two callers that miss the same key both train; the one that
+    publishes second adopts the first's directory instead of replacing
+    the files the first (and its readers) may be serving from."""
+    df = _labeled(spark)
+    winner = {}
+
+    def trainer():
+        trained = train_classifier(df, ["f1", "f2"], "y", kind="gradient_boost", overrides={"maxIter": 3})
+        # the concurrent winner publishes the same key while we train
+        P.save_model(trained.model, trained.metrics, "t_race", "v1")
+        winner["ino"] = os.stat(P.model_dir("t_race", "v1")).st_ino
+        return trained
+
+    _m, _met, cached = P.load_or_train("t_race", "v1", trainer)
+    assert not cached
+    assert os.stat(P.model_dir("t_race", "v1")).st_ino == winner["ino"]
+    assert P.has_cached_model("t_race", "v1")
+
+
 def test_data_version_tracks_input_changes(tmp_path):
     sf = tmp_path / "sfX"
     sf.mkdir()

@@ -1,13 +1,22 @@
 """Warm-session gates: a long-lived session pays a parquet path's schema
-once per file version and keeps the catalog's generated classes compiled.
+once per file version, a persisted model once per artifact version, keeps
+the catalog's generated classes compiled, and sizes a replay's state
+stores to its input.
 
 Job counts come from the status tracker under a job group set on this
 thread, so background work on other threads is never counted."""
 
 from __future__ import annotations
 
+import os
 import uuid
 
+from pyspark.ml import Pipeline
+from pyspark.ml.feature import VectorAssembler
+
+from market_data_mining_project_spark.ml import persistence as P
+from market_data_mining_project_spark.ml.pipelines import TrainedModel
+from market_data_mining_project_spark.plans import pipeline_io as PIO
 from market_data_mining_project_spark.sources import materialize as MAT
 from market_data_mining_project_spark.sources.tables import load_table
 
@@ -78,3 +87,69 @@ def test_generated_classes_outlive_more_than_a_hundred_other_plans(spark):
     before = _compiles(spark)
     assert sorted(query()) == expected
     assert _compiles(spark) == before
+
+
+def _assembler_model(spark, out: str) -> TrainedModel:
+    """A one-stage PipelineModel that fits without a job; ``out`` tells
+    two generations of an artifact apart."""
+    df = spark.createDataFrame([(1.0,)], "x double")
+    model = Pipeline(stages=[VectorAssembler(inputCols=["x"], outputCol=out)]).fit(df)
+    return TrainedModel(model=model, metrics={"generation": out})
+
+
+def test_second_load_of_an_unchanged_model_starts_no_job(spark, tmp_path, monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_MODEL_DIR", str(tmp_path))
+    P.load_or_train("warm_m", "v1", lambda: _assembler_model(spark, "a"))
+    first, metrics, cached = P.load_or_train("warm_m", "v1", lambda: _assembler_model(spark, "b"))
+    assert cached and metrics == {"generation": "a"}
+    calls = []
+    jobs = _jobs_started(spark, lambda: calls.append(P.load_or_train("warm_m", "v1", None)))
+    assert jobs == []
+    again, again_metrics, again_cached = calls[0]
+    assert again is first and again_cached
+    again_metrics["generation"] = "mutated"  # a caller's copy, not the memo's
+    assert P.load_or_train("warm_m", "v1", None)[1] == {"generation": "a"}
+
+
+def test_force_republish_is_loaded_again(spark, tmp_path, monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_MODEL_DIR", str(tmp_path))
+    P.load_or_train("warm_f", "v1", lambda: _assembler_model(spark, "a"))
+    before, _, _ = P.load_or_train("warm_f", "v1", None)
+    P.load_or_train("warm_f", "v1", lambda: _assembler_model(spark, "b"), force=True)
+    after, metrics, cached = P.load_or_train("warm_f", "v1", None)
+    assert cached and after is not before
+    assert metrics == {"generation": "b"}
+    assert after.stages[0].getOutputCol() == "b"
+
+
+def test_state_partitions_follow_the_input_size():
+    advisory = 64 * 1024 * 1024
+    assert PIO._state_partitions(0, advisory, 4) == 1
+    assert PIO._state_partitions(advisory, advisory, 4) == 1
+    assert PIO._state_partitions(advisory + 1, advisory, 4) == 2
+    assert PIO._state_partitions(10**15, advisory, 4) == 4
+
+
+def _state_partition_dirs(prefix: str) -> list[str]:
+    """The state-partition directories of the last replay under ``prefix``
+    (one per partition, next to the operator's ``_metadata``)."""
+    ck = [d for d in MAT._DERIVED_DIRS if os.path.basename(d).startswith(f"ck_{prefix}_")][-1]
+    return sorted(p for p in os.listdir(os.path.join(ck, "state", "0")) if p.isdigit())
+
+
+def test_small_replay_runs_one_state_partition(spark, sf_dir):
+    PIO.q_streaming_window_stats(spark, sf_dir).collect()
+    assert _state_partition_dirs("win_stats") == ["0"]
+
+
+def test_python_state_replay_takes_one_partition_per_arrow_batch(spark, sf_dir):
+    rows = load_table(spark, sf_dir, "events").count()
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, str(-(-rows // 2)))  # two Arrow batches of events
+    try:
+        PIO.q_running_user_totals(spark, sf_dir).collect()
+    finally:
+        spark.conf.set(conf, prev)
+    expected = min(2, spark.sparkContext.defaultParallelism)
+    assert _state_partition_dirs("user_totals") == [str(i) for i in range(expected)]
