@@ -287,11 +287,14 @@ def load_metrics_artifact(name: str, version: str) -> dict:
         return json.load(fh)
 
 
-# SparkContext -> {artifact realpath: (path_signature, model, metrics)}:
-# the models load_or_train read from disk. Per context because a loaded
-# model's JVM objects belong to it, and weak so a stopped context's models
-# go with it (the tables._SCHEMA_MEMO pattern). The signature is the
-# staleness check: a republished artifact (force=True) is loaded again.
+# SparkContext -> {(cache root, name): (artifact dir, path_signature,
+# model, metrics)}: the models load_or_train read from disk. Per context
+# because a loaded model's JVM objects belong to it, and weak so a stopped
+# context's models go with it (the tables._SCHEMA_MEMO pattern). ONE entry
+# per model name, the version's directory and signature in the VALUE, so a
+# new data version replaces its predecessor instead of keeping it alive
+# (the _DATA_VERSION_MEMO pattern); the signature is the staleness check,
+# so a republished artifact (force=True) is loaded again.
 _MODEL_MEMO: "weakref.WeakKeyDictionary[SparkContext, dict]" = weakref.WeakKeyDictionary()
 
 
@@ -299,17 +302,15 @@ def _load_memoized(name: str, version: str) -> tuple[PipelineModel, dict[str, fl
     """:func:`load_model` once per artifact version and SparkContext; later
     calls return the same model (a warm call starts no Spark job) and a
     copy of its metrics."""
-    sc = SparkContext._active_spark_context
-    if sc is None:
-        return load_model(name, version)
     d = os.path.realpath(model_dir(name, version))
     sig = path_signature(d)
-    memo = _MODEL_MEMO.setdefault(sc, {})
-    hit = memo.get(d)
-    if hit is None or hit[0] != sig:
-        hit = (sig, *load_model(name, version))
-        memo[d] = hit
-    return hit[1], dict(hit[2])
+    memo = _MODEL_MEMO.setdefault(SparkContext._active_spark_context, {})
+    key = (os.path.realpath(model_cache_root()), name)
+    hit = memo.get(key)
+    if hit is None or hit[:2] != (d, sig):
+        hit = (d, sig, *load_model(name, version))
+        memo[key] = hit
+    return hit[2], dict(hit[3])
 
 
 def load_or_train(
@@ -326,15 +327,16 @@ def load_or_train(
     A cache hit loads the artifact once per SparkContext (see
     :func:`_load_memoized`). A freshly trained model is not memoized, so a
     warm call serves exactly what a new process would load. The publish
-    is first-wins unless forced: a concurrent caller that published the
-    same key first trained on the same inputs, and replacing its
-    directory would delete files its model, or the memo, may be reading.
-    A partial directory found at the miss (a crashed copy) is no winner
-    and is replaced."""
+    is first-wins unless forced, decided after training: a complete
+    artifact that a concurrent caller published meanwhile was trained on
+    the same inputs, and replacing its directory would delete files its
+    model, or the memo, may be reading. Only a partial directory (a
+    crashed copy) is replaced."""
     if not force and has_cached_model(name, version):
         model, metrics = _load_memoized(name, version)
         return model, metrics, True
-    overwrite = force or os.path.isdir(model_dir(name, version))
     trained = train_fn()
+    partial = os.path.isdir(model_dir(name, version)) and not has_cached_model(name, version)
+    overwrite = force or partial
     save_model(trained.model, trained.metrics, name, version, overwrite=overwrite)
     return trained.model, trained.metrics, False

@@ -39,18 +39,24 @@ def _scratch_dir(prefix: str) -> str:
 _LIVE_SINKS: dict[str, str] = {}
 
 
-def _state_partitions(input_size: int, per_partition: int, parallelism: int) -> int:
-    """State partitions for a replay of ``input_size`` (bytes or rows): one
-    per ``per_partition``, clamped to ``[1, parallelism]``."""
-    return max(1, min(parallelism, -(-input_size // per_partition)))
+def _state_partitions(rows: int, rows_per_partition: int, parallelism: int) -> int:
+    """State partitions for a replay of ``rows`` input rows: one per
+    ``rows_per_partition``, clamped to ``[1, parallelism]``."""
+    return max(1, min(parallelism, -(-rows // rows_per_partition)))
 
 
-def _parquet_files(path: str) -> list[str]:
-    if not os.path.isdir(path):
-        return [path]
-    return [
-        os.path.join(root, f) for root, _, files in os.walk(path) for f in files if f.endswith(".parquet")
-    ]
+def _event_rows(sf_dir: str) -> int:
+    """The events table's row count from its parquet footers: no Spark
+    job, whatever the session has cached."""
+    import pyarrow.parquet as pq
+
+    path = table_path(sf_dir, "events")
+    files = (
+        [os.path.join(root, f) for root, _, fs in os.walk(path) for f in fs if f.endswith(".parquet")]
+        if os.path.isdir(path)
+        else [path]
+    )
+    return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
 
 
 def _bounded(df: DataFrame, sf_dir: str, prefix: str, output_mode: str = "append") -> DataFrame:
@@ -67,35 +73,25 @@ def _bounded(df: DataFrame, sf_dir: str, prefix: str, output_mode: str = "append
     prior result has been consumed by the time a sweep replays an entry).
 
     State partitions are sized to the replayed input, not the batch
-    shuffle default: one per ``spark.sql.adaptive.advisoryPartitionSizeInBytes``
-    of the events table, clamped to ``[1, defaultParallelism]`` — the
-    coalescing AQE does for a batch shuffle, which Spark disables for
-    stateful streams. Every state-store instance pays fixed
-    per-micro-batch open/commit cost whether or not it holds a key: at
-    sf0.001 on 4 cores a ``streaming_window_stats`` replay took a median
-    1.9 s with 8 state partitions, 1.35 s with 4 and 1.1 s with 1.
-
-    A stream whose state is updated in Python (applyInPandasWithState)
-    is bound by its Python workers instead, so it takes one partition per
-    Arrow batch (``spark.sql.execution.arrow.maxRecordsPerBatch``) of
-    event rows: at sf0.1 (100,000 rows) on 4 cores its replay took 7.2 s
-    with 1 state partition and 3.3 s with 4."""
+    shuffle default (Spark turns AQE's coalescing off for stateful
+    streams): one per Arrow batch (``spark.sql.execution.arrow.maxRecordsPerBatch``,
+    10,000 rows) of event rows, clamped to ``[1, defaultParallelism]``.
+    Every state-store instance pays fixed per-micro-batch open/commit
+    cost whether or not it holds a key, and a stream whose state is
+    updated in Python (applyInPandasWithState) gets a Python worker per
+    partition. Measured on 4 cores, median of interleaved repeats in one
+    session: at sf0.001 a ``streaming_window_stats`` replay took 1.9 s
+    with 8 state partitions and 1.1 s with 1; at sf1 (1,000,000 event
+    rows, which the rule gives 4) a ``streaming_sessions`` replay took
+    13.0 s with 1, 5.5 s with 4 and 5.3 s with 8; at sf0.1 the
+    Python-state replay took 7.2 s with 1 and 3.3 s with 4."""
     spark = df.sparkSession
     name = f"{prefix}_{next(_RUN_COUNTER)}"
-    parallelism = spark.sparkContext.defaultParallelism
-    files = _parquet_files(table_path(sf_dir, "events"))
-    if "FlatMapGroupsInPandasWithState" in df._jdf.queryExecution().logical().toString():
-        import pyarrow.parquet as pq
-
-        # footer row counts: no Spark job, whatever the session has cached
-        rows = sum(pq.ParquetFile(f).metadata.num_rows for f in files)
-        batch = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
-        state_parts = _state_partitions(rows, batch, parallelism)
-    else:
-        advisory = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-            spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
-        )
-        state_parts = _state_partitions(sum(map(os.path.getsize, files)), advisory, parallelism)
+    state_parts = _state_partitions(
+        _event_rows(sf_dir),
+        int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")),
+        spark.sparkContext.defaultParallelism,
+    )
     if output_mode == "append":
         sink = _scratch_dir(f"sink_{name}_")
         EV.run_bounded(

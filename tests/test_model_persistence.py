@@ -8,10 +8,13 @@ from __future__ import annotations
 import os
 
 import pytest
+from pyspark.ml import Pipeline
+from pyspark.ml.feature import VectorAssembler
 from pyspark.sql import functions as F
 
 from market_data_mining_project_spark.ml import persistence as P
 from market_data_mining_project_spark.ml.pipelines import (
+    TrainedModel,
     score_with_probability,
     train_classifier,
 )
@@ -90,6 +93,30 @@ def test_cache_miss_publish_keeps_a_concurrent_winner(spark, model_root):
     assert not cached
     assert os.stat(P.model_dir("t_race", "v1")).st_ino == winner["ino"]
     assert P.has_cached_model("t_race", "v1")
+
+
+def test_cache_miss_publish_keeps_a_winner_that_replaced_a_partial_dir(spark, model_root):
+    """A crashed copy is in place at the miss, so the concurrent winner
+    replaces it; the caller that publishes second must still adopt the
+    winner's complete directory, not treat it as the crashed copy."""
+    d = P.model_dir("t_race_partial", "v1")
+    os.makedirs(d)
+    with open(os.path.join(d, "metrics.json"), "w") as fh:
+        fh.write("{}")
+    winner = {}
+    model = Pipeline(stages=[VectorAssembler(inputCols=["x"], outputCol="v")]).fit(
+        spark.createDataFrame([(1.0,)], "x double")
+    )
+
+    def trainer():
+        P.save_model(model, {"winner": 1.0}, "t_race_partial", "v1", overwrite=True)
+        winner["ino"] = os.stat(d).st_ino
+        return TrainedModel(model=model, metrics={"winner": 0.0})
+
+    _m, _met, cached = P.load_or_train("t_race_partial", "v1", trainer)
+    assert not cached
+    assert os.stat(d).st_ino == winner["ino"]
+    assert P.load_metrics_artifact("t_race_partial", "v1") == {"winner": 1.0}
 
 
 def test_data_version_tracks_input_changes(tmp_path):

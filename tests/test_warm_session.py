@@ -122,12 +122,22 @@ def test_force_republish_is_loaded_again(spark, tmp_path, monkeypatch):
     assert after.stages[0].getOutputCol() == "b"
 
 
-def test_state_partitions_follow_the_input_size():
-    advisory = 64 * 1024 * 1024
-    assert PIO._state_partitions(0, advisory, 4) == 1
-    assert PIO._state_partitions(advisory, advisory, 4) == 1
-    assert PIO._state_partitions(advisory + 1, advisory, 4) == 2
-    assert PIO._state_partitions(10**15, advisory, 4) == 4
+def test_new_data_version_replaces_its_memoized_predecessor(spark, tmp_path, monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_MODEL_DIR", str(tmp_path))
+    for version in ("v1", "v2"):
+        P.load_or_train("warm_v", version, lambda: _assembler_model(spark, version))
+        P.load_or_train("warm_v", version, None)
+    memo = P._MODEL_MEMO[spark.sparkContext]
+    entries = [hit for (_root, name), hit in memo.items() if name == "warm_v"]
+    assert [os.path.basename(hit[0]) for hit in entries] == ["warm_v-v2"]
+
+
+def test_state_partitions_follow_the_input_rows():
+    batch = 10_000
+    assert PIO._state_partitions(0, batch, 4) == 1
+    assert PIO._state_partitions(batch, batch, 4) == 1
+    assert PIO._state_partitions(batch + 1, batch, 4) == 2
+    assert PIO._state_partitions(10**12, batch, 4) == 4
 
 
 def _state_partition_dirs(prefix: str) -> list[str]:
@@ -142,14 +152,16 @@ def test_small_replay_runs_one_state_partition(spark, sf_dir):
     assert _state_partition_dirs("win_stats") == ["0"]
 
 
-def test_python_state_replay_takes_one_partition_per_arrow_batch(spark, sf_dir):
+def test_replay_takes_one_state_partition_per_arrow_batch_of_events(spark, sf_dir):
     rows = load_table(spark, sf_dir, "events").count()
     conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
     prev = spark.conf.get(conf)
     spark.conf.set(conf, str(-(-rows // 2)))  # two Arrow batches of events
     try:
-        PIO.q_running_user_totals(spark, sf_dir).collect()
+        PIO.q_running_user_totals(spark, sf_dir).collect()  # state updated in Python
+        PIO.q_streaming_window_stats(spark, sf_dir).collect()  # state updated in the JVM
     finally:
         spark.conf.set(conf, prev)
-    expected = min(2, spark.sparkContext.defaultParallelism)
-    assert _state_partition_dirs("user_totals") == [str(i) for i in range(expected)]
+    expected = [str(i) for i in range(min(2, spark.sparkContext.defaultParallelism))]
+    assert _state_partition_dirs("user_totals") == expected
+    assert _state_partition_dirs("win_stats") == expected
