@@ -82,7 +82,7 @@ def model_cache_root() -> str:
     return root
 
 
-def data_version(sf_dir: str, tables: tuple[str, ...] = ("lineitem", "orders", "part")) -> str:
+def _walk_version(sf_dir: str, tables: tuple[str, ...]) -> str:
     """Fingerprint of the training inputs: realpath + (path, size, mtime) of
     every file of every source table the model trains on. Any rewrite of the
     data produces a new version → a new cache key → retraining, which is the
@@ -111,8 +111,7 @@ def model_dir(name: str, version: str) -> str:
 def atomic_publish(staging: str, final: str, overwrite: bool) -> None:
     """Publish a fully-written staging directory to its final path — THE
     one rename dance every cache here uses (models, metrics artifacts,
-    persisted derived tables, recommendation-cache slots), so the
-    concurrency contract lives in one place.
+    derived tables), so the concurrency contract lives in one place.
 
     ``overwrite=False`` (content-addressed caches, where ``final`` is keyed
     by its inputs' version and can only ever exist COMPLETE): plain
@@ -161,9 +160,9 @@ def publish_staged(final: str, write: Callable[[str], None], overwrite: bool) ->
     performs around :func:`atomic_publish`: create a unique sibling staging
     dir, let ``write(staging)`` fill it, publish atomically, remove the
     staging on ANY failure. save_model / save_metrics_artifact /
-    materialize.derived_table / the recommendation cache all route through
-    here so the concurrency-critical cleanup contract (staging suffix,
-    exist_ok create, BaseException rm) cannot drift between four copies."""
+    materialize.derived_table all route through here so the
+    concurrency-critical cleanup contract (staging suffix, exist_ok
+    create, BaseException rm) cannot drift between copies."""
     staging = f"{final}.tmp-{uuid.uuid4().hex[:8]}"
     os.makedirs(staging, exist_ok=True)
     try:
@@ -187,8 +186,8 @@ def _quick_table_sig(sf_dir: str, tables: tuple[str, ...]) -> tuple:
     (the path's stat plus one level of its entries), so both a wholesale
     replace and a partition-level rewrite force a full re-fingerprint. Cost
     is O(|tables| + top-level partitions) stats per call — cheap next to
-    the recursive walk it guards; the full :func:`data_version` still
-    catches a deeper rewrite across processes."""
+    the recursive walk it guards; the walk still catches a deeper rewrite
+    across processes."""
     sig = []
     for t in tables:
         try:
@@ -198,19 +197,18 @@ def _quick_table_sig(sf_dir: str, tables: tuple[str, ...]) -> tuple:
     return tuple(sig)
 
 
-def data_version_cached(sf_dir: str, tables: tuple[str, ...] = ("lineitem", "orders", "part")) -> str:
-    """Memoized :func:`data_version` — for fast paths that would otherwise
-    re-stat every source file on every call. The memo key includes a cheap
-    per-table (size, mtime) signature (:func:`_quick_table_sig`), so a
-    mid-process data rewrite invalidates the memo instead of serving a
-    stale fingerprint — a handful of stats per call, versus the full
-    recursive walk only when the signature moves."""
+def data_version(sf_dir: str, tables: tuple[str, ...] = ("lineitem", "orders", "part")) -> str:
+    """The data version of ``tables`` under ``sf_dir`` (:func:`_walk_version`),
+    memoized per table set. The memo checks a cheap per-table signature
+    (:func:`_quick_table_sig`) first, so a mid-process data rewrite
+    invalidates it instead of serving a stale fingerprint — a handful of
+    stats per call, the full recursive walk only when the signature moves."""
     key = (os.path.realpath(sf_dir), tables)
     sig = _quick_table_sig(sf_dir, tables)
     hit = _DATA_VERSION_MEMO.get(key)
     if hit is not None and hit[0] == sig:
         return hit[1]
-    v = data_version(sf_dir, tables)
+    v = _walk_version(sf_dir, tables)
     _DATA_VERSION_MEMO[key] = (sig, v)
     return v
 

@@ -150,24 +150,6 @@ def train_classifier(
     return TrainedModel(model=model, metrics=metrics)
 
 
-def train_model_grid(
-    labeled: DataFrame,
-    feature_cols: list[str],
-    label_col: str,
-    kinds: tuple[str, ...] = ("random_forest", "gradient_boost", "neural_network", "svm"),
-    overrides: dict[str, dict] | None = None,
-) -> dict[str, TrainedModel]:
-    """The reference's model grid for one horizon (ml_models.py:538-567).
-    ``overrides`` maps kind → estimator-param patches."""
-    return {
-        kind: train_classifier(
-            labeled, feature_cols, label_col, kind,
-            overrides=(overrides or {}).get(kind),
-        )
-        for kind in kinds
-    }
-
-
 def train_multi_horizon_grid(
     labeled: DataFrame,
     feature_cols: list[str],

@@ -22,23 +22,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("content", T.BinaryType()),
-        T.StructField(
-            "meta",
-            T.StructType(
-                [
-                    T.StructField("format", T.StringType()),
-                    T.StructField("n_bytes", T.LongType()),
-                    T.StructField("source", T.StringType()),
-                ]
-            ),
-        ),
-    ]
-)
-
 
 def attach_media(df: DataFrame, id_col: str, payload_col: str, source: str = "synthetic") -> DataFrame:
     """Wrap an existing column as a media binary + metadata struct.

@@ -23,8 +23,6 @@ AQE-coalesced; no collect, no Python loops.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -293,107 +291,6 @@ def als_recommendations(
             .select("user", "item", "score", "rec_rank")
         )
     return out
-
-
-class RecommendationCache:
-    """Versioned recommendation cache with invalidation (the M14 serving
-    surface; reference ``customer_recommendation_cache`` —
-    ``Website/market/customers/models.py:71-85``, keyed on ``alpha`` +
-    ``rules_version`` with the staleness check at
-    ``customers/views.py:203-224``: stale or missing → recompute + store).
-
-    Storage is one parquet SLOT per (``alpha``, ``rules_version``) key,
-    each holding the stamped recommendation rows, published with the
-    shared staging + atomic-rename contract (``persistence.
-    atomic_publish``, first-wins) — a slot is content-addressed by its
-    key, so it can only ever exist complete, concurrent sessions cannot
-    corrupt it mid-write, and a reader never sees a slot's files vanish.
-    The stamp sidecar rides INSIDE the slot (Spark ignores _-prefixed
-    files), so its presence implies the data landed. ``rules_version`` is
-    any token that changes when the rule store does;
-    ``ml.persistence.data_version`` over the mining inputs is the natural
-    choice (a re-import/re-mine produces a new token, invalidating every
-    cached blend — the reference's ``rules_version`` datetime semantics)."""
-
-    def __init__(self, path: str):
-        if "://" in path:
-            # same hazard (and same loud guard) as ml.persistence: Spark
-            # would write the parquet remotely while the stamp sidecar's
-            # local open() hit a bogus path — the cache would never hit
-            raise NotImplementedError(
-                f"RecommendationCache path {path!r}: the stamp sidecar is "
-                "local-fs only; mount shared storage locally or port the "
-                "sidecar to the Hadoop FileSystem API"
-            )
-        self.path = path
-
-    def _slot(self, alpha: float, rules_version: str) -> str:
-        # slot identity must match STAMP identity exactly: '%g' (6 sig
-        # digits) would map 0.3 and 0.3000001 to one directory whose stamp
-        # then mismatches the second alpha forever (correct results, but
-        # every serve silently recomputes). repr() round-trips any double.
-        return os.path.join(self.path, f"v{rules_version}_a{repr(float(alpha))}")
-
-    def lookup(self, spark, alpha: float, rules_version: str) -> DataFrame | None:
-        """Cached frame for (alpha, rules_version), or None on miss/stale.
-
-        Validity comes from the slot's stamp SIDECAR, not from row counts —
-        a legitimately-empty recommendation set is still a hit. The per-row
-        stamps remain for scan pushdown."""
-        import json
-
-        from pyspark.errors import AnalysisException
-
-        from market_data_mining_project_spark.sources.tables import read_parquet
-
-        slot = self._slot(alpha, rules_version)
-        try:
-            with open(os.path.join(slot, "_cache_stamp.json")) as fh:
-                stamp = json.load(fh)
-        except (OSError, ValueError):  # never populated / interrupted store
-            return None
-        if stamp != {"alpha": float(alpha), "rules_version": rules_version}:
-            return None
-        try:
-            cached = read_parquet(spark, slot)
-        except AnalysisException:
-            return None
-        hit = cached.filter(
-            (F.col("alpha") == F.lit(float(alpha)))
-            & (F.col("rules_version") == F.lit(rules_version))
-        )
-        return hit.drop("alpha", "rules_version")
-
-    def store(self, recs: DataFrame, alpha: float, rules_version: str) -> None:
-        import json
-
-        from market_data_mining_project_spark.ml.persistence import publish_staged
-        from market_data_mining_project_spark.sources.materialize import overwrite_table
-
-        stamped = recs.withColumn("alpha", F.lit(float(alpha))).withColumn(
-            "rules_version", F.lit(rules_version)
-        )
-
-        def write(staging: str) -> None:
-            overwrite_table(stamped, staging)
-            # stamp INSIDE the staging dir: the atomic rename publishes data
-            # and validity marker together — no window where a stamped slot
-            # holds partial data
-            with open(os.path.join(staging, "_cache_stamp.json"), "w") as fh:
-                json.dump({"alpha": float(alpha), "rules_version": rules_version}, fh)
-
-        publish_staged(self._slot(alpha, rules_version), write, overwrite=False)
-
-    def serve(self, spark, alpha: float, rules_version: str, compute) -> DataFrame:
-        """Hit → cached rows; miss/stale → ``compute()`` + store + serve
-        (the reference's get-or-recompute request path, views.py:203-255)."""
-        hit = self.lookup(spark, alpha, rules_version)
-        if hit is not None:
-            return hit
-        computed = compute()
-        self.store(computed, alpha, rules_version)
-        stored = self.lookup(spark, alpha, rules_version)
-        return stored if stored is not None else computed
 
 
 def hybrid_blend(

@@ -7,9 +7,6 @@ l_orderkey≈basket_id, p_brand≈department, day = days since 1995-01-01.
 
 from __future__ import annotations
 
-import os
-import threading
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -53,12 +50,9 @@ _SQL_BRAND_FACT = f"""
 """
 
 
-_UI_MATRIX_PATHS: dict[str, str] = {}
-
-
 def _ui_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The (user=o_custkey, item=p_brand, cnt) purchase matrix every
-    recommender needs — materialized ONCE per sf_dir via the S5
+    recommender needs — materialized ONCE per data version via the S5
     derived-table refresh (``materialize.overwrite_table``) and re-read from
     parquet. cf / hybrid / als each pay one small columnar scan instead of
     re-running the 3-table fact join + aggregation (the reference caches the
@@ -67,21 +61,16 @@ def _ui_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return MAT.derived_table(
         spark,
-        _UI_MATRIX_PATHS,
         sf_dir,
-        "ui_matrix_",
+        "ui_matrix",
         lambda: REC.user_item_counts(_brand_fact(spark, sf_dir), "o_custkey", "p_brand"),
-        persist_version=PERSIST.data_version_cached(sf_dir),
     )
-
-
-_BASKET_BRANDS_PATHS: dict[str, str] = {}
 
 
 def _basket_brands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct (l_orderkey, p_brand) pairs — the frame every rule miner
     dedups first (reference counts DISTINCT basket_id throughout,
-    views.py:219-233) — materialized ONCE per sf_dir. The pairwise miner
+    views.py:219-233) — materialized ONCE per data version. The pairwise miner
     reads it three times (basket total, frequent-item counts, pair
     self-join) and the FPGrowth + hybrid paths read it again; sharing one
     parquet scan replaces five lineitem⨝part dedups per session."""
@@ -97,21 +86,15 @@ def _basket_brands(spark: SparkSession, sf_dir: str) -> DataFrame:
             .distinct()
         )
 
-    return MAT.derived_table(
-        spark, _BASKET_BRANDS_PATHS, sf_dir, "basket_brands_", build,
-        persist_version=PERSIST.data_version_cached(sf_dir),
-    )
+    return MAT.derived_table(spark, sf_dir, "basket_brands", build)
 
 
 # --- M13: user-user cosine CF -------------------------------------------------
 
 
-_CF_CANDIDATES_PATHS: dict[str, str] = {}
-
-
 def _cf_candidates(spark: SparkSession, sf_dir: str, k: int = 25) -> DataFrame:
     """Top-25 cosine-CF candidates per query user, computed + materialized
-    ONCE per sf_dir: `cf_recommendations` (top-5) and the hybrid blend's CF
+    ONCE per data version: `cf_recommendations` (top-5) and the hybrid blend's CF
     leg (all 25) are the same ranking at different cut depths, so the
     similarity join — the expensive half of both queries — runs once per
     session. Cutting a deeper top-k to a shallower one preserves scores and
@@ -123,10 +106,7 @@ def _cf_candidates(spark: SparkSession, sf_dir: str, k: int = 25) -> DataFrame:
         query_users = ui.select("user").filter(F.col("user") % 100 == 0).distinct()
         return REC.cosine_cf_scores(None, "o_custkey", "p_brand", query_users, k=k, ui=ui)
 
-    return MAT.derived_table(
-        spark, _CF_CANDIDATES_PATHS, sf_dir, "cf_cand_", build,
-        persist_version=PERSIST.data_version_cached(sf_dir),
-    )
+    return MAT.derived_table(spark, sf_dir, "cf_cand", build)
 
 
 def q_cf_recommendations(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -208,13 +188,11 @@ FROM ranked WHERE rec_rank <= 5
 # --- M14: hybrid rules + CF blend ----------------------------------------------
 
 
-# ONE constant for the blend weight: the cache slot is STAMPED with this
-# value and the live compute must use the same one — two hardcoded 0.6s
-# would let an edit to one silently serve a cache stamped alpha=X holding
-# rows computed at alpha=Y, forever (no data rewrite invalidates it)
+# the blend weight, carried in the derived table's name: a change of it
+# misses instead of serving rows blended at the old weight
 HYBRID_ALPHA = 0.6
 
-# mining-SEMANTICS version, folded into the cache's rules_version: the data
+# mining-SEMANTICS version, carried in the derived table's name: the data
 # fingerprint only sees the INPUT tables, so a code change to the rule
 # miner (e.g. min_count moving from floor to MLlib-exact ceil) would
 # otherwise keep serving blends computed under the old semantics as cache
@@ -226,38 +204,22 @@ def q_hybrid_recommendations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hybrid recommender (M14; reference customers/views.py:49-183):
     assoc score = max(confidence × lift) of brand rules whose antecedent the
     user purchased; CF score from M13; each max-normalized per user,
-    blended α=0.6, purchased brands excluded, top-5. Served through the
-    versioned RecommendationCache (reference customers/views.py:203-224):
-    the blend recomputes only when (alpha, rules_version) miss — a rules
-    re-mine on changed data flips the version token and invalidates."""
-    import hashlib
+    blended α=0.6, purchased brands excluded, top-5. Served as a derived
+    table keyed on (alpha, semver, data version) — the reference's
+    ``customer_recommendation_cache`` keyed on alpha + rules_version
+    (customers/views.py:203-224): the blend recomputes only when one of
+    them changes. The data version covers every mining input (the CF leg,
+    purchased set and query users all come from lineitem ⨝ orders ⨝ part),
+    so a re-import of any of them invalidates."""
+    from market_data_mining_project_spark.sources import materialize as MAT
 
-    # the reference's cache is a persistent DB table — ours lives under the
-    # model-cache root and survives the process; per-(alpha, rules_version)
-    # slots inside it are published atomically. Resolved per call (not
-    # memoized) so SPARK_GRAFT_MODEL_DIR changes — e.g. test sandboxes —
-    # take effect like every other persistence entry point
-    tag = hashlib.md5(os.path.realpath(sf_dir).encode()).hexdigest()[:12]
-    path = os.path.join(PERSIST.model_cache_root(), f"rec_cache_{tag}")
-    os.makedirs(path, exist_ok=True)
-    cache = REC.RecommendationCache(path)
-    # the blend depends on orders too (the CF leg / purchased set / query
-    # users all come from lineitem JOIN orders JOIN part) — every mining
-    # input must be in the fingerprint or a re-import of orders alone
-    # would serve stale cached blends as fresh. The fingerprint is
-    # process-memoized: like the session-scoped derived tables feeding the
-    # blend, a MID-PROCESS rewrite of the data requires a new process (or
-    # the uncached data_version) to be seen — the memo and the derived
-    # tables go stale together, never out of step with each other
-    rules_version = (
-        PERSIST.data_version_cached(sf_dir, ("lineitem", "orders", "part"))
-        + "-"
-        + RULES_MINING_SEMVER
-    )
     return (
-        cache.serve(
-            spark, HYBRID_ALPHA, rules_version,
+        MAT.derived_table(
+            spark,
+            sf_dir,
+            f"hybrid_a{HYBRID_ALPHA!r}_{RULES_MINING_SEMVER}",
             lambda: _hybrid_blend_live(spark, sf_dir),
+            tables=("lineitem", "orders", "part"),
         )
         .withColumnRenamed("user", "o_custkey")
         .orderBy("o_custkey", "rec_rank")
@@ -1160,36 +1122,25 @@ def q_horizon_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _build_horizon_features(labels, cust_stats, brand_stats, dept_freq)
 
 
-_HORIZON_FEATS_PATHS: dict[str, str] = {}
-# serializes concurrent first-builders (the background MLP/grid fits and a
-# foreground horizon_predictions serve can race here since r14's fit pool):
-# derived_table's publish is already atomic first-wins, so a race is safe —
-# the lock only stops the LOSER from paying a duplicate multi-second build
-_HORIZON_FEATS_LOCK = threading.Lock()
-
-
 def _horizon_features_mat(
     spark: SparkSession, sf_dir: str, feats: DataFrame | None = None
 ) -> DataFrame:
-    """The engineered horizon frame, materialized ONCE per sf_dir (the
+    """The engineered horizon frame, materialized ONCE per data version (the
     `_ui_matrix` pattern): `horizon_predictions` and `model_grid_metrics`
     both train on it, so the labels range-join + 3 stat joins run once per
-    session instead of once per ML consumer. A caller that already built the
+    data version instead of once per ML consumer. A caller that already built the
     frame (horizon_predictions shares its cached stat parts) passes it as
     ``feats`` to avoid recomputing the parts for the write.
     `q_horizon_features` itself stays the live plan — it IS the
     measured/oracled operator."""
     from market_data_mining_project_spark.sources import materialize as MAT
 
-    with _HORIZON_FEATS_LOCK:
-        return MAT.derived_table(
-            spark,
-            _HORIZON_FEATS_PATHS,
-            sf_dir,
-            "horizon_feats_",
-            lambda: feats if feats is not None else q_horizon_features(spark, sf_dir),
-            persist_version=PERSIST.data_version_cached(sf_dir),
-        )
+    return MAT.derived_table(
+        spark,
+        sf_dir,
+        "horizon_feats",
+        lambda: feats if feats is not None else q_horizon_features(spark, sf_dir),
+    )
 
 
 SQL_HORIZON_FEATURES = f"""
@@ -1303,7 +1254,7 @@ def _fit_prefetch(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     (2 workers): ALS first because its consumer is the catalog's first
     entry and blocks on it; the grid last because its consumer runs after
     ``horizon_predictions``'s."""
-    version = PERSIST.data_version_cached(sf_dir)
+    version = PERSIST.data_version(sf_dir)
     root = PERSIST.model_cache_root()
 
     def prefetch(artifact: str, fn) -> None:
@@ -1486,7 +1437,7 @@ def _grid_metrics_rows(spark: SparkSession, sf_dir: str) -> list:
     from market_data_mining_project_spark.ml.pipelines import train_multi_horizon_grid
     from market_data_mining_project_spark.operators.relational import stratified_sample
 
-    grid_version = PERSIST.data_version_cached(sf_dir)
+    grid_version = PERSIST.data_version(sf_dir)
     if PERSIST.has_cached_metrics_artifact("horizon_grid_metrics", grid_version):
         return PERSIST.load_metrics_artifact("horizon_grid_metrics", grid_version)["rows"]
 
@@ -1773,9 +1724,6 @@ def q_als_recommendations(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CHURN_SCORES_PATHS: dict[str, str] = {}
-
-
 #: The M8 churn model's feature surface (assembler input order — the order
 #: featureImportances indices map back through).
 CHURN_FEATURE_COLS = [
@@ -1825,10 +1773,10 @@ def _churn_trainer(spark: SparkSession, sf_dir: str):
 
 
 def _churn_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-customer GBT churn scores, trained + materialized ONCE per sf_dir
+    """Per-customer GBT churn scores, trained + materialized ONCE per data version
     (same S5 refresh pattern as ``_ui_matrix``): `churn_model_scores` and the
     threshold sweep both read this parquet, so the 30-round boost fit is paid
-    one time per session instead of once per consuming query."""
+    one time per data version instead of once per consuming query."""
     from market_data_mining_project_spark.functions.expressions import churn_risk_label
     from market_data_mining_project_spark.ml.pipelines import score_with_probability
     from market_data_mining_project_spark.sources import materialize as MAT
@@ -1861,10 +1809,7 @@ def _churn_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    return MAT.derived_table(
-        spark, _CHURN_SCORES_PATHS, sf_dir, "churn_scores_", build,
-        persist_version=PERSIST.data_version_cached(sf_dir),
-    )
+    return MAT.derived_table(spark, sf_dir, "churn_scores", build)
 
 
 def q_churn_model_scores(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -149,9 +149,6 @@ def q_pairwise_rules_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
     return rules
 
 
-_BASKET_PRODUCTS_PATHS: dict[str, str] = {}
-
-
 def _basket_products(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Materialized distinct (l_orderkey, l_partkey) frame — the
     product-grain sibling of ``analytics_domain._basket_brands``: the miner
@@ -168,9 +165,7 @@ def _basket_products(spark: SparkSession, sf_dir: str) -> DataFrame:
             .distinct()
         )
 
-    return MAT.derived_table(
-        spark, _BASKET_PRODUCTS_PATHS, sf_dir, "basket_products_", build
-    )
+    return MAT.derived_table(spark, sf_dir, "basket_products", build, tables=("lineitem",))
 
 
 def q_pairwise_rules_product(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -633,7 +633,7 @@ def q_embedding_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     return SIM.cluster_profile(
         emb, "embedding", "vec_id", label_col="label", k=10, seed=42,
-        cache_version=PERSIST.data_version_cached(sf_dir, ("embeddings",)),
+        cache_version=PERSIST.data_version(sf_dir, ("embeddings",)),
     ).orderBy("cluster")
 
 
@@ -750,7 +750,7 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # so in-process rewrites invalidate the memo)
     n_emb = scan_row_count(emb)
     if n_emb is None:
-        ver_key = (sf_dir, PERSIST.data_version_cached(sf_dir, ("embeddings",)))
+        ver_key = (sf_dir, PERSIST.data_version(sf_dir, ("embeddings",)))
         if ver_key not in _EMB_COUNTS:
             _EMB_COUNTS[ver_key] = emb.count()
         n_emb = _EMB_COUNTS[ver_key]
@@ -758,7 +758,7 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ann = SIM.semantic_dedup(
         emb, "embedding", "vec_id", threshold=0.4, n_cells=n_cells, seed=42,
         n_blocks=2, max_iter=5,
-        cache_version=PERSIST.data_version_cached(sf_dir, ("embeddings",)),
+        cache_version=PERSIST.data_version(sf_dir, ("embeddings",)),
     )
     return (
         ann.groupBy("cell")
@@ -819,7 +819,7 @@ def q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     model, _metrics, _cached = PERSIST.load_or_train(
         "quality_lr",
-        PERSIST.data_version_cached(sf_dir, tables=("documents",)),
+        PERSIST.data_version(sf_dir, tables=("documents",)),
         lambda: train_quality_classifier(train_set, "label", with_metrics=False),
     )
     # prof stays cached: the returned frame is LAZY — unpersisting here
@@ -1105,9 +1105,6 @@ def q_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _EMB_COUNTS: dict[tuple[str, str], int] = {}
-_DUP_CLUSTERS_PATHS: dict[str, str] = {}
-_JACCARD_PAIRS_PATHS: dict[str, str] = {}
-_JACCARD_CAPPED_PATHS: dict[str, str] = {}
 
 
 def _jaccard_pairs_mat(spark: SparkSession, sf_dir: str):
@@ -1118,24 +1115,20 @@ def _jaccard_pairs_mat(spark: SparkSession, sf_dir: str):
     :func:`_dup_clusters_mat`, the cluster propagation): before this the
     cold path ran the whole pipeline twice — at sf1 that was 2× ~25 GB of
     shuffle spill for identical rows."""
-    from market_data_mining_project_spark.ml import persistence as PERSIST
     from market_data_mining_project_spark.sources import materialize as MAT
 
     def build():
         docs = D.ensure_parallelism(load_table(spark, sf_dir, "documents"))
         return D.ngram_jaccard_pairs(docs, "text", "doc_id", shingle_n=3, threshold=0.5)
 
-    return MAT.derived_table(
-        spark, _JACCARD_PAIRS_PATHS, sf_dir, "jaccard_pairs_", build,
-        persist_version=PERSIST.data_version_cached(sf_dir, ("documents",)),
-    )
+    return MAT.derived_table(spark, sf_dir, "jaccard_pairs", build, tables=("documents",))
 
 
 def _dup_clusters_mat(spark: SparkSession, sf_dir: str):
     """Session-shared (doc, cluster) frame for the ≥0.5-Jaccard clusters —
     consumed by `dup_clusters` (the audit rollup) and `leakage_free_folds`
     (the split assignment); the pair mining + iterative closure is paid
-    once per session (same derived-table idiom as the CF/churn frames)."""
+    once per data version (same derived-table idiom as the CF/churn frames)."""
     from market_data_mining_project_spark.sources import materialize as MAT
 
     def build():
@@ -1144,12 +1137,7 @@ def _dup_clusters_mat(spark: SparkSession, sf_dir: str):
         pairs = _jaccard_pairs_mat(spark, sf_dir)
         return D.dup_clusters(pairs.select("doc_a", "doc_b"))
 
-    from market_data_mining_project_spark.ml import persistence as PERSIST
-
-    return MAT.derived_table(
-        spark, _DUP_CLUSTERS_PATHS, sf_dir, "dup_clusters_", build,
-        persist_version=PERSIST.data_version_cached(sf_dir, ("documents",)),
-    )
+    return MAT.derived_table(spark, sf_dir, "dup_clusters", build, tables=("documents",))
 
 
 def q_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1289,13 +1277,12 @@ def q_corpus_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pairs = MAT.derived_table(
         spark,
-        _JACCARD_CAPPED_PATHS,
         sf_dir,
-        "jaccard_pairs_capped_",
+        "jaccard_pairs_capped",
         lambda: D.ngram_jaccard_pairs(
             kept, "text", "doc_id", shingle_n=3, threshold=0.5, max_shingle_df=100
         ),
-        persist_version=PERSIST.data_version_cached(sf_dir, ("documents",)),
+        tables=("documents",),
     )
     clusters = D.dup_clusters(pairs.select("doc_a", "doc_b"))
     final = (
@@ -1441,7 +1428,7 @@ def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # k-by-dim centroid table IS the quantizer's trained state)
     return SIM.ivf_topk(
         emb, queries, "embedding", "vec_id", k=5, n_cells=16, nprobe=4,
-        cache_version=PERSIST.data_version_cached(sf_dir, ("embeddings",)),
+        cache_version=PERSIST.data_version(sf_dir, ("embeddings",)),
     )
 
 

@@ -9,8 +9,10 @@ a window/session is emitted iff its end ≤ max event time − watermark delay.
 
 from __future__ import annotations
 
+import atexit
 import itertools
 import os
+import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -23,14 +25,21 @@ from market_data_mining_project_spark.streaming import events as EV
 _RUN_COUNTER = itertools.count()
 
 
-def _scratch_dir(prefix: str) -> str:
-    """mkdtemp registered with materialize's atexit cleanup so repeated
-    catalog sweeps (bench-style long-lived processes) don't accumulate
-    orphaned checkpoint/export dirs in /tmp."""
-    from market_data_mining_project_spark.sources import materialize as MAT
+_SCRATCH_DIRS: list[str] = []
 
+
+@atexit.register
+def _cleanup_scratch_dirs() -> None:  # pragma: no cover - exit hook
+    for d in _SCRATCH_DIRS:
+        shutil.rmtree(d, ignore_errors=True)
+
+
+def _scratch_dir(prefix: str) -> str:
+    """mkdtemp removed at exit so repeated catalog sweeps (bench-style
+    long-lived processes) don't accumulate orphaned checkpoint/export dirs
+    in /tmp."""
     d = tempfile.mkdtemp(prefix=prefix)
-    MAT._DERIVED_DIRS.append(d)
+    _SCRATCH_DIRS.append(d)
     return d
 
 
@@ -333,15 +342,6 @@ def q_running_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("events_seen").alias("events_seen"),
         F.max_by("value_total", "events_seen").alias("value_total"),
     )
-
-
-SQL_RUNNING_USER_TOTALS = """
-SELECT user_id,
-       COUNT(*) AS events_seen,
-       ROUND(SUM(value), 2) AS value_total
-FROM events
-GROUP BY user_id
-"""
 
 
 def q_streaming_state_audit(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -37,9 +37,7 @@ _DEFAULTS = {
     "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
     "spark.sql.execution.arrow.pyspark.enabled": "true",
-    "spark.sql.shuffle.partitions": os.environ.get(
-        "SPARK_GRAFT_SHUFFLE_PARTITIONS", os.environ.get("SPARK_GRAFT_CPUS", "32")
-    ),
+    "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_CPUS", "32"),
     "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
     # Generated-class cache (static, one per JVM). Spark's 100 entries are
     # far below the catalog: with them, bench.py's full sweep at sf0.001

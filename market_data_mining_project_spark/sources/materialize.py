@@ -20,88 +20,59 @@ recompute → atomic overwrite.
 
 from __future__ import annotations
 
-import atexit
 import os
-import shutil
-import tempfile
+import threading
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
 from market_data_mining_project_spark.sources.tables import read_parquet
 
-_DERIVED_DIRS: list[str] = []
-
-
-@atexit.register
-def _cleanup_derived_dirs() -> None:  # pragma: no cover - exit hook
-    for d in _DERIVED_DIRS:
-        shutil.rmtree(d, ignore_errors=True)
+# artifact path -> the lock its first builders serialize on (setdefault
+# is one atomic dict operation, so two callers always get the same lock)
+_BUILD_LOCKS: dict[str, threading.Lock] = {}
 
 
 def derived_table(
     spark: SparkSession,
-    cache: dict[str, str],
     sf_dir: str,
-    prefix: str,
+    name: str,
     build: Callable[[], DataFrame],
-    persist_version: str | None = None,
+    tables: tuple[str, ...] = ("lineitem", "orders", "part"),
 ) -> DataFrame:
     """Shared derived table (the reference's SQL-Server-side result caches,
-    views.py:85-121): build once per (realpath'd) sf_dir, overwrite to
-    parquet, serve every later consumer one columnar scan. Keys normalize
-    through ``os.path.realpath`` so '/x' and '/x/' (or a symlink) share one
-    materialization.
+    views.py:85-121): build once per data version, publish to parquet,
+    serve every later consumer one columnar scan.
 
-    Without ``persist_version`` the materialization is SESSION-scoped: a
-    temp dir registered for atexit cleanup (data rewritten on disk
-    mid-process needs a new session or ``cache.clear()`` — the same
-    contract as Spark's own ``DataFrame.cache``).
+    The artifact path is a pure function of (model-cache root, ``name``,
+    ``ml.persistence.data_version(sf_dir, tables)``), so it is found on
+    disk by every call, in this process or a later one: nothing remembers
+    it. ``tables`` must cover every input the build reads; a data rewrite
+    changes the version, so a stale frame is never served, and moving the
+    cache root (``SPARK_GRAFT_MODEL_DIR``) builds under the new root.
 
-    With ``persist_version`` (a ``ml.persistence.data_version`` fingerprint
-    of the table's inputs) the materialization lands in the model-cache
-    root keyed on (name, version) and SURVIVES the process — a later
-    session serves the frame without re-running the build, and a data
-    rewrite changes the version so staleness is impossible (the same
-    load-or-train contract the classifier models have). Writes use the
-    staging-dir + atomic-rename pattern; a concurrent builder losing the
-    rename race adopts the winner's (input-identical) artifact.
-
-    The in-memory hit is keyed on (realpath, persist_version): a caller
-    whose recomputed fingerprint changed (data_version_cached detects
-    mid-process rewrites) must MISS the memo and load/build the new
-    version — keying on the path alone would serve the stale
-    materialization before the version was ever consulted. Every serve is
-    a :func:`~market_data_mining_project_spark.sources.tables.read_parquet`,
+    A missing artifact is built under one lock per path, so concurrent
+    callers (a background fit and a foreground entry) build it once, and
+    published first-wins: ``final`` only ever appears via the atomic
+    rename, so it exists complete, and a session already reading the
+    winner's files never sees them vanish. A build must not wait on a
+    thread that reads the same derived table. Every serve is a
+    :func:`~market_data_mining_project_spark.sources.tables.read_parquet`,
     so a repeat call infers no schema and starts no Spark job.
     """
-    key = f"{os.path.realpath(sf_dir)}|{persist_version or ''}"
-    path = cache.get(key)
-    if path is not None:
-        return read_parquet(spark, path)
-    if persist_version is not None:
-        from market_data_mining_project_spark.ml import persistence as PERSIST
+    from market_data_mining_project_spark.ml import persistence as PERSIST
 
-        final = PERSIST.model_dir(f"derived_{prefix.rstrip('_')}", persist_version)
-        data_path = os.path.join(final, "t")
-        if not os.path.isdir(data_path):
-            # first-wins, no pre-delete: `final` only ever appears via the
-            # atomic rename, so it can only exist COMPLETE — and a
-            # concurrent session already reading the winner's files must
-            # never see them vanish under its scan
-            PERSIST.publish_staged(
-                final,
-                lambda staging: overwrite_table(build(), os.path.join(staging, "t")),
-                overwrite=False,
-            )
-        cache[key] = data_path
-        return read_parquet(spark, data_path)
-    tmp = tempfile.mkdtemp(prefix=prefix)
-    _DERIVED_DIRS.append(tmp)
-    path = os.path.join(tmp, "t")
-    overwrite_table(build(), path)
-    cache[key] = path
-    return read_parquet(spark, path)
+    final = PERSIST.model_dir(f"derived_{name}", PERSIST.data_version(sf_dir, tables))
+    data_path = os.path.join(final, "t")
+    if not os.path.isdir(data_path):
+        with _BUILD_LOCKS.setdefault(final, threading.Lock()):
+            if not os.path.isdir(data_path):
+                PERSIST.publish_staged(
+                    final,
+                    lambda staging: overwrite_table(build(), os.path.join(staging, "t")),
+                    overwrite=False,
+                )
+    return read_parquet(spark, data_path)
 
 
 def write_partitioned(df: DataFrame, path: str, partition_cols: list[str], mode: str = "overwrite") -> None:

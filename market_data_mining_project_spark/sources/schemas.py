@@ -112,44 +112,6 @@ CAUSAL_DATA = T.StructType(
     ]
 )
 
-# --- Derived result tables (reference models.py:143-225) --------------------
-
-BASKET_ANALYSIS = T.StructType(
-    [
-        T.StructField("basket_id", T.LongType(), False),
-        T.StructField("household_key", T.LongType(), False),
-        T.StructField("total_items", T.IntegerType(), False),
-        T.StructField("total_value", T.DecimalType(10, 2), False),
-        T.StructField("department_mix", T.MapType(T.StringType(), T.IntegerType()), True),
-    ]
-)
-
-ASSOCIATION_RULE = T.StructType(
-    [
-        T.StructField("antecedent", T.ArrayType(T.StringType()), False),
-        T.StructField("consequent", T.ArrayType(T.StringType()), False),
-        T.StructField("support", T.DoubleType(), False),
-        T.StructField("confidence", T.DoubleType(), False),
-        T.StructField("lift", T.DoubleType(), False),
-        T.StructField("rule_type", T.StringType(), False),
-    ]
-)
-
-CUSTOMER_SEGMENT = T.StructType(
-    [
-        T.StructField("household_key", T.LongType(), False),
-        T.StructField("recency_score", T.IntegerType(), False),
-        T.StructField("frequency_score", T.IntegerType(), False),
-        T.StructField("monetary_score", T.IntegerType(), False),
-        T.StructField("rfm_segment", T.StringType(), False),
-        T.StructField("last_transaction_day", T.IntegerType(), False),
-        T.StructField("total_transactions", T.LongType(), False),
-        T.StructField("total_spend", T.DecimalType(12, 2), False),
-        T.StructField("avg_basket_value", T.DecimalType(10, 2), False),
-        T.StructField("churn_probability", T.DoubleType(), True),
-    ]
-)
-
 DUNNHUMBY_SCHEMAS: dict[str, T.StructType] = {
     "transactions": TRANSACTIONS,
     "product": PRODUCT,

@@ -117,7 +117,7 @@ def _events_schema(ts_type: T.DataType) -> T.StructType:
 # signature, not the path alone — an in-process rewrite of events.parquet
 # to the OTHER ts encoding must re-probe instead of serving the stale
 # answer and silently collapsing every timestamp toward 1970 (the same
-# mid-process-rewrite contract persistence's data_version_cached keeps)
+# mid-process-rewrite contract persistence's data_version memo keeps)
 _TS_PROBE_MEMO: dict[tuple[str, int, int], bool] = {}
 
 

@@ -59,17 +59,17 @@ def test_horizon_grid_trains_all_kinds(spark, sf_dir):
     grid (RF, GBT, MLP, linear SVM — reference ml_models.py:538-567) on the
     90-day horizon. Estimator sizes are trimmed for fixture speed; the
     architecture (layers, depth semantics) is the production one."""
-    from market_data_mining_project_spark.ml.pipelines import train_model_grid
+    from market_data_mining_project_spark.ml.pipelines import train_multi_horizon_grid
     from market_data_mining_project_spark.plans.analytics_domain import (
         HORIZON_FEATURE_COLS,
         q_horizon_features,
     )
 
     feats = q_horizon_features(spark, sf_dir).coalesce(4).cache()
-    grid = train_model_grid(
+    grid = train_multi_horizon_grid(
         feats,
-        feature_cols=HORIZON_FEATURE_COLS,
-        label_col="buy_90d",
+        HORIZON_FEATURE_COLS,
+        label_cols=("buy_90d",),
         overrides={
             "random_forest": {"numTrees": 20, "maxDepth": 6},
             "gradient_boost": {"maxIter": 10},
@@ -77,10 +77,11 @@ def test_horizon_grid_trains_all_kinds(spark, sf_dir):
             "svm": {"maxIter": 20},
         },
     )
-    assert set(grid) == {"random_forest", "gradient_boost", "neural_network", "svm"}
-    for kind, trained in grid.items():
-        assert 0.0 <= trained.metrics["accuracy"] <= 1.0, kind
-        assert trained.metrics["f1"] > 0.3, (kind, trained.metrics)
+    kinds = {"random_forest", "gradient_boost", "neural_network", "svm"}
+    assert set(grid) == {("buy_90d", kind) for kind in kinds}
+    for (_label, kind), metrics in grid.items():
+        assert 0.0 <= metrics["accuracy"] <= 1.0, kind
+        assert metrics["f1"] > 0.3, (kind, metrics)
 
 
 def test_horizon_grid_trains_per_horizon(spark, sf_dir):

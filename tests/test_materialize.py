@@ -139,14 +139,19 @@ def test_plan_has_shuffle_sees_all_shuffle_kinds(spark):
     assert not MAT.plan_has_shuffle(df.join(F.broadcast(dim), "k"))
 
 
-def test_derived_table_misses_memo_on_version_change(spark, tmp_path, monkeypatch):
-    """The in-memory hit is keyed on (path, persist_version): a caller whose
-    recomputed fingerprint changed must MISS and load the new version — a
-    path-only key served the stale materialization before the version was
-    consulted."""
-    monkeypatch.setenv("SPARK_GRAFT_MODEL_DIR", str(tmp_path / "cache_root"))
+def _one_table_src(tmp_path):
     src = tmp_path / "src"
     src.mkdir()
+    (src / "t.parquet").write_bytes(b"x")
+    return str(src)
+
+
+def test_derived_table_misses_memo_on_version_change(spark, tmp_path, monkeypatch):
+    """A hit is keyed on (name, data version): a caller whose source was
+    rewritten must MISS and build the new version — a name-only key would
+    serve the stale materialization."""
+    monkeypatch.setenv("SPARK_GRAFT_MODEL_DIR", str(tmp_path / "cache_root"))
+    src = _one_table_src(tmp_path)
     builds = []
 
     def make_build(val):
@@ -155,15 +160,101 @@ def test_derived_table_misses_memo_on_version_change(spark, tmp_path, monkeypatc
             return spark.createDataFrame([(val,)], "v int")
         return build
 
-    cache: dict = {}
-    a = MAT.derived_table(spark, cache, str(src), "vt_", make_build(1), persist_version="v1")
+    a = MAT.derived_table(spark, src, "vt", make_build(1), tables=("t",))
     assert [r.v for r in a.collect()] == [1] and builds == [1]
-    # same version: memo hit, no rebuild
-    b = MAT.derived_table(spark, cache, str(src), "vt_", make_build(99), persist_version="v1")
+    # same version: hit, no rebuild
+    b = MAT.derived_table(spark, src, "vt", make_build(99), tables=("t",))
     assert [r.v for r in b.collect()] == [1] and builds == [1]
-    # new version (a data rewrite was detected upstream): must rebuild
-    c = MAT.derived_table(spark, cache, str(src), "vt_", make_build(2), persist_version="v2")
+    # new version (the source was rewritten): must rebuild
+    (tmp_path / "src" / "t.parquet").write_bytes(b"rewritten")
+    c = MAT.derived_table(spark, src, "vt", make_build(2), tables=("t",))
     assert [r.v for r in c.collect()] == [2] and builds == [1, 2]
+
+
+def test_derived_table_follows_a_moved_cache_root(spark, tmp_path, monkeypatch):
+    """The artifact path is computed from the CURRENT cache root on every
+    call: after the root moves (and the old one is gone) the frame is
+    built and published under the new root, not read from the old path."""
+    import shutil
+
+    src = _one_table_src(tmp_path)
+    builds = []
+
+    def build():
+        builds.append(1)
+        return spark.createDataFrame([(5,)], "v int")
+
+    monkeypatch.setenv("SPARK_GRAFT_MODEL_DIR", str(tmp_path / "a"))
+    assert [r.v for r in MAT.derived_table(spark, src, "moved", build, tables=("t",)).collect()] == [5]
+    shutil.rmtree(tmp_path / "a")
+    monkeypatch.setenv("SPARK_GRAFT_MODEL_DIR", str(tmp_path / "b"))
+    assert [r.v for r in MAT.derived_table(spark, src, "moved", build, tables=("t",)).collect()] == [5]
+    assert builds == [1, 1]
+    assert len(list((tmp_path / "b").glob("derived_moved-*/t"))) == 1
+
+
+def test_concurrent_first_calls_build_once(spark, tmp_path, monkeypatch):
+    """Two callers missing the same artifact at once: the second waits on
+    the first one's build instead of paying its own."""
+    import threading
+    import time
+
+    monkeypatch.setenv("SPARK_GRAFT_MODEL_DIR", str(tmp_path / "root"))
+    src = _one_table_src(tmp_path)
+    started, release = threading.Event(), threading.Event()
+    builds, results = [], []
+
+    def build():
+        builds.append(1)
+        started.set()
+        release.wait(30)
+        return spark.createDataFrame([(3,)], "v int")
+
+    def call():
+        results.append([r.v for r in MAT.derived_table(spark, src, "race", build, tables=("t",)).collect()])
+
+    first = threading.Thread(target=call)
+    first.start()
+    assert started.wait(30)
+    second = threading.Thread(target=call)
+    second.start()
+    time.sleep(0.5)  # the second caller reaches the artifact while the first builds
+    release.set()
+    first.join(60)
+    second.join(60)
+    assert not first.is_alive() and not second.is_alive()
+    assert builds == [1]
+    assert results == [[3], [3]]
+
+
+def _package_files_containing(needle: str) -> list[str]:
+    import os
+
+    import market_data_mining_project_spark as pkg
+
+    root = os.path.dirname(pkg.__file__)
+    hits = []
+    for dirpath, _, files in os.walk(root):
+        for name in files:
+            path = os.path.join(dirpath, name)
+            if name.endswith(".py"):
+                with open(path) as fh:
+                    if needle in fh.read():
+                        hits.append(os.path.relpath(path, root))
+    return sorted(hits)
+
+
+def test_only_the_cache_layers_publish_staged():
+    """Models go through ml.persistence and derived frames through
+    materialize.derived_table; no third cache publishes on its own."""
+    assert _package_files_containing("publish_staged(") == [
+        "ml/persistence.py",
+        "sources/materialize.py",
+    ]
+
+
+def test_one_data_version_function():
+    assert _package_files_containing("data_version_cached") == []
 
 
 def test_bench_telemetry_degrades_without_ui(spark):

@@ -206,12 +206,12 @@ def test_data_version_cached_sees_midprocess_rewrite(tmp_path):
     sf.mkdir()
     f = sf / "lineitem.parquet"
     f.write_bytes(b"aaaa")
-    v1 = P.data_version_cached(str(sf), tables=("lineitem",))
-    assert v1 == P.data_version_cached(str(sf), tables=("lineitem",))
+    v1 = P.data_version(str(sf), tables=("lineitem",))
+    assert v1 == P.data_version(str(sf), tables=("lineitem",))
     f.write_bytes(b"bbbbbb")  # rewrite in the SAME process
-    v2 = P.data_version_cached(str(sf), tables=("lineitem",))
+    v2 = P.data_version(str(sf), tables=("lineitem",))
     assert v2 != v1
-    assert v2 == P.data_version(str(sf), tables=("lineitem",))
+    assert v2 == P._walk_version(str(sf), ("lineitem",))
 
 
 def test_atomic_publish_force_raises_on_undeletable_final(tmp_path, monkeypatch):
@@ -267,7 +267,7 @@ def test_data_version_memo_is_bounded_per_table_set(tmp_path):
     before = len(P._DATA_VERSION_MEMO)
     for i in range(5):
         f.write_bytes(b"x" * (i + 1))
-        P.data_version_cached(str(sf), tables=("lineitem",))
+        P.data_version(str(sf), tables=("lineitem",))
     after = len(P._DATA_VERSION_MEMO)
     assert after == before + 1
 
@@ -283,7 +283,7 @@ def test_data_version_cached_sees_partition_level_rewrite(tmp_path):
     part = sf / "lineitem.parquet" / "date=2024-01-01"
     part.mkdir(parents=True)
     (part / "part-0.parquet").write_bytes(b"aaaa")
-    v1 = P.data_version_cached(str(sf), tables=("lineitem",))
+    v1 = P.data_version(str(sf), tables=("lineitem",))
     ds_mtime = os.stat(sf / "lineitem.parquet").st_mtime_ns
     _time.sleep(0.01)
     # a real dynamic-partition overwrite deletes the old part files and
@@ -294,7 +294,7 @@ def test_data_version_cached_sees_partition_level_rewrite(tmp_path):
     (part / "part-0.parquet").unlink()
     (part / "part-1.parquet").write_bytes(b"bbbbbb")
     assert os.stat(sf / "lineitem.parquet").st_mtime_ns == ds_mtime
-    v2 = P.data_version_cached(str(sf), tables=("lineitem",))
+    v2 = P.data_version(str(sf), tables=("lineitem",))
     assert v2 != v1
 
 

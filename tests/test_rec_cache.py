@@ -1,14 +1,20 @@
 """Versioned recommendation cache (M14 serving surface; reference
 customer_recommendation_cache, customers/models.py:71-85 + views.py:203-224):
-hit serves without recompute; a rules refresh (new rules_version) or a new
-alpha invalidates and recomputes."""
+the hybrid blend is a derived table whose name carries alpha and the mining
+semver and whose path carries the data version. A hit serves without
+recompute; a data rewrite, a new alpha or a semver bump misses and
+recomputes."""
 
 from __future__ import annotations
+
+import glob
+import os
 
 import pytest
 from pyspark.sql import functions as F
 
-from market_data_mining_project_spark.operators.recommend import RecommendationCache
+from market_data_mining_project_spark.sources import materialize as MAT
+from market_data_mining_project_spark.sources.tables import read_parquet
 
 
 def _recs(spark, tag: int):
@@ -18,8 +24,17 @@ def _recs(spark, tag: int):
     )
 
 
-def test_hit_invalidate_recompute_cycle(spark, tmp_path):
-    cache = RecommendationCache(str(tmp_path / "recs"))
+@pytest.fixture
+def src(tmp_path, monkeypatch):
+    """A one-table source dir under a sandboxed model-cache root."""
+    monkeypatch.setenv("SPARK_GRAFT_MODEL_DIR", str(tmp_path / "root"))
+    d = tmp_path / "src"
+    d.mkdir()
+    (d / "t.parquet").write_bytes(b"v1")
+    return d
+
+
+def test_hit_invalidate_recompute_cycle(spark, src):
     calls = []
 
     def compute(tag):
@@ -29,40 +44,38 @@ def test_hit_invalidate_recompute_cycle(spark, tmp_path):
 
         return fn
 
-    # cold: miss → compute + store
-    out1 = cache.serve(spark, 0.6, "v1", compute(10))
+    def serve(name, tag):
+        return MAT.derived_table(spark, str(src), name, compute(tag), tables=("t",))
+
+    # cold: miss → compute + publish
+    out1 = serve("recs", 10)
     assert calls == [10]
     assert {r.item for r in out1.filter(F.col("user") == 1).collect()} == {"Brand#10", "Brand#11"}
 
-    # warm: same (alpha, rules_version) → served from parquet, no recompute
-    out2 = cache.serve(spark, 0.6, "v1", compute(99))
+    # warm: same name and data version → served from parquet, no recompute
+    out2 = serve("recs", 99)
     assert calls == [10]
     assert sorted(map(tuple, out1.collect())) == sorted(map(tuple, out2.collect()))
 
-    # rules refresh: version token changes → stale → recompute into a NEW
-    # per-version slot
-    out3 = cache.serve(spark, 0.6, "v2", compute(20))
+    # a rewrite of the source: new data version → recompute into a NEW path
+    (src / "t.parquet").write_bytes(b"v2-rewritten")
+    out3 = serve("recs", 20)
     assert calls == [10, 20]
     assert {r.item for r in out3.filter(F.col("user") == 1).collect()} == {"Brand#20", "Brand#21"}
 
-    # slots are per-version (published atomically, never destroyed by a
-    # later version): the old blend stays addressable, but the serving path
-    # keys on the CURRENT rules_version so stale versions are never
-    # consulted — serving v2 again must not recompute
-    old = cache.lookup(spark, 0.6, "v1")
-    assert old is not None
-    assert {r.item for r in old.filter(F.col("user") == 1).collect()} == {"Brand#10", "Brand#11"}
-    cache.serve(spark, 0.6, "v2", compute(99))
+    # artifacts are per version (published first-wins, never destroyed by a
+    # later version): the old blend is still on disk, but serving keys on
+    # the CURRENT version, so serving again must not recompute
+    paths = glob.glob(os.path.join(os.environ["SPARK_GRAFT_MODEL_DIR"], "derived_recs-*", "t"))
+    assert len(paths) == 2
+    items = [{r.item for r in read_parquet(spark, p).filter(F.col("user") == 1).collect()} for p in paths]
+    assert {"Brand#10", "Brand#11"} in items
+    serve("recs", 99)
     assert calls == [10, 20]
 
-    # alpha is part of the key too (reference caches per-alpha blends)
-    cache.serve(spark, 0.3, "v2", compute(30))
+    # alpha is part of the key too (the reference caches per-alpha blends)
+    serve("recs_a0.3", 30)
     assert calls == [10, 20, 30]
-
-
-def test_lookup_on_never_populated_path_is_miss(spark, tmp_path):
-    cache = RecommendationCache(str(tmp_path / "nope"))
-    assert cache.lookup(spark, 0.5, "v1") is None
 
 
 # --- max_neighbors: the capped k-NN serving path vs exact CF ------------------
@@ -136,12 +149,11 @@ def test_cf_capped_plan_adds_windowed_prune(spark):
     assert "__nr" in capped_plan and "__nr" not in exact_plan
 
 
-def test_empty_result_is_a_hit_not_a_perpetual_miss(spark, tmp_path):
+def test_empty_result_is_a_hit_not_a_perpetual_miss(spark, src):
     """A legitimately-empty recommendation set must cache like any other:
-    validity lives in the stamp sidecar, not in row counts — the row-count
-    probe this replaced recomputed (and crashed the caller on None) every
-    serve whenever compute() produced zero rows."""
-    cache = RecommendationCache(str(tmp_path / "recs"))
+    validity is the published artifact, not its row count — a row-count
+    probe recomputed (and crashed the caller on None) every serve whenever
+    compute() produced zero rows."""
     calls = []
 
     def compute():
@@ -150,12 +162,35 @@ def test_empty_result_is_a_hit_not_a_perpetual_miss(spark, tmp_path):
             [], "user LONG, item STRING, hybrid_score DOUBLE, rec_rank INT"
         )
 
-    out1 = cache.serve(spark, 0.5, "v1", compute)
-    assert out1 is not None and out1.count() == 0
+    def serve():
+        return MAT.derived_table(spark, str(src), "empty_recs", compute, tables=("t",))
+
+    assert serve().count() == 0
     assert calls == [1]
-    out2 = cache.serve(spark, 0.5, "v1", compute)
-    assert out2 is not None and out2.count() == 0
+    assert serve().count() == 0
     assert calls == [1], "empty cached result must not trigger recompute"
-    # a version bump still invalidates
-    cache.serve(spark, 0.5, "v2", compute)
+    # a data rewrite still invalidates
+    (src / "t.parquet").write_bytes(b"v2-rewritten")
+    serve()
+    assert calls == [1, 1]
+
+
+def test_semver_bump_rebuilds_the_hybrid_blend(spark, sf_dir, tmp_path, monkeypatch):
+    """The mining semver is part of the blend's key: bumping it misses
+    even though alpha and the data are unchanged."""
+    from market_data_mining_project_spark.plans import analytics_domain as AD
+
+    monkeypatch.setenv("SPARK_GRAFT_MODEL_DIR", str(tmp_path))
+    calls = []
+
+    def blend(spark, sf_dir):
+        calls.append(1)
+        return _recs(spark, 10)
+
+    monkeypatch.setattr(AD, "_hybrid_blend_live", blend)
+    first = AD.q_hybrid_recommendations(spark, sf_dir).collect()
+    assert AD.q_hybrid_recommendations(spark, sf_dir).collect() == first
+    assert calls == [1]
+    monkeypatch.setattr(AD, "RULES_MINING_SEMVER", AD.RULES_MINING_SEMVER + "-bumped")
+    assert AD.q_hybrid_recommendations(spark, sf_dir).collect() == first
     assert calls == [1, 1]

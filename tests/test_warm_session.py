@@ -58,16 +58,16 @@ def test_table_rewritten_in_place_is_read_with_its_new_schema(spark, tmp_path):
     assert [tuple(r) for r in again.collect()] == [(2, "b", 3.5)]
 
 
-def test_second_derived_table_call_starts_no_job(spark, tmp_path):
-    cache: dict = {}
+def test_second_derived_table_call_starts_no_job(spark, tmp_path, monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_MODEL_DIR", str(tmp_path / "root"))
     builds = []
 
     def build():
         builds.append(1)
         return spark.createDataFrame([(7,)], "v int")
 
-    first = MAT.derived_table(spark, cache, str(tmp_path), "warm_", build)
-    jobs = _jobs_started(spark, lambda: MAT.derived_table(spark, cache, str(tmp_path), "warm_", build))
+    first = MAT.derived_table(spark, str(tmp_path), "warm", build)
+    jobs = _jobs_started(spark, lambda: MAT.derived_table(spark, str(tmp_path), "warm", build))
     assert jobs == []
     assert builds == [1]
     assert [r.v for r in first.collect()] == [7]
@@ -143,7 +143,7 @@ def test_state_partitions_follow_the_input_rows():
 def _state_partition_dirs(prefix: str) -> list[str]:
     """The state-partition directories of the last replay under ``prefix``
     (one per partition, next to the operator's ``_metadata``)."""
-    ck = [d for d in MAT._DERIVED_DIRS if os.path.basename(d).startswith(f"ck_{prefix}_")][-1]
+    ck = [d for d in PIO._SCRATCH_DIRS if os.path.basename(d).startswith(f"ck_{prefix}_")][-1]
     return sorted(p for p in os.listdir(os.path.join(ck, "state", "0")) if p.isdigit())
 
 
