@@ -1,83 +1,64 @@
 """Per-round benchmark: times the catalog (or named entries) at $SPARK_GRAFT_SF_DIR.
 
 Each query is materialized with a noop write (full execution, no driver
-collect) after one synthetic warm-up job (``_warmup``) to exclude
-JVM/session startup from per-query numbers.
-
-TWO passes with the cache state explicit, so round-over-round comparisons
-are like-for-like (the r4→r5 bench mixed a cold profile with an
-all-caches-warm one):
+collect) after one synthetic warm-up job (``_warmup``) that keeps
+JVM/session startup out of per-query numbers. Three profiles, each with
+its cache state explicit:
 
 - **cold**: SPARK_GRAFT_MODEL_DIR is redirected to a fresh temp dir, so no
-  persisted model / derived-table / centroid / recommendation cache exists
-  — every query pays its full first-session cost. Reported as ``queries``
-  / ``value`` (the primary, round-comparable numbers).
-- **warm**: the same catalog re-run in the SAME process — persisted
-  artifacts plus in-process memos (session-scoped derived-table paths,
-  fingerprint memos), i.e. the steady-state serving shape of a long-lived
-  session, which is strictly warmer than a fresh second session would be
-  (reference ml_models.py:197-210 is the cross-session analogue). Reported
-  as ``queries_warm`` / ``value_warm``.
-- **warm_fresh**: the catalog run ONCE MORE in a SUBPROCESS — a fresh
-  JVM + Python session against the persisted artifacts the cold pass
-  published, with no in-process memos (the parent JVM is stopped first so
-  the child isn't measured under a second idle driver heap). This is the
-  real second-session serving profile (the number the in-process warm
-  pass could only caveat); reported as ``queries_warm_fresh`` /
-  ``value_warm_fresh``. Like the cold pass it is ALWAYS single-shot —
-  repeats would populate the in-process state this profile excludes. Set
-  ``SPARK_GRAFT_BENCH_FRESH=0`` to skip it.
+  persisted model or derived table exists and every query pays its full
+  first-session cost. Reported as ``queries`` / ``value`` (the primary,
+  round-comparable numbers).
+- **warm**: the same catalog re-run in the SAME process, over the
+  persisted artifacts and the in-process memos: the steady state of a
+  long-lived session. Reported as ``queries_warm`` / ``value_warm``.
+- **warm_fresh**: the catalog run once more in a SUBPROCESS (fresh JVM and
+  Python session, parent JVM stopped first) against the artifacts the cold
+  pass published: the second-session serving profile (the reference's
+  ml_models.py:197-210). Reported as ``queries_warm_fresh`` /
+  ``value_warm_fresh``. ``SPARK_GRAFT_BENCH_FRESH=0`` skips it.
 
-Prints ONE JSON line, scalar totals at BOTH ends so either truncation
-direction of the driver's bounded tail keeps all three profile totals:
+Prints ONE compact JSON line with the totals at BOTH ends, so either
+truncation direction of the driver's bounded tail keeps all three:
 ``{"metric": ..., "value": cold_total, "unit": "sec", "value_warm": ...,
    "cache_state": ..., "sf": ..., "queries": {...}, "queries_warm": {...},
    "value_warm_fresh": ..., "queries_warm_fresh": {...},
    "totals": {"cold": ..., "warm": ..., "warm_fresh": ...}}``
 
-Telemetry (cold pass; ``bench telemetry: {name: {"spill_bytes",
-"peak_exec_mem", "shuffle_write_bytes", "stages", "task_time_ms",
-"compiles"}, ...}`` on stderr) sums shuffle spill, executor task time and
-shuffle write, and takes max peak-execution-memory over each entry's
-completed stages via the status REST API — the fits-at-the-next-SF signal
-a timing alone can't give (task_time_ms / wall additionally says how
-data-parallel an entry is, the core-scaling signal). ``compiles`` is the
-number of generated classes Spark compiled while the entry ran (the
-CodegenMetrics compilation count); the warm pass reports it too, on a
-``bench telemetry warm: {name: {"compiles"}, ...}`` line, so a warm entry
-that recompiles its code on every call is visible. Both counts are
-wall-clock windows: background fits running beside an entry are billed to
-it.
-
-The telemetry map is emitted as its OWN labelled line on **stderr**, as
-the driver records a bounded tail of the stdout line, and at 72 entries the
-per-entry telemetry alone pushed the three per-query maps out of that
-window (r13: the round-over-round comparison silently failed because the
-stored tail of the r12 line starts mid-JSON). Every timing key — ``queries``
-/ ``queries_warm`` / ``queries_warm_fresh``, the scalars, and the
-``totals`` trailer — is unchanged; the timing methodology is untouched.
-The stdout line is also serialized compactly (no separator spaces) for the
-same reason.
+Telemetry rides its own labelled stderr lines, which keeps the stdout
+line's tail free for the three timing maps. ``bench telemetry: {name:
+{"spill_bytes", "peak_exec_mem", "shuffle_write_bytes", "stages",
+"task_time_ms", "jobs", "compiles"}, ..., "background": {"stages",
+"fits"}, "unclaimed": {"stages"}}`` bills each stage of the cold pass to
+its owner with ``perfbench/tracing.attribute``, the traced benchmark's
+rule: a stage in the background-fit pool goes to ``background`` (split by
+its ``fit:<artifact>`` job group), one of an entry's job group to that
+entry, one of a streaming run to the entry that started the run, and the
+rest to ``unclaimed``. Per entry it sums spill, executor task time and
+shuffle write, takes the max peak execution memory and counts stages and
+jobs, read from the status REST API: whether the entry still fits at the
+next SF, and (task_time_ms / wall) how data-parallel it is. ``compiles``
+counts the generated classes Spark compiled while the entry ran
+(CodegenMetrics); it is a JVM-wide window, so a background fit compiling
+beside an entry is counted on it. ``bench telemetry warm: {name:
+{"compiles"}, ...}`` shows a warm entry that recompiles on every call.
 
 ``SPARK_GRAFT_BENCH_REPEATS=N`` (default 1) re-times each WARM-pass query
-N times and reports the per-query MINIMUM — the standard ambient-load
-filter (round-3's +18% "regression" was machine noise). The COLD pass
-always runs each query exactly once: repeats there would hit the caches
-repeat 1 just published, silently turning the headline cold numbers warm.
+N times and reports the per-query MINIMUM, the ambient-load filter. The
+cold and warm_fresh passes always run each query once: a repeat would hit
+the caches or memos the first run left, turning the numbers warm.
 
 Usage::
 
     python bench.py [ENTRY ...] [--stages] [--explain DIR]
 
-- ``ENTRY ...`` restricts all three profiles (cold, warm, warm_fresh — the
-  fresh child gets the same subset) to the named catalog entries; with no
-  names the whole catalog runs and the output is the round artifact.
-- ``--stages`` prints each entry's cold-pass stages on stderr, top 12 by
-  executor run time (task count, shuffle bytes, stage name), so the
-  expensive stage is identifiable without the UI.
+- ``ENTRY ...`` restricts all three profiles to the named catalog entries;
+  with no names the whole catalog runs and the output is the round artifact.
+- ``--stages`` prints the cold-pass stages billed to each entry on stderr,
+  top 12 by executor run time (task count, shuffle bytes, stage name).
 - ``--explain DIR`` writes ``explain("formatted")`` of the DataFrame the
   cold pass just timed to ``DIR/<entry>.txt``, after its timed window
-  closes — building a plan a second time would warm the cold numbers,
+  closes: building a plan a second time would warm the cold numbers,
   because many plans do eager work (fits, derived tables) while built.
 
 A subset at a bigger fixture is the heavy-family slope probe; two subset
@@ -94,6 +75,7 @@ import re
 import sys
 import tempfile
 import time
+from collections import Counter
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -102,81 +84,97 @@ def _materialize(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-class _StageTelemetry:
-    """Per-entry shuffle-spill / peak-execution-memory capture via the
-    Spark status REST API (the same numbers the UI's stage page shows).
-    At a fixed SF a timing says "fast here"; spill + peak memory say
-    whether the entry still FITS at the next SF — the distinction the
-    100 TB design claim rests on. Degrades to absent on any REST failure
-    (UI off, port probe fails): telemetry must never cost a measured
-    pass."""
+def _tracing():
+    """``perfbench/tracing``, imported only by a pass that bills its stages,
+    so ``perfbench/run.py``'s ``from bench import _warmup`` and the
+    warm_fresh child import nothing from ``perfbench/``."""
+    here = os.path.join(os.path.dirname(os.path.abspath(__file__)), "perfbench")
+    if here not in sys.path:
+        sys.path.insert(0, here)
+    import tracing
 
-    def __init__(self, spark):
-        self._base = None
-        self._seen: set = set()
-        try:
-            ui = spark.sparkContext._jsc.sc().uiWebUrl()
-            if ui.isDefined():
-                app_id = spark.sparkContext.applicationId
-                self._base = f"{ui.get()}/api/v1/applications/{app_id}"
-                self._snapshot()  # baseline: stages from warm-up don't count
-        except Exception:
-            self._base = None
+    return tracing
 
-    def _stages(self, status: str = "complete") -> list:
-        import urllib.request
 
-        with urllib.request.urlopen(f"{self._base}/stages?status={status}", timeout=10) as r:
-            return json.loads(r.read())
+class _Billing:
+    """Bills one pass's stages as the module docstring says: each entry
+    runs under the job group ``group_label("cold", entry)``, a listener maps
+    each streaming run to the entry that started it, and only stages
+    submitted after the pass began count."""
 
-    def _drain(self, deadline_s: float = 2.0) -> bool:
-        """Poll until no ACTIVE stages remain (bounded). The query action
-        has returned, but listener-bus lag can leave its trailing stages
-        un-completed at sample time — without the drain those stages'
-        spill/memory would be attributed to the NEXT entry's delta.
-        Returns False when the deadline expired with stages still active —
-        the caller records that, so a misattributed sample is identifiable
-        instead of silent (heavy entries can lag the listener bus > 2 s)."""
-        end = time.perf_counter() + deadline_s
-        while time.perf_counter() < end:
-            if not self._stages("active"):
-                return True
-            time.sleep(0.05)
-        return False
+    def __init__(self, spark, tracing):
+        self.spark, self.tracing = spark, tracing
+        rest = tracing.Rest(spark)
+        rest.settle()
+        jobs = rest.get("/jobs")
+        self.first_job = max((j["jobId"] for j in jobs), default=-1) + 1
+        self.first_stage = max((s for j in jobs for s in j["stageIds"]), default=-1) + 1
+        self.tracer = tracing.Tracer("bench")
+        self.listener = self.tracer.listener()
+        spark.streams.addListener(self.listener)
 
-    def _snapshot(self) -> list:
-        new = []
-        for s in self._stages():
-            key = (s.get("stageId"), s.get("attemptId"))
-            if key not in self._seen:
-                self._seen.add(key)
-                new.append(s)
-        return new
-
-    def sample(self) -> tuple[dict, list] | None:
-        """Metrics summed over the stages completed since the last call,
-        and those stages."""
-        if self._base is None:
+    @classmethod
+    def open(cls, spark) -> "_Billing | None":
+        """None when the status REST API is unreachable (UI off): telemetry
+        must never cost a measured pass."""
+        if spark.sparkContext.uiWebUrl is None:
             return None
         try:
-            drained = self._drain()
-            new = self._snapshot()
-        except Exception:
-            self._base = None  # one failure disables; don't retry per query
+            return cls(spark, _tracing())
+        except (OSError, ValueError) as exc:
+            print(f"bench telemetry skipped: {exc!r}", file=sys.stderr)
             return None
-        return {
-            **({} if drained else {"drain_timeout": True}),
-            "spill_bytes": sum(
-                s.get("memoryBytesSpilled", 0) + s.get("diskBytesSpilled", 0) for s in new
-            ),
-            "peak_exec_mem": max((s.get("peakExecutionMemory", 0) for s in new), default=0),
-            "shuffle_write_bytes": sum(s.get("shuffleWriteBytes", 0) for s in new),
-            "stages": len(new),
-            # summed executor task time: task_time / (wall × cores) is the
-            # core-utilization signal a wall clock alone can't give — a
-            # data-parallel entry approaches 1.0, a fixed-overhead entry ~0
-            "task_time_ms": sum(s.get("executorRunTime", 0) for s in new),
-        }, new
+
+    def enter(self, name: str) -> None:
+        self.tracer.entry_label = self.tracing.group_label("cold", name)
+        self.spark.sparkContext.setJobGroup(self.tracer.entry_label, name)
+
+    def close(self, names, telemetry: dict, stages: bool) -> None:
+        """Fills ``telemetry``; on a REST failure leaves it as it was."""
+        tracing, runs = self.tracing, self.tracer.stream_runs
+        self.spark.sparkContext._jsc.clearJobGroup()
+        self.spark.streams.removeListener(self.listener)
+        try:
+            rest = tracing.Rest(self.spark)
+            rest.settle()
+            # stages first: then every listed stage's job is listed too
+            all_stages = rest.get("/stages")
+            jobs = rest.get("/jobs")
+        except (OSError, ValueError) as exc:
+            print(f"bench telemetry skipped: {exc!r}", file=sys.stderr)
+            return
+        # a background fit may still run: its pending stages did no work yet
+        new = [
+            s for s in all_stages
+            if s["stageId"] >= self.first_stage and s.get("status") != "PENDING"
+        ]
+        owners = tracing.attribute(jobs, new, runs)
+        new_jobs = [j for j in jobs if j["jobId"] >= self.first_job]
+        jobs_of = Counter(tracing.job_owners(new_jobs, runs).values())
+        for name in names:
+            label = tracing.group_label("cold", name)
+            billed = owners.get(label, [])
+            telemetry[name] = {
+                "spill_bytes": sum(
+                    s.get("memoryBytesSpilled", 0) + s.get("diskBytesSpilled", 0) for s in billed
+                ),
+                "peak_exec_mem": max((s.get("peakExecutionMemory", 0) for s in billed), default=0),
+                "shuffle_write_bytes": sum(s.get("shuffleWriteBytes", 0) for s in billed),
+                "stages": len(billed),
+                "task_time_ms": sum(s.get("executorRunTime", 0) for s in billed),
+                "jobs": jobs_of[label],
+            }
+            if stages:
+                _print_stages(name, billed)
+        # a stage's group is its first job's, as in ``attribute``
+        group_of = {
+            sid: j.get("jobGroup")
+            for j in sorted(new_jobs, key=lambda j: -j["jobId"])
+            for sid in j["stageIds"]
+        }
+        fits = Counter(group_of.get(s["stageId"]) for s in owners.get("background", []))
+        telemetry["background"] = {"stages": sum(fits.values()), "fits": dict(fits)}
+        telemetry["unclaimed"] = {"stages": len(owners.get("unclaimed", []))}
 
 
 def _print_stages(name: str, stages: list) -> None:
@@ -222,13 +220,15 @@ def _time_catalog(
     explain_dir: str | None = None,
 ) -> dict[str, float]:
     """Per-entry wall seconds (min over ``repeats``). With ``telemetry``,
-    fills it per entry from the stage REST API and, with ``stages``, prints
-    each entry's slowest stages; with ``compiles``, fills it with each
+    bills the pass's stages into it and, with ``stages``, prints each
+    entry's slowest billed stages; with ``compiles``, fills it with each
     entry's compile count over its repeats; with ``explain_dir``, writes
     the plan of each DataFrame it timed there."""
     timings: dict[str, float] = {}
-    tel = _StageTelemetry(spark) if telemetry is not None else None
+    billing = _Billing.open(spark) if telemetry is not None else None
     for name, fn in sorted(queries.items()):
+        if billing is not None:
+            billing.enter(name)
         compiled = _compile_count(spark) if compiles is not None else 0
         best = None
         for _ in range(repeats):
@@ -247,12 +247,8 @@ def _time_catalog(
         timings[name] = round(best, 3)
         if compiles is not None:
             compiles[name] = _compile_count(spark) - compiled
-        if tel is not None:
-            sampled = tel.sample()
-            if sampled is not None:
-                telemetry[name], new_stages = sampled
-                if stages:
-                    _print_stages(name, new_stages)
+    if billing is not None:
+        billing.close(sorted(queries), telemetry, stages)
     return timings
 
 
@@ -289,11 +285,7 @@ def _child_main(sf_dir: str, entries) -> None:
     queries = _select(entry_mod.queries(), entries)
     spark = get_spark("mdmp-bench-fresh", **{"spark.ui.enabled": "false"})
     _warmup(spark)
-    # ALWAYS single-shot, like the cold pass and for the same reason:
-    # repeat 1 populates the in-process memos this profile exists to
-    # exclude, so a min-of-N here would silently report in-process-warm
-    # numbers as "fresh". warm (min-of-N) vs warm_fresh (single-shot) is
-    # therefore an asymmetric comparison by design, documented above.
+    # single-shot: a repeat would be served by the memos this profile excludes
     timings = _time_catalog(spark, queries, sf_dir, repeats=1)
     print(json.dumps(timings))
 
@@ -389,8 +381,16 @@ def main() -> None:
     if args.explain is not None:
         os.makedirs(args.explain, exist_ok=True)
     # UI on: the stage REST API is the telemetry source (spill/peak-mem per
-    # entry); the listener overhead is noise at catalog granularity
-    spark = get_spark("mdmp-bench", **{"spark.ui.enabled": "true"})
+    # entry); the listener overhead is noise at catalog granularity. A full
+    # sf0.1 cold pass runs ~2,400 stages, past the UI's default 1,000 kept.
+    spark = get_spark(
+        "mdmp-bench",
+        **{
+            "spark.ui.enabled": "true",
+            "spark.ui.retainedJobs": "1000000",
+            "spark.ui.retainedStages": "1000000",
+        },
+    )
     _warmup(spark)
 
     repeats = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "1")))
@@ -422,9 +422,7 @@ def main() -> None:
         "queries": cold,
         "queries_warm": warm,
     }
-    # stderr: the recorded tail of the stdout line must fit the three
-    # per-query timing maps + totals; the per-entry telemetry (~8 KB) is
-    # diagnostic and rides its own labelled lines.
+    # stderr, so the stdout line's recorded tail keeps the timing maps
     print(
         "bench telemetry: " + json.dumps(telemetry, separators=(",", ":")),
         file=sys.stderr,

@@ -12,9 +12,10 @@ This module is the process-wide single-flight for those fits. Each
 
 - :func:`prefetch` — queue the cell on two background worker threads.
   The worker labels the cell's Spark jobs with
-  ``spark.scheduler.pool=mdmp_background_fits``. Scheduling stays FIFO;
-  the label exists so a stage listing can bill the work to the
-  background fits instead of to whichever entry is running.
+  ``spark.scheduler.pool=mdmp_background_fits`` and the job group
+  ``fit:<artifact>``. Scheduling stays FIFO; the labels exist so a stage
+  listing can bill the work to its fit instead of to whichever entry is
+  running.
 - :func:`shared` — the consumer path: runs the cell INLINE and unlabelled
   if no worker has started it yet (a consumer never waits behind other
   keys queued on the pool), or joins the in-flight run.
@@ -104,10 +105,12 @@ def _run_labelled(cell: _Cell) -> None:
         _run(cell)
         return
     sc.setLocalProperty("spark.scheduler.pool", BACKGROUND_POOL)
+    sc.setJobGroup(f"fit:{cell.key[0]}", "background fit")
     try:
         _run(cell)
     finally:
         sc.setLocalProperty("spark.scheduler.pool", None)
+        sc._jsc.clearJobGroup()
 
 
 def prefetch(key: tuple, fn) -> None:

@@ -224,14 +224,6 @@ def has_cached_model(name: str, version: str) -> bool:
     )
 
 
-def has_cached_models(names: list[str], version: str) -> bool:
-    """Plural form of the reference's ``has_cached_models`` check
-    (ml_models.py:197-210 requires every model of the grid to be present
-    before serving from cache): True only when ALL named artifacts exist for
-    this data version."""
-    return all(has_cached_model(n, version) for n in names)
-
-
 def save_model(
     model: PipelineModel,
     metrics: dict[str, float],

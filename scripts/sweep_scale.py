@@ -28,13 +28,11 @@ Run:
         python scripts/build_sf1.py                 # sf5
     SPARK_GRAFT_SF_DIR=/tmp/mdmp_sf5 python scripts/sweep_scale.py
 
-Knobs: SPARK_GRAFT_EWMA_USER_MOD (default 10; set 0/1 to force the full
-twin), SPARK_GRAFT_SKIP_RECOUNT=1 to skip the dedup recount child (when
-it has already been run standalone this round),
-SPARK_GRAFT_SWEEP_SEGMENTS (default 4 fresh subprocesses — a
-single-process sf5 run OOMs the driver heap from accumulated session
-state), SPARK_GRAFT_SWEEP_PARALLEL (default 2 concurrent segments; each
-child's DuckDB ceiling is divided by this).
+The sweep runs in ``SEGMENTS`` fresh subprocesses (a single-process sf5
+run OOMs the driver heap from accumulated session state), ``PARALLEL`` of
+them at once, each child's DuckDB ceiling divided by ``PARALLEL``; the
+ewma tier samples ``user_id % EWMA_USER_MOD = 0``, and the dedup recount
+child always runs last.
 
 Second standing gate — the multi-executor sweep (r11 ran it bespoke):
 
@@ -64,6 +62,9 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 DOWNGRADED = ("ewma_trend", "dedup_reports")
+EWMA_USER_MOD = 10
+SEGMENTS = 4
+PARALLEL = 2
 
 
 def check_ewma_sampled(spark, con, sf_dir: str, user_mod: int) -> list[str]:
@@ -162,44 +163,34 @@ def main() -> None:
         sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     else:
         sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/tmp/mdmp_sf5")
-    user_mod = int(os.environ.get("SPARK_GRAFT_EWMA_USER_MOD", "10"))
-    n_segments = max(1, int(os.environ.get("SPARK_GRAFT_SWEEP_SEGMENTS", "4")))
     t0 = time.monotonic()
 
     import __spark_entry__ as entry_mod
 
     downgraded = () if lc_mode else DOWNGRADED
     names = [q for q in entry_mod.queries() if q not in downgraded]
-    size = (len(names) + n_segments - 1) // n_segments
+    size = (len(names) + SEGMENTS - 1) // SEGMENTS
     segments = [names[i : i + size] for i in range(0, len(names), size)]
     results: dict[str, list[str]] = {name: [] for name in names}
-    # SPARK_GRAFT_SWEEP_PARALLEL (default 2): segments are independent
-    # processes, so running P at once divides the wall time by ~P on an
-    # otherwise-idle host (the r11 sequential sf5 run measured 87 min of
-    # main sweep — parallel 2 brings the whole gate under the hour). Each
-    # child's DuckDB memory ceiling is divided by P so concurrent twins
-    # can't jointly outgrow the box; per-pid temp dirs already isolate
-    # their spill accounting.
-    par = max(1, int(os.environ.get("SPARK_GRAFT_SWEEP_PARALLEL", "2")))
-    if par > 1:
-        from concurrent.futures import ThreadPoolExecutor
+    # segments are independent processes, so running PARALLEL at once
+    # divides the wall time by ~PARALLEL on an otherwise-idle host (the r11
+    # sequential sf5 run measured 87 min of main sweep; two at once bring
+    # the whole gate under the hour). Each child's DuckDB memory ceiling is
+    # divided by PARALLEL so concurrent twins can't jointly outgrow the box;
+    # per-pid temp dirs already isolate their spill accounting. The divided
+    # ceiling rides each CHILD's env only: the in-process ewma tier after
+    # the segments runs alone and keeps the full ceiling (ADVICE r11).
+    from concurrent.futures import ThreadPoolExecutor
 
-        # divided ceiling rides each CHILD's env only — mutating the
-        # parent's os.environ also shrank the post-segment in-process
-        # ewma-tier duck_connection (the heaviest DuckDB recursion, which
-        # runs ALONE and deserves the full ceiling) (ADVICE r11)
-        child_mem = max(8, int(os.environ.get("SPARK_GRAFT_DUCK_MEM_GB", "48")) // par)
-        child_env = {**os.environ, "SPARK_GRAFT_DUCK_MEM_GB": str(child_mem)}
-        with ThreadPoolExecutor(max_workers=par) as pool:
-            futs = [
-                pool.submit(run_segment, seg, sf_dir, i, len(segments), child_env)
-                for i, seg in enumerate(segments)
-            ]
-            for fut in futs:
-                results.update(fut.result())
-    else:
-        for i, seg in enumerate(segments):
-            results.update(run_segment(seg, sf_dir, i, len(segments)))
+    child_mem = max(8, int(os.environ.get("SPARK_GRAFT_DUCK_MEM_GB", "48")) // PARALLEL)
+    child_env = {**os.environ, "SPARK_GRAFT_DUCK_MEM_GB": str(child_mem)}
+    with ThreadPoolExecutor(max_workers=PARALLEL) as pool:
+        futs = [
+            pool.submit(run_segment, seg, sf_dir, i, len(segments), child_env)
+            for i, seg in enumerate(segments)
+        ]
+        for fut in futs:
+            results.update(fut.result())
 
     t_main = time.monotonic() - t0
     t_ewma = 0.0
@@ -212,21 +203,12 @@ def main() -> None:
 
         spark = get_spark("mdmp-scale-sweep", **{"spark.ui.enabled": "false"})
         con = duck_connection(sf_dir)
-        if user_mod > 1:
-            results["ewma_trend[sampled]"] = check_ewma_sampled(spark, con, sf_dir, user_mod)
-        else:
-            from market_data_mining_project_spark.plans import events_temporal as ET
-            from tests.oracle_harness import compare
-
-            results["ewma_trend"] = compare(
-                "ewma_trend", ET.q_ewma_trend(spark, sf_dir), con.sql(ET.SQL_EWMA_TREND)
-            )
+        results["ewma_trend[sampled]"] = check_ewma_sampled(spark, con, sf_dir, EWMA_USER_MOD)
         con.close()
         t_ewma = time.monotonic() - t0 - t_main
-        if os.environ.get("SPARK_GRAFT_SKIP_RECOUNT") != "1":
-            # run LAST (its child Spark session competes for the host)
-            spark.stop()
-            results["dedup_reports[recount]"] = check_dedup_recount(sf_dir)
+        # run LAST (its child Spark session competes for the host)
+        spark.stop()
+        results["dedup_reports[recount]"] = check_dedup_recount(sf_dir)
 
     failed = 0
     for name, errs in sorted(results.items()):
@@ -247,7 +229,7 @@ def main() -> None:
                 "wall_sec": round(wall, 1),
                 "main_sweep_sec": round(t_main, 1),
                 "ewma_tier_sec": round(t_ewma, 1),
-                "ewma_user_mod": user_mod,
+                "ewma_user_mod": EWMA_USER_MOD,
             }
         )
     )

@@ -199,26 +199,32 @@ def test_unconsumed_prefetch_does_not_block_exit():
 
 
 def _pool_probe(spark, ran: threading.Event | None = None):
+    """A cell returning the (scheduling pool, job group) its job ran under."""
+
     def probe():
         spark.range(8).count()
-        pool = spark.sparkContext.getLocalProperty("spark.scheduler.pool")
+        sc = spark.sparkContext
+        labels = (sc.getLocalProperty("spark.scheduler.pool"),
+                  sc.getLocalProperty("spark.jobGroup.id"))
         if ran is not None:
             ran.set()
-        return pool
+        return labels
 
     return probe
 
 
 def test_prefetched_cell_carries_the_background_label(spark):
+    """A worker runs the cell in the background pool and under its fit's
+    own job group, so a stage listing can bill each stage to its fit."""
     ran = threading.Event()
     k = _key("label")
     fit_pool.prefetch(k, _pool_probe(spark, ran))
     assert ran.wait(60)  # a worker ran it, so shared only joins
-    assert fit_pool.shared(k, _pool_probe(spark)) == "mdmp_background_fits"
+    assert fit_pool.shared(k, _pool_probe(spark)) == ("mdmp_background_fits", "fit:test")
 
 
 def test_inline_consumer_runs_unlabelled(spark):
-    assert fit_pool.shared(_key("inline-label"), _pool_probe(spark)) is None
+    assert fit_pool.shared(_key("inline-label"), _pool_probe(spark))[0] is None
     assert spark.sparkContext.getLocalProperty("spark.scheduler.pool") is None
 
 

@@ -165,41 +165,143 @@ def test_fresh_warm_pass_hands_the_entry_subset_to_the_child(monkeypatch):
     assert seen["env"]["SPARK_GRAFT_MODEL_DIR"] == "/cache"
 
 
+def _perfbench_entries() -> list[str]:
+    """The catalog entries the benchmark under ``perfbench/`` times."""
+    spec = importlib.util.spec_from_file_location(
+        "perfbench_workloads", os.path.join(_REPO, "perfbench", "workloads.py")
+    )
+    mod = importlib.util.module_from_spec(spec)
+    assert spec.loader is not None
+    spec.loader.exec_module(mod)
+    return sorted(e for w in mod.WORKLOADS.values() for e in w["entries"])
+
+
 def test_bench_subset_run_with_stages_and_explain(sf_dir, tmp_path):
-    """One entry end to end: the stdout maps hold only that entry, the plan
-    the cold pass timed is on disk, and stderr carries its stage lines and
-    its compile counts for both passes (a fresh JVM compiles on the cold
-    pass)."""
+    """The benchmark's 10 entries end to end: the stdout maps hold only
+    them, the plans the cold pass timed are on disk, and stderr carries
+    each entry's billed stage lines and its compile counts for both passes
+    (a fresh JVM compiles on the cold pass). Every cold stage has an owner,
+    and at sf0.001 no entry's foreground stage or job count may grow past
+    ``tests/bench_stage_counts_sf0001.json``: a change that lowers a count
+    lowers it there. The core count is pinned, as it sets the shuffle and
+    state-store partition counts."""
+    names = _perfbench_entries()
     env = dict(
         os.environ,
         SPARK_GRAFT_SF_DIR=sf_dir,
         SPARK_GRAFT_BENCH_FRESH="0",
+        SPARK_GRAFT_CPUS="4",
         SPARK_DRIVER_MEMORY="2g",
     )
     explain_dir = tmp_path / "plans"
     proc = subprocess.run(
-        [sys.executable, os.path.join(_REPO, "bench.py"), "category_rollup",
+        [sys.executable, os.path.join(_REPO, "bench.py"), *names,
          "--stages", "--explain", str(explain_dir)],
-        env=env, cwd=str(tmp_path), capture_output=True, text=True, timeout=600,
+        env=env, cwd=str(tmp_path), capture_output=True, text=True, timeout=900,
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
     out = json.loads(proc.stdout.strip().splitlines()[-1])
-    assert set(out["queries"]) == {"category_rollup"}
-    assert set(out["queries_warm"]) == {"category_rollup"}
-    plan = (explain_dir / "category_rollup.txt").read_text()
-    assert "== Physical Plan ==" in plan
+    assert set(out["queries"]) == set(names)
+    assert set(out["queries_warm"]) == set(names)
     lines = proc.stderr.splitlines()
-    header = [i for i, ln in enumerate(lines) if ln.startswith("bench stages category_rollup: ")]
-    assert header, proc.stderr[-3000:]
-    assert lines[header[0] + 1].lstrip().startswith("stage ")
+    for name in names:
+        assert "== Physical Plan ==" in (explain_dir / f"{name}.txt").read_text()
+        header = [i for i, ln in enumerate(lines) if ln.startswith(f"bench stages {name}: ")]
+        assert header, proc.stderr[-3000:]
+        assert lines[header[0] + 1].lstrip().startswith("stage ")
     telemetry = {
         label: json.loads(ln[len(label):])
         for ln in lines
         for label in ("bench telemetry: ", "bench telemetry warm: ")
         if ln.startswith(label)
     }
-    assert telemetry["bench telemetry: "]["category_rollup"]["compiles"] > 0
-    assert telemetry["bench telemetry warm: "]["category_rollup"]["compiles"] >= 0
+    cold = telemetry["bench telemetry: "]
+    assert cold["category_rollup"]["compiles"] > 0
+    assert all(telemetry["bench telemetry warm: "][n]["compiles"] >= 0 for n in names)
+    # none of these entries starts a background fit
+    assert cold["background"]["stages"] == cold["unclaimed"]["stages"] == 0
+    if os.path.basename(os.path.normpath(sf_dir)) == "sf0.001":
+        with open(os.path.join(_REPO, "tests", "bench_stage_counts_sf0001.json")) as fh:
+            pinned = json.load(fh)["entries"]
+        grew = {
+            n: {k: [pinned[n][k], cold[n][k]] for k in ("stages", "jobs")}
+            for n in names
+            if any(cold[n][k] > pinned[n][k] for k in ("stages", "jobs"))
+        }
+        assert not grew, f"cold counts grew (pinned, now): {grew}"
+
+
+_BYSTANDER = r"""
+import json, sys, threading
+
+sys.path.insert(0, sys.argv[1])
+import bench
+from pyspark.sql import functions as F
+from market_data_mining_project_spark.ml import fit_pool
+from market_data_mining_project_spark.session import get_spark
+
+spark = get_spark("bystander", **{"spark.ui.enabled": "true"})
+b_running, fit_done = threading.Event(), threading.Event()
+
+
+def two_stages(s):
+    return s.range(0, 1000, 1, 4).groupBy((F.col("id") % 7).alias("k")).count()
+
+
+def fit():
+    assert b_running.wait(60)
+    bench._materialize(two_stages(spark))
+    fit_done.set()
+
+
+def a_prefetcher(s, sf):
+    fit_pool.prefetch(("bystander_fit", "v1", "root"), fit)
+    return s.range(4)
+
+
+def b_bystander(s, sf):
+    b_running.set()
+    assert fit_done.wait(60)  # the fit's stages all run inside B's window
+    return two_stages(s)
+
+
+def billed(queries):
+    telemetry = {}
+    bench._time_catalog(spark, queries, "unused-sf-dir", 1, telemetry=telemetry)
+    return telemetry
+
+
+sweep = billed({"a_prefetcher": a_prefetcher, "b_bystander": b_bystander})
+rest = bench._tracing().Rest(spark)
+rest.settle()
+ran = sum(1 for st in rest.get("/stages") if st["status"] != "SKIPPED")
+alone = billed({"b_bystander": b_bystander})
+fit_alone = billed({"fit": lambda s, sf: two_stages(s)})
+print(json.dumps({"sweep": sweep, "app_stages": ran, "alone": alone, "fit_alone": fit_alone}))
+"""
+
+
+def test_bench_bills_a_background_fit_to_the_fit_not_the_bystander(tmp_path):
+    """Entry A prefetches a two-stage fit that runs only while entry B is
+    running. B is billed what it bills alone, the fit's stages go to
+    ``background`` under the fit's job group, and the owners sum to every
+    stage the app ran."""
+    proc = subprocess.run(
+        [sys.executable, "-c", _BYSTANDER, _REPO],
+        env=dict(os.environ, SPARK_GRAFT_MODEL_DIR=str(tmp_path / "models")),
+        cwd=str(tmp_path), capture_output=True, text=True, timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    got = json.loads(proc.stdout.strip().splitlines()[-1])
+    sweep = got["sweep"]
+    assert sweep["b_bystander"]["stages"] == got["alone"]["b_bystander"]["stages"]
+    assert sweep["b_bystander"]["jobs"] == got["alone"]["b_bystander"]["jobs"]
+    fit_stages = got["fit_alone"]["fit"]["stages"]
+    assert fit_stages >= 2
+    assert sweep["background"]["stages"] >= fit_stages
+    assert sweep["background"]["fits"] == {"fit:bystander_fit": sweep["background"]["stages"]}
+    owned = sum(sweep[n]["stages"] for n in ("a_prefetcher", "b_bystander", "background"))
+    assert owned + sweep["unclaimed"]["stages"] == got["app_stages"]
 
 
 # --- build_sf1.build ----------------------------------------------------------------
