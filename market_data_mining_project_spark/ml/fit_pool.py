@@ -21,8 +21,10 @@ This module is the process-wide single-flight for those fits. Each
   keys queued on the pool), or joins the in-flight run.
 
 Only successes are memoized. A failed run takes its cell out of
-``_CELLS``, so the next :func:`shared` call retries; a consumer that had
-joined the failed run retries at once. A new data version replaces the
+``_CELLS``, so the next :func:`shared` call retries with the ``fn`` it
+passes; a consumer that had joined the failed run retries at once. The
+catalog hands both calls the same body (``plans/analytics_domain._FITS``),
+so a retry reruns the declaration that failed. A new data version replaces the
 cell of the same artifact and cache root, so ``_CELLS`` holds one cell
 per artifact; a queued cell that was replaced before a worker reached it
 never runs on the pool (a consumer still holding it runs it inline).
@@ -33,8 +35,8 @@ fit publishes nothing: the artifact path (``persistence.publish_staged``)
 keeps a half-written model invisible.
 
 What this is NOT: result caching. Every cell's ``fn`` wraps the existing
-``load_or_train`` / metrics-artifact path, so the pool changes WHEN
-independent fits run, never what any entry computes.
+``load_or_train`` / ``load_or_compute_metrics`` path, so the pool changes
+WHEN independent fits run, never what any entry computes.
 """
 
 from __future__ import annotations

@@ -159,7 +159,7 @@ def publish_staged(final: str, write: Callable[[str], None], overwrite: bool) ->
     """The ONE staging-dir publication dance every cross-process artifact
     performs around :func:`atomic_publish`: create a unique sibling staging
     dir, let ``write(staging)`` fill it, publish atomically, remove the
-    staging on ANY failure. save_model / save_metrics_artifact /
+    staging on ANY failure. save_model / load_or_compute_metrics /
     materialize.derived_table all route through here so the
     concurrency-critical cleanup contract (staging suffix, exist_ok
     create, BaseException rm) cannot drift between copies."""
@@ -251,30 +251,34 @@ def load_model(name: str, version: str) -> tuple[PipelineModel, dict[str, float]
     return PipelineModel.load(os.path.join(d, "model")), metrics
 
 
-def save_metrics_artifact(name: str, version: str, payload: dict) -> str:
-    """Persist a metrics-only artifact (no PipelineModel) — the cached
-    metrics surface the reference's training-status API serves without
-    refitting (``ml_models.py:583-594`` polled via ``views.py:3119-3127``).
-    Used for the 16-cell horizon grid, whose catalog output is the metrics
-    table itself: the serving *model* persists separately via
-    ``load_or_train`` and the grid's job is the surface, so caching the
-    JSON avoids paying 16 model writes for artifacts nothing loads.
-    Same atomic staging-rename contract as ``save_model``."""
+def load_or_compute_metrics(name: str, version: str, compute: Callable[[], dict]) -> dict:
+    """A metrics-only artifact (no PipelineModel): served from
+    ``metrics.json`` when the (name, version) artifact exists, else
+    ``compute()``d and published. It is the cached metrics surface the
+    reference's training-status API serves without refitting
+    (``ml_models.py:583-594`` polled via ``views.py:3119-3127``): the
+    16-cell horizon grid, whose catalog output is the metrics table itself
+    (caching the JSON avoids 16 model writes nothing loads), and the IVF
+    centroid table.
+
+    The key is content-addressed, so the publish is first-wins (no
+    delete-then-rename): a concurrent caller's artifact was computed from
+    the same inputs and stays in place, so a reader never finds the
+    directory without its ``metrics.json``."""
+    d = model_dir(name, version)
+    try:
+        with open(os.path.join(d, "metrics.json")) as fh:
+            return json.load(fh)
+    except FileNotFoundError:
+        pass
+    payload = compute()
 
     def write(staging: str) -> None:
         with open(os.path.join(staging, "metrics.json"), "w") as fh:
             json.dump(payload, fh, sort_keys=True)
 
-    return publish_staged(model_dir(name, version), write, overwrite=True)
-
-
-def has_cached_metrics_artifact(name: str, version: str) -> bool:
-    return os.path.isfile(os.path.join(model_dir(name, version), "metrics.json"))
-
-
-def load_metrics_artifact(name: str, version: str) -> dict:
-    with open(os.path.join(model_dir(name, version), "metrics.json")) as fh:
-        return json.load(fh)
+    publish_staged(d, write, overwrite=False)
+    return payload
 
 
 # SparkContext -> {(cache root, name): (artifact dir, path_signature,

@@ -485,13 +485,7 @@ def ivf_assign(
     """
     from market_data_mining_project_spark.ml import persistence as PERSIST
 
-    name = f"ivf_centroids_k{n_cells}_seed{seed}_iter{max_iter}"
-    centers: list[list[float]] | None = None
-    if cache_version is not None and PERSIST.has_cached_metrics_artifact(
-        name, cache_version
-    ):
-        centers = PERSIST.load_metrics_artifact(name, cache_version)["centroids"]
-    if centers is None:
+    def fit() -> dict:
         from pyspark.ml.clustering import KMeans
         from pyspark.ml.functions import array_to_vector
 
@@ -502,9 +496,13 @@ def ivf_assign(
             k=n_cells, seed=seed, maxIter=max_iter,
             featuresCol="features", predictionCol="cell",
         )
-        centers = [[float(x) for x in c] for c in km.fit(featurized).clusterCenters()]
-        if cache_version is not None:
-            PERSIST.save_metrics_artifact(name, cache_version, {"centroids": centers})
+        return {"centroids": [[float(x) for x in c] for c in km.fit(featurized).clusterCenters()]}
+
+    if cache_version is None:
+        centers = fit()["centroids"]
+    else:
+        name = f"ivf_centroids_k{n_cells}_seed{seed}_iter{max_iter}"
+        centers = PERSIST.load_or_compute_metrics(name, cache_version, fit)["centroids"]
     model = CentroidModel(centers)
     return assign_cells(corpus, centers, vec_col, id_col, keep_cols=keep_cols), model
 

@@ -7,6 +7,8 @@ l_orderkey≈basket_id, p_brand≈department, day = days since 1995-01-01.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -1189,14 +1191,10 @@ JOIN dept d ON l.o_custkey = d.o_custkey AND l.p_brand = d.p_brand
 """
 
 
-def _horizon_mlp_trainer(spark: SparkSession, sf_dir: str):
-    """THE trainer behind the shared 'horizon_mlp_90d' artifact (the
-    ``_churn_trainer`` pattern): one definition, consumed both by the
-    prefetching fit pool and by ``q_horizon_predictions`` itself, so the
-    two paths cannot drift apart on hyperparameters. The bounded stratified
-    sample is drawn from the materialized feature frame with a
-    deterministic hash order and coalesce(4) — byte-identical input frame
-    and partitioning to the former inline fit, hence the identical model.
+def _train_horizon_mlp(spark: SparkSession, sf_dir: str):
+    """The serving horizon MLP behind the 'horizon_mlp_90d' artifact
+    (``_FITS``), trained on a bounded stratified sample of the
+    materialized feature frame (deterministic hash order, coalesce(4)).
 
     Bounded training set, like the reference's sample_size=100000 with
     per-month-bucket stratification (ml_models.py:246-320): cap rows per
@@ -1209,74 +1207,20 @@ def _horizon_mlp_trainer(spark: SparkSession, sf_dir: str):
     from market_data_mining_project_spark.ml.pipelines import train_classifier
     from market_data_mining_project_spark.operators.relational import stratified_sample
 
-    def train():
-        # checkpointed, not cached: the sample must survive clearCache()
-        # while a background fit reads it, or every LBFGS pass re-runs the
-        # sample plan
-        feats = truncate_lineage(
-            stratified_sample(
-                _horizon_features_mat(spark, sf_dir),
-                bucket=F.expr("day div 30"),
-                per_bucket=250,
-                order_key=F.md5(F.concat_ws("|", "o_custkey", "p_brand", "day")),
-            ).coalesce(4)
-        )
-        return train_classifier(
-            feats, HORIZON_FEATURE_COLS, "buy_90d", kind="neural_network",
-            overrides={"maxIter": 25},
-        )
-
-    return train
-
-
-def _fit_prefetch(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """Submit every independent catalog model fit to the shared fit pool
-    (optimization guide §2.6 — overlap independent jobs): the churn GBT,
-    the horizon MLP, the 16-cell horizon grid and the implicit-ALS factor
-    model are independent estimators over independently-materialized
-    inputs, yet a catalog sweep paid them strictly serially, one per
-    consuming entry (~60 s of the sf0.1 cold pass). Every ML entry calls
-    this on entry, so a sweep's FIRST ML consumer starts the whole set and
-    the later consumers find their artifact fitted (or in flight) instead
-    of paying it inline. Single-query sessions still compute exactly their
-    own result — the extra fits land in the same load-or-train cache any
-    later consumer would have populated, or are abandoned if the process
-    exits first.
-
-    Results are NOT cached across runs: each fn wraps the existing
-    ``load_or_train`` / metrics-artifact contract (artifact = the model,
-    keyed on the data fingerprint; scoring recomputes from parquet).
-    Single-flight keys carry (artifact, data version, cache root) so test
-    sandboxes redirecting ``SPARK_GRAFT_MODEL_DIR`` stay isolated exactly
-    as the on-disk cache already is, and each fit runs pinned to that root,
-    so one still in flight when the sandbox ends publishes into the
-    sandbox, not the default cache. Submission order = pool start order
-    (2 workers): ALS first because its consumer is the catalog's first
-    entry and blocks on it; the grid last because its consumer runs after
-    ``horizon_predictions``'s."""
-    version = PERSIST.data_version(sf_dir)
-    root = PERSIST.model_cache_root()
-
-    def prefetch(artifact: str, fn) -> None:
-        def pinned():
-            with PERSIST.pinned_cache_root(root):
-                return fn()
-
-        FITPOOL.prefetch((artifact, version, root), pinned)
-
-    prefetch("als", lambda: _als_build(spark, sf_dir, version))
-    prefetch(
-        "churn_gbt",
-        lambda: PERSIST.load_or_train("churn_gbt", version, _churn_trainer(spark, sf_dir)),
+    # checkpointed, not cached: the sample must survive clearCache() while a
+    # background fit reads it, or every LBFGS pass re-runs the sample plan
+    feats = truncate_lineage(
+        stratified_sample(
+            _horizon_features_mat(spark, sf_dir),
+            bucket=F.expr("day div 30"),
+            per_bucket=250,
+            order_key=F.md5(F.concat_ws("|", "o_custkey", "p_brand", "day")),
+        ).coalesce(4)
     )
-    prefetch(
-        "horizon_mlp_90d",
-        lambda: PERSIST.load_or_train(
-            "horizon_mlp_90d", version, _horizon_mlp_trainer(spark, sf_dir)
-        ),
+    return train_classifier(
+        feats, HORIZON_FEATURE_COLS, "buy_90d", kind="neural_network",
+        overrides={"maxIter": 25},
     )
-    prefetch("horizon_grid_metrics", lambda: _grid_metrics_rows(spark, sf_dir))
-    return version, root
 
 
 def q_horizon_predictions(
@@ -1294,7 +1238,7 @@ def q_horizon_predictions(
     are pytest-gated (tests/test_ann_horizon.py)."""
     from market_data_mining_project_spark.ml.pipelines import score_with_probability
 
-    version, root = _fit_prefetch(spark, sf_dir)
+    fitted = _fit_cells(spark, sf_dir)
     fact, labels, cust_stats, brand_stats, dept_freq = _horizon_feature_parts(spark, sf_dir)
     # both the training-feature join and the serving-state join consume these
     # per-customer/per-pair stat frames — cache the (small) aggregates so the
@@ -1322,15 +1266,9 @@ def q_horizon_predictions(
     ).distinct()
     # load-or-train keyed on (horizon+kind, data version): a later session
     # serves predictions without refitting (reference ml_models.py:101-214).
-    # The fit rides the shared pool future (started by _fit_prefetch above,
-    # or by an earlier ML entry in the same sweep — guide §2.6), built by
-    # the one shared trainer so the model is identical either way.
-    model, metrics, _cached = FITPOOL.shared(
-        ("horizon_mlp_90d", version, root),
-        lambda: PERSIST.load_or_train(
-            "horizon_mlp_90d", version, _horizon_mlp_trainer(spark, sf_dir)
-        ),
-    )
+    # The fit rides the shared pool cell (started by _fit_cells above, or
+    # by an earlier ML entry in the same sweep — guide §2.6).
+    model, metrics, _cached = fitted("horizon_mlp_90d")
 
     max_day = fact.agg(F.max("day").alias("mx"))
     recent = (
@@ -1420,15 +1358,11 @@ def q_model_grid_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     version, started by whichever ML entry a catalog sweep hits first —
     guide §2.6), so a sweep overlaps the 16 fits with the rest of the
     session instead of paying them inline here."""
-    version, root = _fit_prefetch(spark, sf_dir)
-    rows = FITPOOL.shared(
-        ("horizon_grid_metrics", version, root),
-        lambda: _grid_metrics_rows(spark, sf_dir),
-    )
+    rows = _fit_cells(spark, sf_dir)("horizon_grid_metrics")
     return spark.createDataFrame([tuple(r) for r in rows], _GRID_SCHEMA)
 
 
-def _grid_metrics_rows(spark: SparkSession, sf_dir: str) -> list:
+def _grid_metrics_rows(spark: SparkSession, sf_dir: str, version: str) -> list:
     """The grid's metrics rows: served from the persisted metrics artifact
     when one exists for the current data version, else trained and
     persisted (the reference's has_cached_models gate, ml_models.py:197-210:
@@ -1437,56 +1371,52 @@ def _grid_metrics_rows(spark: SparkSession, sf_dir: str) -> list:
     from market_data_mining_project_spark.ml.pipelines import train_multi_horizon_grid
     from market_data_mining_project_spark.operators.relational import stratified_sample
 
-    grid_version = PERSIST.data_version(sf_dir)
-    if PERSIST.has_cached_metrics_artifact("horizon_grid_metrics", grid_version):
-        return PERSIST.load_metrics_artifact("horizon_grid_metrics", grid_version)["rows"]
+    def compute() -> dict:
+        # checkpointed, not cached: the sample must survive clearCache()
+        # while a background grid reads it (same as _train_horizon_mlp)
+        feats = truncate_lineage(
+            stratified_sample(
+                _horizon_features_mat(spark, sf_dir),
+                bucket=F.expr("day div 30"),
+                per_bucket=150,
+                order_key=F.md5(F.concat_ws("|", "o_custkey", "p_brand", "day")),
+            ).coalesce(4)
+        )
+        label_cols = ("buy_30d", "buy_90d", "buy_180d", "buy_365d")
+        # MLP/SVM iteration budgets halved from 15: on the bounded sample
+        # the metrics surface is unchanged to ~2 decimals and the 16-fit
+        # wall drops measurably; the gates are range checks, not leaderboards
+        grid = train_multi_horizon_grid(
+            feats,
+            HORIZON_FEATURE_COLS,
+            label_cols,
+            overrides={
+                "random_forest": {"numTrees": 20, "maxDepth": 6},
+                "gradient_boost": {"maxIter": 10},
+                "neural_network": {"maxIter": 8},
+                "svm": {"maxIter": 8},
+            },
+        )
+        horizon_days = {"buy_30d": 30, "buy_90d": 90, "buy_180d": 180, "buy_365d": 365}
+        rows = [
+            [
+                horizon_days[label],
+                kind,
+                round(float(m["accuracy"]), 4),
+                round(float(m["weightedPrecision"]), 4),
+                round(float(m["weightedRecall"]), 4),
+                round(float(m["f1"]), 4),
+                # binary_metrics omits 'auc' when the evaluator fails on a
+                # degenerate eval split — surface nan, not a KeyError
+                round(float(m.get("auc", float("nan"))), 4),
+            ]
+            for (label, kind), m in sorted(
+                grid.items(), key=lambda kv: (horizon_days[kv[0][0]], kv[0][1])
+            )
+        ]
+        return {"rows": rows}
 
-    # checkpointed, not cached: the sample must survive clearCache() while
-    # a background grid reads it (same as _horizon_mlp_trainer)
-    feats = truncate_lineage(
-        stratified_sample(
-            _horizon_features_mat(spark, sf_dir),
-            bucket=F.expr("day div 30"),
-            per_bucket=150,
-            order_key=F.md5(F.concat_ws("|", "o_custkey", "p_brand", "day")),
-        ).coalesce(4)
-    )
-    label_cols = ("buy_30d", "buy_90d", "buy_180d", "buy_365d")
-    # MLP/SVM iteration budgets halved from 15 (judge-suggested trim): on the
-    # bounded sample the metrics surface is unchanged to ~2 decimals and the
-    # 16-fit wall drops measurably; the gates are range checks, not leaderboards
-    grid = train_multi_horizon_grid(
-        feats,
-        HORIZON_FEATURE_COLS,
-        label_cols,
-        overrides={
-            "random_forest": {"numTrees": 20, "maxDepth": 6},
-            "gradient_boost": {"maxIter": 10},
-            "neural_network": {"maxIter": 8},
-            "svm": {"maxIter": 8},
-        },
-    )
-    horizon_days = {"buy_30d": 30, "buy_90d": 90, "buy_180d": 180, "buy_365d": 365}
-    rows = [
-        (
-            horizon_days[label],
-            kind,
-            round(float(m["accuracy"]), 4),
-            round(float(m["weightedPrecision"]), 4),
-            round(float(m["weightedRecall"]), 4),
-            round(float(m["f1"]), 4),
-            # binary_metrics omits 'auc' when the evaluator fails on a
-            # degenerate eval split — surface nan, not a KeyError
-            round(float(m.get("auc", float("nan"))), 4),
-        )
-        for (label, kind), m in sorted(
-            grid.items(), key=lambda kv: (horizon_days[kv[0][0]], kv[0][1])
-        )
-    ]
-    PERSIST.save_metrics_artifact(
-        "horizon_grid_metrics", grid_version, {"rows": [list(r) for r in rows]}
-    )
-    return [list(r) for r in rows]
+    return PERSIST.load_or_compute_metrics("horizon_grid_metrics", version, compute)["rows"]
 
 
 # --- rows-only entries (non-SQL-expressible; pytest carries the ground truth) -----
@@ -1694,9 +1624,7 @@ WHERE CAST(cu AS DOUBLE) / ca >= 0.05
 
 
 def _als_build(spark: SparkSession, sf_dir: str, version: str) -> DataFrame:
-    """The als_recommendations frame — the shared fit-pool cell body, ONE
-    definition so the prefetch path and the entry build the identical
-    seeded fit over the identical materialized ui matrix.
+    """The als_recommendations frame, the 'als' body of ``_FITS``.
 
     cache_version: load-or-train on the shared data-version key — a warm
     session serves the identical factor model without the refit that
@@ -1716,12 +1644,9 @@ def q_als_recommendations(spark: SparkSession, sf_dir: str) -> DataFrame:
     sweeps and each extra iteration is two full shuffles of the ratings —
     measured ~3 s of the entry at sf0.1 for no ranking change on the gate.
     The eager fit inside the build rides the shared fit pool: this is the
-    catalog's FIRST entry, so its _fit_prefetch call is what starts the
+    catalog's FIRST entry, so its _fit_cells call is what starts the
     churn/horizon/grid fits overlapping the rest of a sweep (guide §2.6)."""
-    version, root = _fit_prefetch(spark, sf_dir)
-    return FITPOOL.shared(
-        ("als", version, root), lambda: _als_build(spark, sf_dir, version)
-    )
+    return _fit_cells(spark, sf_dir)("als")
 
 
 #: The M8 churn model's feature surface (assembler input order — the order
@@ -1732,30 +1657,20 @@ CHURN_FEATURE_COLS = [
 ]
 
 
-def _churn_feature_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The churn feature frame sized for the iterative GBT fit. coalesce +
-    cache: boosting runs ~2 jobs per iteration over it — per-customer
-    aggregates are tiny relative to the fact table, so right-size
-    partitions for the iterative stage (32 near-empty partitions make
-    every GBT iteration scheduling-bound) and keep the 3-table join +
-    window plan from re-executing per iteration. Parallelism-derived, not
-    a literal: unlike the bounded stratified samples the per-customer
-    frame grows with the customer base, so a fixed coalesce(4) would cap a
-    10^8-customer fit at 4-way parallelism.
+def _train_churn(spark: SparkSession, sf_dir: str):
+    """The churn GBT behind the 'churn_gbt' artifact (``_FITS``), which
+    `churn_model_scores` and `churn_feature_importances` both serve.
 
-    Checkpointed, not cached: the frame must survive clearCache() while a
-    background GBT fit reads it, or every boosting iteration re-runs the
-    3-table join + window."""
-    target = max(4, spark.sparkContext.defaultParallelism // 8)
-    return truncate_lineage(q_churn_features(spark, sf_dir).coalesce(target))
-
-
-def _churn_trainer(spark: SparkSession, sf_dir: str):
-    """THE trainer behind the shared 'churn_gbt' artifact — one definition,
-    because `churn_model_scores` and `churn_feature_importances` serve the
-    same load_or_train key and the key encodes only the data version, not
-    hyperparameters: two trainer copies drifting apart would silently serve
-    importances for a differently-configured model than the scores.
+    The feature frame is right-sized and checkpointed for the iterative
+    fit: boosting runs ~2 jobs per iteration over it, per-customer
+    aggregates are tiny relative to the fact table (32 near-empty
+    partitions make every GBT iteration scheduling-bound), and the cut
+    keeps the 3-table join + window plan from re-executing per iteration
+    — a checkpoint, not a cache, so it survives clearCache() while a
+    background fit reads it. Parallelism-derived, not a literal: unlike
+    the bounded stratified samples the per-customer frame grows with the
+    customer base, so a fixed coalesce(4) would cap a 10^8-customer fit at
+    4-way parallelism.
 
     maxIter 30 (down from the default 60): measured AUC/F1 are flat from
     25-40 rounds at sf0.1, the AUC gate in tests/test_rules_ml.py holds at
@@ -1763,43 +1678,97 @@ def _churn_trainer(spark: SparkSession, sf_dir: str):
     """
     from market_data_mining_project_spark.ml.pipelines import train_classifier
 
-    def train():
-        return train_classifier(
-            _churn_feature_frame(spark, sf_dir), CHURN_FEATURE_COLS, "churned",
-            kind="gradient_boost", overrides={"maxIter": 30},
-        )
+    target = max(4, spark.sparkContext.defaultParallelism // 8)
+    feats = truncate_lineage(q_churn_features(spark, sf_dir).coalesce(target))
+    return train_classifier(
+        feats, CHURN_FEATURE_COLS, "churned",
+        kind="gradient_boost", overrides={"maxIter": 30},
+    )
 
-    return train
+
+#: Every catalog model fit, declared once: artifact -> body(spark, sf_dir,
+#: data version). ``_fit_cells`` prefetches them and its consumers join the
+#: same cells, so a retry after a failed prefetch reruns this declaration.
+#: Insertion order is the pool's start order (see ``_fit_cells``).
+_FITS: dict[str, Callable[[SparkSession, str, str], object]] = {
+    "als": _als_build,
+    "churn_gbt": lambda spark, sf_dir, version: PERSIST.load_or_train(
+        "churn_gbt", version, lambda: _train_churn(spark, sf_dir)
+    ),
+    "horizon_mlp_90d": lambda spark, sf_dir, version: PERSIST.load_or_train(
+        "horizon_mlp_90d", version, lambda: _train_horizon_mlp(spark, sf_dir)
+    ),
+    "horizon_grid_metrics": _grid_metrics_rows,
+}
+
+
+def _fit_cells(spark: SparkSession, sf_dir: str) -> Callable[[str], object]:
+    """Submit every ``_FITS`` body to the shared fit pool and return
+    ``fitted(artifact)``, which joins that artifact's cell (or runs it
+    inline if no worker has started it).
+
+    Overlapping independent jobs (optimization guide §2.6): the churn GBT,
+    the horizon MLP, the 16-cell horizon grid and the implicit-ALS factor
+    model are independent estimators over independently-materialized
+    inputs, yet a catalog sweep paid them strictly serially, one per
+    consuming entry (~60 s of the sf0.1 cold pass). Every ML entry calls
+    this on entry, so a sweep's FIRST ML consumer starts the whole set and
+    the later consumers find their artifact fitted (or in flight) instead
+    of paying it inline. Single-query sessions still compute exactly their
+    own result — the extra fits land in the same load-or-train cache any
+    later consumer would have populated, or are abandoned if the process
+    exits first.
+
+    Results are NOT cached across runs: each body wraps the existing
+    ``load_or_train`` / metrics-artifact contract (artifact = the model,
+    keyed on the data fingerprint; scoring recomputes from parquet). Cell
+    keys carry (artifact, data version, cache root) so test sandboxes
+    redirecting ``SPARK_GRAFT_MODEL_DIR`` stay isolated exactly as the
+    on-disk cache already is, and each body runs pinned to that root, so
+    one still in flight when the sandbox ends publishes into the sandbox,
+    not the default cache. Submission order = pool start order (2
+    workers): ALS first because its consumer is the catalog's first entry
+    and blocks on it; the grid last because its consumer runs after
+    ``horizon_predictions``'s."""
+    version = PERSIST.data_version(sf_dir)
+    root = PERSIST.model_cache_root()
+    cells = {}
+    for artifact, fit in _FITS.items():
+
+        def run(fit=fit):
+            with PERSIST.pinned_cache_root(root):
+                return fit(spark, sf_dir, version)
+
+        cells[artifact] = ((artifact, version, root), run)
+        FITPOOL.prefetch(*cells[artifact])
+    return lambda artifact: FITPOOL.shared(*cells[artifact])
 
 
 def _churn_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-customer GBT churn scores, trained + materialized ONCE per data version
     (same S5 refresh pattern as ``_ui_matrix``): `churn_model_scores` and the
     threshold sweep both read this parquet, so the 30-round boost fit is paid
-    one time per data version instead of once per consuming query."""
+    one time per data version instead of once per consuming query.
+
+    The cells are started before the ``derived_table`` lookup, so a warm
+    derived hit still starts the sibling fits."""
     from market_data_mining_project_spark.functions.expressions import churn_risk_label
     from market_data_mining_project_spark.ml.pipelines import score_with_probability
     from market_data_mining_project_spark.sources import materialize as MAT
 
-    version, root = _fit_prefetch(spark, sf_dir)
+    fitted = _fit_cells(spark, sf_dir)
 
     def build() -> DataFrame:
-        feats = _churn_feature_frame(spark, sf_dir)
         # load-or-train: a prior process's fit on the same data version is
-        # reloaded instead of refit (reference ml_models.py:101-214 cache);
-        # the trainer definition is shared with churn_feature_importances
-        # (same artifact key ⇒ same hyperparameters, by construction) and
-        # the fit rides the shared pool cell that _fit_prefetch registered
-        model, _metrics, _cached = FITPOOL.shared(
-            ("churn_gbt", version, root),
-            lambda: PERSIST.load_or_train("churn_gbt", version, _churn_trainer(spark, sf_dir)),
-        )
+        # reloaded instead of refit (reference ml_models.py:101-214 cache)
+        model, _metrics, _cached = fitted("churn_gbt")
         # round BEFORE banding: the stored probability and the band must
         # agree at band boundaries (0.7500004 stores as 0.75 and must band
         # as 0.75 — banding the unrounded value gave a consumer recomputing
-        # the band from the stored column a different answer)
+        # the band from the stored column a different answer). Scoring is
+        # one pass, so it reads the live feature plan, not a checkpoint.
         return (
-            score_with_probability(model, feats)
+            score_with_probability(model, q_churn_features(spark, sf_dir))
             .withColumn("churn_probability", F.round("churn_probability", 6))
             .select(
                 "o_custkey",
@@ -1831,13 +1800,7 @@ def q_churn_feature_importances(spark: SparkSession, sf_dir: str) -> DataFrame:
     for both entries. Rows-only: tree-split importance is not SQL; pytest
     gates sum-to-1, non-negativity and the name mapping
     (tests/test_rules_ml.py::test_churn_feature_importances_gates)."""
-    version, root = _fit_prefetch(spark, sf_dir)
-    model, _metrics, _cached = FITPOOL.shared(
-        ("churn_gbt", version, root),
-        lambda: PERSIST.load_or_train(
-            "churn_gbt", version, _churn_trainer(spark, sf_dir)
-        ),
-    )
+    model, _metrics, _cached = _fit_cells(spark, sf_dir)("churn_gbt")
     imp = model.stages[-1].featureImportances
     ranked = sorted(
         ((name, float(imp[i])) for i, name in enumerate(CHURN_FEATURE_COLS)),

@@ -15,7 +15,7 @@ from market_data_mining_project_spark.operators import dedup as D
 from market_data_mining_project_spark.operators import retrieval as RET
 from market_data_mining_project_spark.operators import similarity as SIM
 from market_data_mining_project_spark.operators import text as TXT
-from market_data_mining_project_spark.sources.tables import load_table
+from market_data_mining_project_spark.sources.tables import load_table, parquet_rows, table_path
 from market_data_mining_project_spark.session import truncate_lineage
 
 
@@ -741,20 +741,10 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # designed ~linear shape. Unchanged at the driver SFs (k stays 8
     # through sf1), so rows-only outputs there are identical.
     from market_data_mining_project_spark.ml import persistence as PERSIST
-    from market_data_mining_project_spark.sources.tables import scan_row_count
 
-    # corpus size for the k scaling: parquet footers when the frame is a
-    # plain scan (zero jobs — the warm/cache-hit path no longer pays a
-    # full count action per call, r9 ADVICE); otherwise count once per
-    # data version (the version stamp already keys on path+mtime+size,
-    # so in-process rewrites invalidate the memo)
-    n_emb = scan_row_count(emb)
-    if n_emb is None:
-        ver_key = (sf_dir, PERSIST.data_version(sf_dir, ("embeddings",)))
-        if ver_key not in _EMB_COUNTS:
-            _EMB_COUNTS[ver_key] = emb.count()
-        n_emb = _EMB_COUNTS[ver_key]
-    n_cells = max(8, n_emb // 2500)
+    # corpus size for the k scaling, from the table's parquet footers: no
+    # Spark job, whether or not the session has cached the frame
+    n_cells = max(8, parquet_rows(table_path(sf_dir, "embeddings")) // 2500)
     ann = SIM.semantic_dedup(
         emb, "embedding", "vec_id", threshold=0.4, n_cells=n_cells, seed=42,
         n_blocks=2, max_iter=5,
@@ -1102,9 +1092,6 @@ def q_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pools); production exports choose buckets ~ corpus_docs / 1e6
     assigned = PK.pack_sequences(docs, "doc_id", "bpe_tokens", seq_len=1024, buckets=8)
     return PK.packing_stats(assigned, seq_len=1024)
-
-
-_EMB_COUNTS: dict[tuple[str, str], int] = {}
 
 
 def _jaccard_pairs_mat(spark: SparkSession, sf_dir: str):

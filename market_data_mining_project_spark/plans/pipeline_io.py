@@ -11,7 +11,6 @@ from __future__ import annotations
 
 import atexit
 import itertools
-import os
 import shutil
 import tempfile
 
@@ -19,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from market_data_mining_project_spark.operators import multimodal as MM
-from market_data_mining_project_spark.sources.tables import load_table, table_path
+from market_data_mining_project_spark.sources.tables import load_table, parquet_rows, table_path
 from market_data_mining_project_spark.streaming import events as EV
 
 _RUN_COUNTER = itertools.count()
@@ -54,20 +53,6 @@ def _state_partitions(rows: int, rows_per_partition: int, parallelism: int) -> i
     return max(1, min(parallelism, -(-rows // rows_per_partition)))
 
 
-def _event_rows(sf_dir: str) -> int:
-    """The events table's row count from its parquet footers: no Spark
-    job, whatever the session has cached."""
-    import pyarrow.parquet as pq
-
-    path = table_path(sf_dir, "events")
-    files = (
-        [os.path.join(root, f) for root, _, fs in os.walk(path) for f in fs if f.endswith(".parquet")]
-        if os.path.isdir(path)
-        else [path]
-    )
-    return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
-
-
 def _bounded(df: DataFrame, sf_dir: str, prefix: str, output_mode: str = "append") -> DataFrame:
     """Run a streaming plan over ``sf_dir``'s events to completion and
     return its bounded output.
@@ -97,7 +82,7 @@ def _bounded(df: DataFrame, sf_dir: str, prefix: str, output_mode: str = "append
     spark = df.sparkSession
     name = f"{prefix}_{next(_RUN_COUNTER)}"
     state_parts = _state_partitions(
-        _event_rows(sf_dir),
+        parquet_rows(table_path(sf_dir, "events")),
         int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")),
         spark.sparkContext.defaultParallelism,
     )

@@ -115,6 +115,10 @@ def truncate_lineage(df, eager: bool = True):
     return df.localCheckpoint(eager=eager)
 
 
+def _is_local(master: str) -> bool:
+    return master == "local" or master.startswith("local[")
+
+
 def _ship_package(spark: SparkSession) -> None:
     """Distribute this package to executor Python workers on any
     multi-process master.
@@ -130,8 +134,8 @@ def _ship_package(spark: SparkSession) -> None:
     the package pre-installed on every worker (a pre-installed copy just
     shadows the shipped one; both are this exact code)."""
     sc = spark.sparkContext
-    if sc.master == "local" or sc.master.startswith("local["):
-        return  # single-JVM: python workers inherit the driver's sys.path
+    if _is_local(sc.master):
+        return  # single-JVM: get_spark put the package on the workers' path
     if getattr(sc, "_graft_pkg_shipped", False):
         return
     import atexit
@@ -159,11 +163,21 @@ def get_spark(app_name: str = "market-data-mining-spark", **overrides: str) -> S
 
     ``overrides`` take precedence; master comes from ``$SPARK_MASTER`` or
     ``local[N]`` where N = ``$SPARK_GRAFT_CPUS`` (default ``local[*]``).
+
+    A local master's Python workers start in the JVM's working directory
+    with Spark's own path, not the driver's ``sys.path``, so UDFs pickled
+    by reference could not import this package from any other directory:
+    the package's parent directory goes on the workers' ``PYTHONPATH``,
+    ahead of any value the caller set.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
     master = os.environ.get("SPARK_MASTER", f"local[{cpus}]" if cpus else "local[*]")
     builder = SparkSession.builder.appName(app_name).master(master)
     conf = {**_DEFAULTS, **{k: str(v) for k, v in overrides.items()}}
+    if _is_local(master):
+        key = "spark.executorEnv.PYTHONPATH"
+        parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        conf[key] = os.pathsep.join(p for p in (parent, conf.get(key)) if p)
     for key, value in conf.items():
         builder = builder.config(key, value)
     spark = builder.getOrCreate()

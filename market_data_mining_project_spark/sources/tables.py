@@ -205,6 +205,27 @@ def register_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TE
 _ROW_PRESERVING_NODES = ("Relation", "Project", "Repartition", "Sort")
 
 
+def parquet_rows(*paths: str) -> int:
+    """Rows in the local parquet ``paths`` (each a file, or a directory of
+    part files at any depth), summed from their footers: no Spark job, and
+    the same answer whatever the session has cached. Footer reads cost
+    ~1 ms/file on local disk."""
+    import pyarrow.parquet as pq
+
+    files = []
+    for p in paths:
+        if os.path.isdir(p):
+            files += [
+                os.path.join(d, f)
+                for d, _, fs in os.walk(p)
+                for f in fs
+                if f.endswith(".parquet") and not f.startswith(("_", "."))
+            ]
+        else:
+            files.append(p)
+    return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
+
+
 def scan_row_count(df: DataFrame) -> int | None:
     """Row count from parquet footer metadata — NO Spark job, no lineage
     execution. Returns None unless the frame is a row-count-preserving
@@ -214,7 +235,9 @@ def scan_row_count(df: DataFrame) -> int | None:
     The cheap signal for adaptive gates that only need corpus SIZE (the
     ingest batch-cache gate, SemDeDup's cells-per-vector k): running a
     full ``df.count()`` there silently executes the whole upstream plan
-    just to pick a strategy. Footer reads cost ~1 ms/file on local disk.
+    just to pick a strategy. A cached frame reads as an
+    ``InMemoryRelation`` and returns None; a caller that knows its table
+    reads :func:`parquet_rows` of the table's path instead.
     """
     files = df.inputFiles()
     if not files:
@@ -227,15 +250,10 @@ def scan_row_count(df: DataFrame) -> int | None:
         node = line.lstrip(" +-:").split(" ", 1)[0]
         if node and not any(node.startswith(ok) for ok in _ROW_PRESERVING_NODES):
             return None
+    local = [f[len("file:"):] if f.startswith("file:") else f for f in files]
+    if any("://" in f for f in local):
+        return None  # remote store: footer read could stall the driver
     try:
-        import pyarrow.parquet as pq
-
-        total = 0
-        for f in files:
-            local = f[len("file:"):] if f.startswith("file:") else f
-            if "://" in local:
-                return None  # remote store: footer read could stall the driver
-            total += pq.ParquetFile(local).metadata.num_rows
-        return total
+        return parquet_rows(*local)
     except Exception:
         return None

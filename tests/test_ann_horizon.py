@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import shutil
+
 from pyspark.sql import functions as F
 
 from market_data_mining_project_spark.operators import similarity as SIM
@@ -214,9 +216,9 @@ def test_ivf_centroid_cache_roundtrip_and_no_refit(spark, sf_dir, tmp_path, monk
     # one-hot centroids; the next call must reflect THEM, not a fresh fit
     dim = len(m1.clusterCenters()[0])
     fake = [[1000.0 if d == c else 0.0 for d in range(dim)] for c in range(8)]
-    PERSIST.save_metrics_artifact(
-        "ivf_centroids_k8_seed42_iter5", version, {"centroids": fake}
-    )
+    name = "ivf_centroids_k8_seed42_iter5"
+    shutil.rmtree(PERSIST.model_dir(name, version))
+    PERSIST.load_or_compute_metrics(name, version, lambda: {"centroids": fake})
     sentinel, m3 = SIM.ivf_assign(
         emb, "embedding", "vec_id", n_cells=8, seed=42, max_iter=5, cache_version=version
     )

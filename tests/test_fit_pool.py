@@ -259,3 +259,48 @@ def test_grid_cell_threads_inherit_the_callers_job_group(spark, monkeypatch):
             sc.setLocalProperty(prop, None)
     assert len(out) == 3
     assert seen == ["grid-probe"] * 3
+
+
+def test_a_failed_prefetched_fit_is_retried_with_its_one_declaration(
+    sf_dir, tmp_path, monkeypatch
+):
+    """A ``_FITS`` body that fails under prefetch is rerun, the same body
+    with the same arguments under the same pinned cache root, by the next
+    consumer, which gets its value. The body fits nothing."""
+    from market_data_mining_project_spark.ml import persistence
+    from market_data_mining_project_spark.plans import analytics_domain as AD
+
+    monkeypatch.setenv("SPARK_GRAFT_MODEL_DIR", str(tmp_path / "models"))
+    failed = threading.Event()
+    calls = []
+
+    def body(spark, sf, version):
+        calls.append((spark, sf, version, persistence.model_cache_root()))
+        if len(calls) == 1:
+            failed.set()
+            raise RuntimeError("transient fit failure")
+        return "fitted"
+
+    monkeypatch.setattr(AD, "_FITS", {"probe": body})
+    fitted = AD._fit_cells("spark", sf_dir)
+    assert failed.wait(10)  # the prefetched run failed
+    monkeypatch.setenv("SPARK_GRAFT_MODEL_DIR", str(tmp_path / "elsewhere"))
+    assert fitted("probe") == "fitted"
+    assert len(calls) == 2 and calls[0] == calls[1]
+    assert calls[0] == ("spark", sf_dir, persistence.data_version(sf_dir), str(tmp_path / "models"))
+
+
+def test_each_catalog_fit_is_declared_once():
+    """The fit pool's two entry points and the two trained artifacts each
+    appear at one call site of the plan module: the ``_FITS`` table feeds
+    both the prefetch and every consumer."""
+    import re
+
+    with open(os.path.join(
+        REPO, "market_data_mining_project_spark", "plans", "analytics_domain.py"
+    )) as fh:
+        src = fh.read()
+    assert len(re.findall(r"FITPOOL\.prefetch\(", src)) == 1
+    assert len(re.findall(r"FITPOOL\.shared\(", src)) == 1
+    assert len(re.findall(r'load_or_train\(\s*"churn_gbt"', src)) == 1
+    assert len(re.findall(r'load_or_train\(\s*"horizon_mlp_90d"', src)) == 1

@@ -116,7 +116,7 @@ def test_cache_miss_publish_keeps_a_winner_that_replaced_a_partial_dir(spark, mo
     _m, _met, cached = P.load_or_train("t_race_partial", "v1", trainer)
     assert not cached
     assert os.stat(d).st_ino == winner["ino"]
-    assert P.load_metrics_artifact("t_race_partial", "v1") == {"winner": 1.0}
+    assert P.load_model("t_race_partial", "v1")[1] == {"winner": 1.0}
 
 
 def test_data_version_tracks_input_changes(tmp_path):
@@ -165,11 +165,37 @@ def test_different_versions_are_separate_artifacts(spark, model_root):
 
 def test_metrics_artifact_roundtrip(model_root):
     payload = {"rows": [[30, "svm", 0.8, 0.7, 0.6, 0.65, 0.9]]}
-    assert not P.has_cached_metrics_artifact("grid", "v1")
-    P.save_metrics_artifact("grid", "v1", payload)
-    assert P.has_cached_metrics_artifact("grid", "v1")
-    assert P.load_metrics_artifact("grid", "v1") == payload
-    assert not P.has_cached_metrics_artifact("grid", "v2")
+    calls = []
+
+    def compute():
+        calls.append(1)
+        return payload
+
+    assert P.load_or_compute_metrics("grid", "v1", compute) == payload
+    assert calls == [1]
+    served = P.load_or_compute_metrics("grid", "v1", lambda: {"rows": []})
+    assert served == payload  # a repeat call is served from the artifact
+    assert P.load_or_compute_metrics("grid", "v2", compute) == payload
+    assert calls == [1, 1]  # a new data version misses
+
+
+def test_metrics_publish_keeps_the_first_directory(model_root):
+    """A content-addressed metrics artifact publishes first-wins: a caller
+    that computed while another published keeps the winner's directory
+    (same inode), so a concurrent reader never finds it deleted."""
+    d = P.model_dir("m_race", "v1")
+    first = {}
+
+    def racing():
+        # another process publishes while this call computes
+        P.load_or_compute_metrics("m_race", "v1", lambda: {"winner": 1})
+        first["ino"] = os.stat(d).st_ino
+        return {"winner": 0}
+
+    P.load_or_compute_metrics("m_race", "v1", racing)
+    assert os.stat(d).st_ino == first["ino"]
+    assert P.load_or_compute_metrics("m_race", "v1", lambda: {"winner": 2}) == {"winner": 1}
+    assert not [n for n in os.listdir(os.path.dirname(d)) if ".tmp-" in n]
 
 
 def test_grid_metrics_served_from_cached_artifact(spark, sf_dir, model_root):
@@ -186,8 +212,8 @@ def test_grid_metrics_served_from_cached_artifact(spark, sf_dir, model_root):
         for h in (30, 90, 180, 365)
         for kind in ("gradient_boost", "neural_network", "random_forest", "svm")
     ]
-    P.save_metrics_artifact(
-        "horizon_grid_metrics", P.data_version(sf_dir), {"rows": sentinel}
+    P.load_or_compute_metrics(
+        "horizon_grid_metrics", P.data_version(sf_dir), lambda: {"rows": sentinel}
     )
     out = q_model_grid_metrics(spark, sf_dir)
     rows = [

@@ -231,6 +231,27 @@ def test_bench_subset_run_with_stages_and_explain(sf_dir, tmp_path):
         assert not grew, f"cold counts grew (pinned, now): {grew}"
 
 
+def test_bench_runs_from_outside_the_checkout(sf_dir, tmp_path):
+    """``bpe_tokenizer`` pickles its UDF by reference, so a local-mode
+    Python worker must import the package although the process starts
+    outside the checkout and nothing puts the checkout on PYTHONPATH."""
+    env = dict(
+        os.environ,
+        SPARK_GRAFT_SF_DIR=sf_dir,
+        SPARK_GRAFT_BENCH_FRESH="0",
+        SPARK_GRAFT_CPUS="2",
+        SPARK_DRIVER_MEMORY="1g",
+    )
+    env.pop("PYTHONPATH", None)
+    proc = subprocess.run(
+        [sys.executable, os.path.join(_REPO, "bench.py"), "bpe_tokenizer"],
+        env=env, cwd=str(tmp_path), capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    out = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert set(out["queries"]) == {"bpe_tokenizer"}
+
+
 _BYSTANDER = r"""
 import json, sys, threading
 
