@@ -28,11 +28,6 @@ def safe_ratio(num: Column, den: Column, default: float = 0.0) -> Column:
     return F.when(den > 0, num / den).otherwise(F.lit(default))
 
 
-def month_bucket(day: Column, anchor: int = 352) -> Column:
-    """30-day month bucket ``((day - anchor) / 30) + 1`` (views.py:771, F2)."""
-    return (F.floor((day - F.lit(anchor)) / 30) + 1).cast("int")
-
-
 def is_weekend(day: Column) -> Column:
     """``day % 7 >= 5`` weekend flag (ml_models.py:387-388, F2)."""
     return (day % 7 >= 5).cast("int")

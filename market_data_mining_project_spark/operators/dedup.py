@@ -645,12 +645,13 @@ def incremental_ingest(
 
     ``cache_batch``: pin the deduped batch frame for its four downstream
     consumers. ``None`` (default) decides adaptively — cache only when the
-    existing corpus has at least :data:`INGEST_CACHE_MIN_CORPUS_ROWS` rows.
-    The gate runs ONE count action over ``existing``'s lineage (a narrow
-    metadata-cheap pass when the corpus is a parquet scan — the shipped
-    shape). Callers whose corpus frame carries an EXPENSIVE upstream plan
-    should pass ``cache_batch`` explicitly (they know their corpus size)
-    rather than pay a full lineage execution to pick a caching strategy.
+    parquet files ``existing`` reads hold at least
+    :data:`INGEST_CACHE_MIN_CORPUS_ROWS` rows, summed from their footers
+    with no Spark job: those files are what the corpus digest scan re-reads
+    per uncached consumer, whatever filters sit above the scan. Only a
+    corpus with no local parquet input pays a ``count()`` action over its
+    lineage; callers whose such corpus carries an EXPENSIVE upstream plan
+    should pass ``cache_batch`` explicitly (they know their corpus size).
     """
     batch = exact_dedup(incoming, text_col, id_col)
     batch = batch.join(
@@ -672,15 +673,16 @@ def incremental_ingest(
     # broadcast-size estimate and every anti-join degrades to sort-merge.
     # Single-slot lifecycle: the next call releases this call's frame.
     if cache_batch is None:
-        # parquet-footer row count when the corpus is a plain scan (the
-        # shipped shape) — zero Spark jobs; only an exotic corpus plan
-        # (filters/joins upstream) pays the count() action, and such
-        # callers are told above to pass cache_batch explicitly
-        from ..sources.tables import scan_row_count
+        from urllib.parse import unquote, urlparse
 
-        n_corpus = scan_row_count(existing)
-        if n_corpus is None:
-            n_corpus = existing.count()
+        from ..sources.tables import parquet_rows
+
+        local = [
+            unquote(u.path)
+            for u in map(urlparse, existing.inputFiles())
+            if u.scheme in ("", "file") and u.path.endswith(".parquet")
+        ]
+        n_corpus = parquet_rows(*local) if local else existing.count()
         cache_batch = n_corpus >= INGEST_CACHE_MIN_CORPUS_ROWS
     if cache_batch:
         batch = _cache_single_slot(batch, "ingest_batch")

@@ -17,6 +17,10 @@ Scale notes
 - ``dedup_keep_max`` is a single window shuffle on the dedup key; equivalent
   to the reference's ``DELETE ... NOT IN (SELECT MAX(id) ... GROUP BY ...)``
   (clean_transactions.py) without the O(n²) anti-join.
+- ``ntile_score_histogram`` is the one exact NTILE the catalog runs: any
+  number of metrics in one stacked histogram-rank pass, no window over the
+  whole frame. ``ntile_score`` (one global window, one task) is the
+  reference the tests compare it against.
 """
 
 from __future__ import annotations
@@ -25,6 +29,7 @@ from collections.abc import Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import NumericType
 
 from market_data_mining_project_spark.functions.expressions import icontains
 
@@ -226,113 +231,111 @@ def ntile_score(
     (W3/W4; reference ``pd.qcut(... .rank(method='first'))``,
     analytics.py:223-230).
 
-    Global-order window: ONE task sorts the whole frame. Kept as the
-    general path (works for any metric, incl. unbounded-distinct floats);
-    for bounded-distinct metrics use :func:`ntile_score_histogram` — the
-    same scores with no single-task sort over the data frame."""
+    Global-order window: ONE task sorts the whole frame. The reference the
+    tests compare :func:`ntile_score_histogram` against — the same scores
+    with no single-task sort over the data frame."""
     order = [metric.desc() if descending else metric.asc(), tiebreak.asc()]
     return df.withColumn(out, F.ntile(n).over(Window.orderBy(*order)))
 
 
+#: Internal columns of :func:`ntile_score_histogram`, reserved in its input
+#: so that no caller column can be confused with one in its joins and drops.
+_NTILE_RESERVED = frozenset(
+    {"__key", "__m", "__v", "__cnt", "__wm", "__wv", "__base", "__n", "__rn", "__tile"}
+)
+
+
 def ntile_score_histogram(
     df: DataFrame,
-    metric: str,
+    scores: Mapping[str, str],
     n: int,
-    out: str,
-    tiebreak: str,
+    key: str,
     descending: bool = False,
-    hist_from: DataFrame | None = None,
 ) -> DataFrame:
-    """Distributed exact NTILE — bit-identical to :func:`ntile_score`
-    (same ``ORDER BY metric, tiebreak`` global rank, same SQL NTILE bucket
-    arithmetic) with NO unpartitioned window over the data frame.
+    """Distributed exact NTILE for any number of metrics in one pass:
+    ``scores`` maps each numeric metric column to its output column, and
+    every output equals :func:`ntile_score` over that metric (same
+    ``ORDER BY metric, key ASC`` rank, same SQL NTILE bucket arithmetic)
+    with NO unpartitioned window over the data frame.
 
     The global rank decomposes: rank(row) = (# rows strictly before this
     row's metric VALUE) + (row_number within the value, ordered by the
-    tiebreaker). The first term comes from a counting-histogram walk (one
-    map-side-combinable hash aggregate → cumulative sum over the
-    ≤|distinct metric values| summary rows — the :func:`...sketches.
-    value_histogram` move), broadcast-joined back; the second is a window
-    PARTITIONED by the metric value. NTILE(n) is then pure arithmetic on
+    key). The metrics ``stack`` to (metric, value) rows, so ONE hash
+    aggregate builds every metric's counting histogram, ONE walk window
+    partitioned by metric turns it into the first term (the
+    :func:`...sketches.value_histogram` move) and ONE window partitioned by
+    (metric, value) gives the second. NTILE(n) is then pure arithmetic on
     (rank, total): the first ``total mod n`` buckets take ``⌈total/n⌉``
     rows, the rest ``⌊total/n⌋`` — SQL-standard, matching Spark/DuckDB.
+    The tiles pivot back with one ``groupBy(key)`` and a null-safe join.
 
-    Bounds, stated honestly: the single-partition walk is over the
-    HISTOGRAM (2 narrow columns, ≤|distinct values| rows — days, counts,
-    cents grades: ~10³–10⁶), never the data frame; the within-value
-    window inherits the metric's tie skew (a value shared by m rows sorts
-    m rows in one task — rank(method='first') semantics make that tie
-    order irreducible). NULL metrics sort first (asc) / last (desc),
-    matching the window path's default null ordering. A metric whose
-    distinct count approaches |rows| (an unquantized continuous column)
-    makes the walk frame data-sized — the join-back is deliberately NOT
-    hint-forced to broadcast (AQE broadcasts it while it's small, falls
-    back to a shuffle join past the threshold), but the one-task walk
-    itself is then the bound: quantize such metrics first, or use
-    :func:`quantile_edge_scores`-style edge bucketing.
+    Preconditions:
 
-    ``hist_from``: build the histogram from this frame instead of ``df``.
-    Callers scoring SEVERAL metrics in a chain pass the shared upstream
-    frame so every walk aggregates the SAME subtree — Catalyst's
-    ReuseExchange then evaluates the (possibly expensive) upstream once,
-    where per-chain-link histograms would each re-run it. The caller
-    guarantees ``hist_from[metric]`` is the same multiset as
-    ``df[metric]`` (true whenever the chain only adds columns). The guard
-    enforces the NARROWER half of that contract: a df value entirely
-    ABSENT from hist_from fails loudly at execution via an in-plan
-    ``raise_error``; a multiplicity mismatch (same values, different
-    counts) is undetectable here and silently yields wrong ``__base``/
-    ``__n`` and therefore wrong scores — if your chain can drop or
-    duplicate rows, don't pass it as ``hist_from``.
+    - ``key`` is unique per row: scores re-attach by joining on it.
+    - Values are stacked as DOUBLE, which preserves order and equality for
+      integers and money below 2^53. A non-numeric metric raises
+      ``ValueError`` here, at call time.
+    - ``descending`` applies to every metric of the call.
+    - An output column replaces an input column of the same name.
+
+    Bounds: the walk is over the HISTOGRAM (≤ |distinct values| rows per
+    metric — days, counts, cents grades: ~10³–10⁶), never the data frame;
+    the within-value window inherits the metric's tie skew (a value shared
+    by m rows sorts m rows in one task — rank(method='first') semantics
+    make that tie order irreducible). NULL metrics sort first (asc) / last
+    (desc), matching the window path's default null ordering. A metric
+    whose distinct count approaches |rows| (an unquantized continuous
+    column) makes its walk partition data-sized: quantize such metrics
+    first, or use :func:`...rfm.quantile_edge_scores`-style edge bucketing.
     """
-    reserved = {"__mv", "__base", "__n", "__cnt"} & set(df.columns)
+    reserved = _NTILE_RESERVED & set(df.columns)
     if reserved:
-        # the walk's internal columns would silently shadow/drop a caller
-        # column of the same name in the select/drop below (the asof_join
-        # reserved-name contract)
         raise ValueError(
             f"ntile_score_histogram: input columns {sorted(reserved)} collide "
-            "with reserved internals (__mv/__base/__n/__cnt); rename them first"
+            f"with reserved internals {sorted(_NTILE_RESERVED)}; rename them first"
         )
-    mcol = F.col(metric)
-    order = mcol.desc_nulls_last() if descending else mcol.asc_nulls_first()
-    hist = (hist_from if hist_from is not None else df).groupBy(metric).agg(
-        F.count(F.lit(1)).alias("__cnt")
+    schema = df.schema
+    bad = [
+        f"{m} {schema[m].dataType.simpleString()}"
+        for m in scores
+        if not isinstance(schema[m].dataType, NumericType)
+    ]
+    if bad:
+        raise ValueError(f"ntile_score_histogram: non-numeric metrics {bad}")
+    stacked = df.select(
+        F.col(key).alias("__key"),
+        F.stack(
+            F.lit(len(scores)),
+            *[c for m in scores for c in (F.lit(m), F.col(m).cast("double"))],
+        ).alias("__m", "__v"),
     )
-    # unpartitioned windows over the HISTOGRAM only — ≤ |distinct metric
-    # values| narrow rows, never the data frame (the WindowExec
-    # single-partition warning is benign here; see the docstring's bounds)
-    w_cum = Window.orderBy(order).rowsBetween(Window.unboundedPreceding, 0)
-    w_all = Window.orderBy(order).rowsBetween(
+    hist = stacked.groupBy("__m", "__v").agg(F.count(F.lit(1)).alias("__cnt"))
+    v = F.col("__v")
+    # windows over the HISTOGRAM only — ≤ |distinct values| narrow rows per
+    # metric, never the data frame
+    w_cum = (
+        Window.partitionBy("__m")
+        .orderBy(v.desc_nulls_last() if descending else v.asc_nulls_first())
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    w_all = Window.partitionBy("__m").rowsBetween(
         Window.unboundedPreceding, Window.unboundedFollowing
     )
     walk = hist.select(
-        mcol.alias("__mv"),
+        F.col("__m").alias("__wm"),
+        v.alias("__wv"),
         (F.sum("__cnt").over(w_cum) - F.col("__cnt")).alias("__base"),
         F.sum("__cnt").over(w_all).alias("__n"),
     )
-    # eqNullSafe: the NULL-metric group must join back to its walk row.
-    # LEFT join + in-plan raise_error: if a caller violates the hist_from
-    # same-multiset contract (a metric value in df missing from hist_from),
-    # the unmatched row fails LOUDLY at execution instead of being silently
-    # dropped by an inner join — the _bounded_walk lazy-guard pattern.
-    joined = df.join(walk, mcol.eqNullSafe(F.col("__mv")), "left").drop("__mv")
-    w_in = Window.partitionBy(metric).orderBy(F.col(tiebreak).asc())
-    guard_n = F.when(
-        F.col("__n").isNull(),
-        F.raise_error(
-            F.concat(
-                F.lit("ntile_score_histogram: metric value "),
-                F.coalesce(mcol.cast("string"), F.lit("NULL")),
-                F.lit(
-                    " is absent from hist_from — the hist_from frame must hold"
-                    " the same multiset of metric values as df"
-                ),
-            )
-        ).cast("long"),
-    ).otherwise(F.col("__n").cast("long"))
-    r = F.col("__base") + F.row_number().over(w_in).cast("long")
-    total = guard_n
+    w_in = Window.partitionBy("__m", "__v").orderBy(F.col("__key").asc())
+    # the walk aggregates the SAME stacked frame, so the inner join drops
+    # no row; eqNullSafe so the NULL-value group reaches its walk row
+    ranked = stacked.withColumn("__rn", F.row_number().over(w_in)).join(
+        walk,
+        (F.col("__m") == F.col("__wm")) & v.eqNullSafe(F.col("__wv")),
+    )
+    r = F.col("__base") + F.col("__rn").cast("long")
+    total = F.col("__n").cast("long")
     q = F.lit(int(n)).cast("long")
 
     def idiv(x: Column, y: Column) -> Column:
@@ -351,4 +354,18 @@ def ntile_score_histogram(
         # (threshold = total), but ANSI mode must never see a /0 literal
         rem + idiv(r - threshold - 1, F.greatest(b, F.lit(1))) + 1
     )
-    return joined.withColumn(out, tile.cast("int")).drop("__base", "__n")
+    tiles = (
+        ranked.withColumn("__tile", tile.cast("int"))
+        .groupBy("__key")
+        .agg(
+            *[
+                F.max(F.when(F.col("__m") == m, F.col("__tile"))).alias(out)
+                for m, out in scores.items()
+            ]
+        )
+    )
+    return (
+        df.drop(*scores.values())
+        .join(tiles, F.col(key).eqNullSafe(F.col("__key")))
+        .drop("__key")
+    )

@@ -188,11 +188,6 @@ GROUP BY pg.doc_id
 """
 
 
-def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = D.ensure_parallelism(load_table(spark, sf_dir, "documents"))
-    return D.ngram_jaccard_pairs(docs, "text", "doc_id", shingle_n=3, threshold=0.5)
-
-
 SQL_NGRAM_JACCARD = """
 WITH toks AS (
   SELECT doc_id,
@@ -1192,10 +1187,10 @@ def q_dedup_reports(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators themselves scaled linearly. A representation must never be
     the scale bottleneck of the operators it reports on.
 
-    The pair leg reads the MATERIALIZED pair table (same rows as
-    ``q_ngram_jaccard``) so the jaccard pipeline — the family's dominant
-    cost — runs once per data version for both legs; the cluster leg's
-    propagation consumes the same materialization."""
+    The pair leg reads the MATERIALIZED pair table (the documents'
+    ≥0.5-Jaccard ``ngram_jaccard_pairs``) so the jaccard pipeline — the
+    family's dominant cost — runs once per data version for both legs; the
+    cluster leg's propagation consumes the same materialization."""
     pairs = _jaccard_pairs_mat(spark, sf_dir).select(
         F.lit("pair").alias("grain"),
         F.col("doc_a").cast("long").alias("k1"),

@@ -199,12 +199,6 @@ def register_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TE
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
-#: Logical-plan nodes that preserve the scan's row count — a frame whose
-#: optimized plan is built ONLY of these over a relation leaf has exactly
-#: as many rows as its parquet footers claim.
-_ROW_PRESERVING_NODES = ("Relation", "Project", "Repartition", "Sort")
-
-
 def parquet_rows(*paths: str) -> int:
     """Rows in the local parquet ``paths`` (each a file, or a directory of
     part files at any depth), summed from their footers: no Spark job, and
@@ -224,36 +218,3 @@ def parquet_rows(*paths: str) -> int:
         else:
             files.append(p)
     return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
-
-
-def scan_row_count(df: DataFrame) -> int | None:
-    """Row count from parquet footer metadata — NO Spark job, no lineage
-    execution. Returns None unless the frame is a row-count-preserving
-    wrap of a local parquet scan (a Filter/Join/Aggregate anywhere in the
-    optimized plan, or remote/unreadable files, disqualify it).
-
-    The cheap signal for adaptive gates that only need corpus SIZE (the
-    ingest batch-cache gate, SemDeDup's cells-per-vector k): running a
-    full ``df.count()`` there silently executes the whole upstream plan
-    just to pick a strategy. A cached frame reads as an
-    ``InMemoryRelation`` and returns None; a caller that knows its table
-    reads :func:`parquet_rows` of the table's path instead.
-    """
-    files = df.inputFiles()
-    if not files:
-        return None
-    try:
-        plan = df._jdf.queryExecution().optimizedPlan().toString()
-    except Exception:
-        return None
-    for line in plan.splitlines():
-        node = line.lstrip(" +-:").split(" ", 1)[0]
-        if node and not any(node.startswith(ok) for ok in _ROW_PRESERVING_NODES):
-            return None
-    local = [f[len("file:"):] if f.startswith("file:") else f for f in files]
-    if any("://" in f for f in local):
-        return None  # remote store: footer read could stall the driver
-    try:
-        return parquet_rows(*local)
-    except Exception:
-        return None

@@ -1,7 +1,6 @@
 """Synthesize the full ~sf1 (10x sf0.1) dataset for the whole-catalog sweep.
 
-One directory with ALL TEN tables, one recipe per table family (the
-fixture ``scale_probe.py`` slopes against, too):
+One directory with ALL TEN tables, one recipe per table family:
 
 - ``documents``/``embeddings`` — 10 NEAR-duplicate copies per row (short
   per-copy text tag / one-dimension embedding offset): dedup keeps real

@@ -160,11 +160,20 @@ def case_lag_diff(sdf, con, rng):
 
 
 def case_ntile_histogram(sdf, con, rng):
+    """One metric, then two metrics (double ``v`` and long ``d``, both with
+    NULLs and ties) scored in one call: each score equals its own NTILE."""
     n = rng.randint(1, 7)
     desc = rng.random() < 0.5
-    got = R.ntile_score_histogram(sdf, "v", n, "s", "id", descending=desc)
-    order = "v DESC NULLS LAST, id ASC" if desc else "v ASC NULLS FIRST, id ASC"
-    rel = con.sql(f"SELECT *, CAST(NTILE({n}) OVER (ORDER BY {order}) AS INT) AS s FROM t")
+    one = R.ntile_score_histogram(sdf, {"v": "s"}, n, "id", descending=desc)
+    got = R.ntile_score_histogram(one, {"v": "s_v", "d": "s_d"}, n, "id", descending=desc)
+
+    def ntile(c):
+        order = f"{c} DESC NULLS LAST, id ASC" if desc else f"{c} ASC NULLS FIRST, id ASC"
+        return f"CAST(NTILE({n}) OVER (ORDER BY {order}) AS INT)"
+
+    rel = con.sql(
+        f"SELECT *, {ntile('v')} AS s, {ntile('v')} AS s_v, {ntile('d')} AS s_d FROM t"
+    )
     return got, rel
 
 

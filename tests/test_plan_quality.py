@@ -328,6 +328,7 @@ def test_rfm_histogram_scores_equal_window_scores(spark, sf_dir):
     rfm_segments oracle hash is unchanged by construction."""
     from pyspark.sql import functions as F
 
+    from market_data_mining_project_spark.operators import relational as R
     from market_data_mining_project_spark.operators import rfm as RFM
     from market_data_mining_project_spark.sources.tables import load_table
 
@@ -338,25 +339,22 @@ def test_rfm_histogram_scores_equal_window_scores(spark, sf_dir):
         orders, customer="o_custkey", basket="o_orderkey", day="order_day",
         sales="o_totalprice",
     ).cache()
-    cols = ("o_custkey", "recency_score", "frequency_score", "monetary_score")
+    metrics = ("recency", "frequency", "monetary")
+    cols = ("o_custkey", *(f"{m}_score" for m in metrics))
     try:
-        want = sorted(
-            tuple(r[c] for c in cols)
-            for r in RFM.ntile_scores(base, "o_custkey").select(*cols).collect()
-        )
+        window = base
+        for m in metrics:
+            window = R.ntile_score(window, F.col(m), 5, f"{m}_score", F.col("o_custkey"))
+        want = sorted(tuple(r[c] for c in cols) for r in window.select(*cols).collect())
+        # the one stacked pass the pipeline ships, all three metrics in one call
         got = sorted(
             tuple(r[c] for c in cols)
-            for r in RFM.ntile_scores_histogram(base, "o_custkey").select(*cols).collect()
-        )
-        # r14: the shipped one-pass multi-metric walk must ALSO be
-        # bit-identical (same rank decomposition, one stacked histogram)
-        got_multi = sorted(
-            tuple(r[c] for c in cols)
-            for r in RFM.ntile_scores_histogram_multi(base, "o_custkey")
+            for r in R.ntile_score_histogram(
+                base, {m: f"{m}_score" for m in metrics}, 5, "o_custkey"
+            )
             .select(*cols)
             .collect()
         )
     finally:
         base.unpersist()
     assert got == want and want
-    assert got_multi == want

@@ -170,6 +170,8 @@ ntile_rows_strategy = st.lists(
     st.tuples(
         st.integers(min_value=0, max_value=1000),  # unique-able key (tiebreak)
         st.one_of(st.none(), st.integers(min_value=0, max_value=6)),  # metric: ties + NULLs
+        # second metric: a negative/fractional double with ties + NULLs
+        st.one_of(st.none(), st.integers(min_value=-30, max_value=30).map(lambda i: i / 10)),
     ),
     min_size=1,
     max_size=40,
@@ -181,19 +183,24 @@ ntile_rows_strategy = st.lists(
 def test_ntile_histogram_equals_window_ntile_property(spark, rows, n, desc):
     """The distributed histogram NTILE must equal the global-window NTILE
     row for row — for ANY metric distribution: heavy ties, NULL metrics
-    (asc → first, desc → last), fewer rows than buckets, both directions."""
-    df = spark.createDataFrame(rows, "k int, m int").dropDuplicates(["k"])
-    want = {
-        (r.k,): r.s
-        for r in R.ntile_score(
-            df, F.col("m"), n, "s", tiebreak=F.col("k"), descending=desc
-        ).collect()
-    }
+    (asc → first, desc → last), fewer rows than buckets, both directions —
+    whether a metric is scored alone or with a second metric in one call."""
+    df = spark.createDataFrame(rows, "k int, m int, x double").dropDuplicates(["k"])
+
+    def window(metric, out):
+        return R.ntile_score(df, F.col(metric), n, out, tiebreak=F.col("k"), descending=desc)
+
+    want = {(r.k,): r.s for r in window("m", "s").collect()}
     got = {
         (r.k,): r.s
-        for r in R.ntile_score_histogram(df, "m", n, "s", "k", descending=desc).collect()
+        for r in R.ntile_score_histogram(df, {"m": "s"}, n, "k", descending=desc).collect()
     }
     assert got == want
+    want_x = {(r.k,): r.s_x for r in window("x", "s_x").collect()}
+    both = R.ntile_score_histogram(df, {"m": "s_m", "x": "s_x"}, n, "k", descending=desc)
+    rows_both = both.collect()
+    assert {(r.k,): r.s_m for r in rows_both} == want
+    assert {(r.k,): r.s_x for r in rows_both} == want_x
 
 
 budget_docs_strategy = st.lists(
@@ -527,27 +534,17 @@ def test_sessionize_bucketed_equals_plain_property(spark, events, gap, bucket):
 
 
 def test_ntile_histogram_rejects_reserved_columns(spark):
+    """Call-time input checks: a column named like an internal of the
+    stacked pass, and a metric the DOUBLE stack cannot order, both raise
+    before any plan runs."""
     import pytest
 
     df = spark.createDataFrame([(1, 2, 3)], "k int, m int, __base int")
     with pytest.raises(ValueError, match="reserved"):
-        R.ntile_score_histogram(df, "m", 5, "s", "k")
-
-
-def test_ntile_histogram_contract_violation_fails_loudly(spark):
-    """A hist_from missing a metric value present in df must RAISE at
-    execution (in-plan raise_error), never silently drop the row."""
-    import pytest
-    from py4j.protocol import Py4JJavaError
-
-    df = spark.createDataFrame([(1, 10), (2, 20), (3, 30)], "k int, m int")
-    hist_from = df.where("m <> 20")  # violates the same-multiset contract
-    out = R.ntile_score_histogram(df, "m", 2, "s", "k", hist_from=hist_from)
-    with pytest.raises(Exception, match="absent from hist_from") as exc:
-        out.collect()
-    assert isinstance(exc.value, Py4JJavaError) or "absent" in str(exc.value)
-    # and the honest path (hist_from a superset-by-columns chain) still works
-    ok = R.ntile_score_histogram(
-        df.withColumn("extra", F.lit(1)), "m", 2, "s", "k", hist_from=df
-    )
-    assert sorted((r.k, r.s) for r in ok.collect()) == [(1, 1), (2, 1), (3, 2)]
+        R.ntile_score_histogram(df, {"m": "s"}, 5, "k")
+    df = spark.createDataFrame([(1, 2, 3)], "k int, m int, __key int")
+    with pytest.raises(ValueError, match="reserved"):
+        R.ntile_score_histogram(df, {"m": "s"}, 5, "k")
+    df = spark.createDataFrame([(1, 2, "a")], "k int, m int, t string")
+    with pytest.raises(ValueError, match="non-numeric metrics.*t string"):
+        R.ntile_score_histogram(df, {"m": "s_m", "t": "s_t"}, 5, "k")
